@@ -5,35 +5,17 @@ reuse recovers the map side of a duplicated aggregation, but the
 reduce-side final aggregate and everything above it re-runs per
 consumer, and subtrees under differing projections are not deduped at
 all.  ``materialize(df)`` is the one place the repo's
-evaluate-once-vs-fault-tolerance trade is made.  Strategies
-(``SPARK_GRAFT_MATERIALIZE`` env, default ``checkpoint``):
-
-- ``checkpoint`` (default): ``localCheckpoint`` — executor-local
-  blocks, lineage truncated.  The r16 A/B (one session, alternating
-  variants, noop-timed at sf0.1; OPTIMIZATION_r16.md "materialize
-  strategy") measured it consistently FASTER than the persist form:
-  minhash 2.94-3.01 s vs 3.59 s, dedup_clusters_star 4.4-4.8 s vs
-  6.4 s, simhash 2.7-2.9 s vs 3.8 s — the columnar InMemoryRelation's
-  encode-on-write and CacheManager bookkeeping cost more than the
-  row-form block store for these shuffle-sized, consumed-2-4-times
-  relations.  The trade: on a real cluster a lost executor's blocks
-  have NO recompute path, so the job fails instead of retrying (the
-  r15 advisor's flag).
-- ``persist``: nonce-salted ``persist(MEMORY_AND_DISK)`` — lineage
-  kept, so a lost or evicted block recomputes instead of failing the
-  job.  The right opt-in for cluster deployments that call these
-  operators as a library and want fault tolerance over the measured
-  15-45% serve cost.  MEASUREMENT HONESTY under repetition: a bare
-  ``persist()`` registers the subtree in the session CacheManager,
-  which matches by analyzed-plan equality, so a SECOND invocation of
-  the same query function in one session (the bench's best-of-2, any
-  repeated call) would silently serve run 1's blocks — cross-invocation
-  result caching, which the bench contract forbids.  The unique literal
-  salted into the plan below the persist (value-level nonce: plan
-  canonicalization strips names and expression ids but keeps literal
-  values) makes each invocation's cache entry unmatchable by any other
-  invocation, so every call recomputes from the parquet inputs while
-  consumers WITHIN the invocation share the one materialization.
+evaluate-once-vs-fault-tolerance trade is made: ``localCheckpoint`` —
+executor-local blocks, lineage truncated.  An A/B (one session,
+alternating variants, noop-timed at sf0.1; OPTIMIZATION_r16.md
+"materialize strategy") measured it consistently FASTER than a
+nonce-salted ``persist(MEMORY_AND_DISK)``: minhash 2.94-3.01 s vs
+3.59 s, dedup_clusters_star 4.4-4.8 s vs 6.4 s, simhash 2.7-2.9 s vs
+3.8 s — the columnar InMemoryRelation's encode-on-write and
+CacheManager bookkeeping cost more than the row-form block store for
+these shuffle-sized, consumed-2-4-times relations.  The trade: on a
+real cluster a lost executor's blocks have NO recompute path, so the
+job fails instead of retrying.
 
 ``eager=True`` materializes at the barrier instead of at the first
 consuming job — for relations feeding an ITERATIVE loop (connected
@@ -44,45 +26,9 @@ eager (dedup_clusters_star 4.40 vs 4.81 s).
 
 from __future__ import annotations
 
-import os
-from collections import deque
-
 from pyspark.sql import DataFrame
-
-#: FIFO of live persisted barriers (persist mode only).  Nonce-salting
-#: makes every entry unmatchable by later invocations, so without
-#: retirement the session CacheManager would accumulate one dead entry
-#: per materialize() call (planning-time lookup walks every registered
-#: entry, and dead blocks squat in storage memory until LRU pressure).
-#: Unpersisting an old entry is ALWAYS safe: lineage is kept, so a
-#: consumer still holding the plan just recomputes.  The cap is sized
-#: far above the number of barriers any single query plan holds (max
-#: observed: 4).
-_LIVE: deque[DataFrame] = deque()
-_MAX_LIVE = 32
 
 
 def materialize(df: DataFrame, *, eager: bool = False) -> DataFrame:
     """Return ``df`` behind an evaluate-once barrier (see module doc)."""
-    mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "checkpoint")
-    if mode == "checkpoint":
-        return df.localCheckpoint(eager=eager)
-    import uuid
-
-    from pyspark import StorageLevel
-    from pyspark.sql import functions as F
-
-    nonce = f"__mat_{uuid.uuid4().hex}"
-    salted = df.withColumn(nonce, F.lit(nonce)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _LIVE.append(salted)
-    while len(_LIVE) > _MAX_LIVE:
-        try:
-            _LIVE.popleft().unpersist(blocking=False)
-        except Exception:
-            pass  # stopped session / already unpersisted — nothing to free
-    out = salted.drop(nonce)
-    if eager:
-        out.count()
-    return out
+    return df.localCheckpoint(eager=eager)

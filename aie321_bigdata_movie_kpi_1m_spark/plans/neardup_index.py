@@ -52,6 +52,7 @@ from ..functions.text import tokens, word_shingles
 from ..operators.dedup import minhash_signatures
 from ..operators.materialize import materialize
 from ..sources.snapshots import (
+    _BLOOM_SATURATED,
     _read_text,
     _write_text,
     bloom_bits_for_rows,
@@ -279,16 +280,19 @@ def _pruned_bucket_rows(
         _PRUNE_STATS["driver_probe_keys"] += len(probe[1])
     if assert_pruned:
         n_all = len(snapshot_files(spark, path))
+        saturated = _BLOOM_SATURATED["n"]
+        n_kept = len(snapshot_files(spark, path, prune_point=probe))
         # a 1-file layer (fully compacted small corpus) is legitimately
-        # unprunable — the assertion indicts a MULTI-file plan that
-        # still reads everything
-        if n_all > 1 and len(
-            snapshot_files(spark, path, prune_point=probe)
-        ) >= n_all:
-            raise AssertionError(
-                f"neardup index did not prune probe of {n_all} files"
-            )
-        _PRUNE_STATS["pruned_lookups"] += 1
+        # unprunable, and so is a DataFrame probe large enough to
+        # saturate the blooms (snapshot_files reports its keep-all
+        # short-circuit) — the assertion indicts a MULTI-file plan that
+        # could have pruned and still reads everything
+        if _BLOOM_SATURATED["n"] == saturated:
+            if n_all > 1 and n_kept >= n_all:
+                raise AssertionError(
+                    f"neardup index did not prune probe of {n_all} files"
+                )
+            _PRUNE_STATS["pruned_lookups"] += 1
     rows = read_snapshot(spark, path, prune_point=probe)
     if df_probe:
         # pruning is files-only for a DataFrame probe; the exact row

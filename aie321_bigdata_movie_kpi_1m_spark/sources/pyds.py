@@ -48,17 +48,21 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamReader,
     DataSourceWriter,
-    EqualTo,
     Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
     InputPartition,
-    LessThan,
-    LessThanOrEqual,
     SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
+
+from .pruning import (
+    _normalize_filters,
+    _Pred,
+    manifest_raw,
+    range_keeps,
+    read_json,
+    versions,
+)
 
 _NULL = "\\N"
 _MANIFEST = "manifest.json"
@@ -85,34 +89,6 @@ def _converters(schema: StructType):
     return convs
 
 
-def _prune(files: list[dict], stats_col_idx: int | None, filters: list[Filter]):
-    """Keep only chunks whose [min, max] stats could satisfy every pushed
-    comparison on the stats column.  Chunks without stats (all-NULL or no
-    stats column) are always kept — pruning must never be lossy."""
-    if stats_col_idx is None or not filters:
-        return files
-
-    def keep(f: dict) -> bool:
-        mn, mx = f.get("min"), f.get("max")
-        if mn is None or mx is None:
-            return True
-        for flt in filters:
-            v = flt.value
-            if isinstance(flt, EqualTo) and not (mn <= v <= mx):
-                return False
-            if isinstance(flt, GreaterThan) and not (mx > v):
-                return False
-            if isinstance(flt, GreaterThanOrEqual) and not (mx >= v):
-                return False
-            if isinstance(flt, LessThan) and not (mn < v):
-                return False
-            if isinstance(flt, LessThanOrEqual) and not (mn <= v):
-                return False
-        return True
-
-    return [f for f in files if keep(f)]
-
-
 @dataclass
 class _ChunkPartition(InputPartition):
     path: str
@@ -126,35 +102,29 @@ class _ChunkCommit(WriterCommitMessage):
 class _ChunkedCsvReader(DataSourceReader):
     def __init__(self, path: str, schema: StructType):
         self._path = path
-        with open(os.path.join(path, _MANIFEST)) as fh:
-            self._manifest = json.load(fh)
+        self._manifest = read_json(os.path.join(path, _MANIFEST))
         self._schema = schema
-        names = [f.name for f in schema.fields]
         sc = self._manifest.get("stats_col")
-        self._stats_idx = names.index(sc) if sc in names else None
-        self._pushed: list[Filter] = []
+        self._stats_col = sc if sc in schema.fieldNames() else None
+        self._preds: list[_Pred] = []
 
     def pushFilters(self, filters: list[Filter]):
-        if self._stats_idx is not None:
-            stats_name = self._manifest["stats_col"]
-            self._pushed = [
-                f
-                for f in filters
-                if isinstance(
-                    f,
-                    (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan,
-                     LessThanOrEqual),
-                )
-                and tuple(f.attribute) == (stats_name,)
-            ]
+        self._preds = [
+            p for p in _normalize_filters(filters) if p.col == self._stats_col
+        ]
         # claim nothing: Spark re-applies every filter row-level, so the
         # chunk-granular stats pruning below can never drop matching rows
         return filters
 
     def partitions(self):
-        kept = _prune(self._manifest["files"], self._stats_idx, self._pushed)
+        # a chunk's [min, max] on the stats column, pruned by the shared
+        # rule set (sources/pruning.py): an all-NULL chunk records
+        # [None, None] and is skipped, since every pushed filter is
+        # NULL-rejecting
         return [
-            _ChunkPartition(os.path.join(self._path, f["name"])) for f in kept
+            _ChunkPartition(os.path.join(self._path, f["name"]))
+            for f in self._manifest["files"]
+            if all(range_keeps([f["min"], f["max"]], p) for p in self._preds)
         ]
 
     def read(self, partition: _ChunkPartition) -> Iterator[tuple]:
@@ -252,8 +222,7 @@ class _ChunkedCsvWriter(DataSourceWriter):
             # append mode: the new manifest must keep the layer's existing
             # chunks readable — replacing it wholesale would silently drop
             # every previously written row from reads
-            with open(manifest_path) as fh:
-                prior = json.load(fh)
+            prior = read_json(manifest_path)
             if prior["schema"] != self._schema.json():
                 raise ValueError(
                     "chunked_csv append: schema differs from the existing "
@@ -303,8 +272,8 @@ class ChunkedCsvDataSource(DataSource):
         return path
 
     def schema(self):
-        with open(os.path.join(self._path(), _MANIFEST)) as fh:
-            return StructType.fromJson(json.loads(json.load(fh)["schema"]))
+        manifest = read_json(os.path.join(self._path(), _MANIFEST))
+        return StructType.fromJson(json.loads(manifest["schema"]))
 
     def reader(self, schema: StructType) -> DataSourceReader:
         return _ChunkedCsvReader(self._path(), schema)
@@ -558,21 +527,29 @@ def replay_schema_ddl(path: str, cols: str) -> str:
     return ", ".join(parts)
 
 
-def register_replay_parquet(spark) -> None:
-    """Idempotently register the streaming replay connector."""
+def _register_by_value(spark, source) -> None:
+    """Idempotently register a streaming source.  Executor-side workers
+    learn the package via addPyFile, but the STREAMING source runner is
+    a separate driver-side Python process that does not see addPyFile —
+    pickle this module and the manifest readers it uses
+    (``sources/pruning.py``) by value so the class arrives
+    self-contained (it only needs pyarrow + stdlib)."""
     import sys
 
     from pyspark import cloudpickle
 
     from ..session import ensure_package_on_workers
+    from . import pruning
 
-    # executor-side workers learn the package via addPyFile, but the
-    # STREAMING source runner is a separate driver-side Python process
-    # that does not see addPyFile — pickle this module by value so the
-    # class arrives self-contained (it only needs pyarrow + stdlib)
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    for mod in (sys.modules[__name__], pruning):
+        cloudpickle.register_pickle_by_value(mod)
     ensure_package_on_workers(spark)
-    spark.dataSource.register(ReplayParquetDataSource)
+    spark.dataSource.register(source)
+
+
+def register_replay_parquet(spark) -> None:
+    """Idempotently register the streaming replay connector."""
+    _register_by_value(spark, ReplayParquetDataSource)
 
 
 @dataclass
@@ -658,31 +635,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         self._mode = options.get("mode", "append")
 
     def _versions(self) -> list[int]:
-        import os
-
-        d = os.path.join(self._path, "_manifests")
-        if not os.path.isdir(d):
-            return []
-        return sorted(
-            int(n[1:-5])
-            for n in os.listdir(d)
-            if n.startswith("v") and n.endswith(".json")
-        )
-
-    def _manifest(self, v: int) -> dict:
-        import json
-        import os
-
-        with open(
-            os.path.join(self._path, "_manifests", f"v{v}.json")
-        ) as fh:
-            return json.load(fh)
-
-    def _segment_files(self, seg_path: str) -> list[str]:
-        import json
-
-        with open(seg_path.removeprefix("file:")) as fh:
-            return json.load(fh)["files"]
+        return versions(self._path)
 
     def _file_set(self, m: dict) -> set[str]:
         """All data files of one manifest — segment-aware (format 2
@@ -691,7 +644,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         if m.get("format", 1) >= 2:
             out: set[str] = set()
             for e in m.get("segments") or []:
-                out.update(self._segment_files(e["path"]))
+                out.update(read_json(e["path"])["files"])
             return out
         return set(m["files"])
 
@@ -725,11 +678,11 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         import os
 
         have_prev = s in vs
-        prev_m = self._manifest(s) if have_prev else None
+        prev_m = manifest_raw(self._path, s) if have_prev else None
         out: list[tuple[str, bool, int]] = []
         eq_parts: list[_SnapshotFilePartition] = []
         for v in [x for x in vs if s < x <= e]:
-            m = self._manifest(v)
+            m = manifest_raw(self._path, v)
             mode = m.get("mode")
             if not have_prev:
                 # initial snapshot: the start version's full content as
@@ -763,9 +716,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
                     if entry["path"] not in prev_seg:
                         out.extend(
                             (f, True, v)
-                            for f in sorted(
-                                self._segment_files(entry["path"])
-                            )
+                            for f in sorted(read_json(entry["path"])["files"])
                         )
             elif mode == "compact":
                 pass  # row-content-neutral
@@ -853,14 +804,14 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         prev_seg: set[str] | None = None
         prev_files: set[str] = set()
         if have_prev:
-            pm = self._manifest(s)
+            pm = manifest_raw(self._path, s)
             if pm.get("format", 1) >= 2:
                 prev_seg = {e["path"] for e in pm.get("segments") or []}
             else:
                 prev_files = self._file_set(pm)
         files: list[str] = []
         for v in [x for x in vs if s < x <= e]:
-            m = self._manifest(v)
+            m = manifest_raw(self._path, v)
             if have_prev and m.get("mode") != "append":
                 raise ValueError(
                     f"version {v} has mode {m.get('mode')!r}: a snapshot "
@@ -880,7 +831,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
                 cur_seg = {e["path"] for e in m.get("segments") or []}
                 for entry in m.get("segments") or []:
                     if entry["path"] not in prev_seg:
-                        files.extend(sorted(self._segment_files(entry["path"])))
+                        files.extend(sorted(read_json(entry["path"])["files"]))
                 prev_seg = cur_seg
             else:
                 # initial snapshot, or a format boundary in the range:
@@ -1000,19 +951,12 @@ def snapshot_stream_schema(path: str, cols: str):
     """Driver-side schema for a snapshot_stream (manifest-only; pass to
     ``readStream.schema(...)`` to skip the engine's DataSource.schema
     Python-worker round-trip, same latency story as replay_schema_ddl)."""
-    import json
-    import os
-
     from pyspark.sql import types as T
 
-    d = os.path.join(path, "_manifests")
-    head = sorted(
-        int(n[1:-5])
-        for n in os.listdir(d)
-        if n.startswith("v") and n.endswith(".json")
-    )[-1]
-    with open(os.path.join(d, f"v{head}.json")) as fh:
-        rec = json.load(fh)["schema"]
+    vs = versions(path)
+    if not vs:
+        raise FileNotFoundError(f"no committed snapshot under {path}")
+    rec = manifest_raw(path, vs[-1])["schema"]
     return T.StructType(
         [
             T.StructField(c, T._parse_datatype_json_string(rec[c]))
@@ -1067,17 +1011,7 @@ class SnapshotStreamDataSource(DataSource):
 
 def register_snapshot_stream(spark) -> None:
     """Idempotently register the snapshot-layer streaming source."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from ..session import ensure_package_on_workers
-
-    # same by-value pickle as replay_parquet: the stream-runner is a
-    # separate driver-side Python process that never sees addPyFile
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    ensure_package_on_workers(spark)
-    spark.dataSource.register(SnapshotStreamDataSource)
+    _register_by_value(spark, SnapshotStreamDataSource)
 
 
 class _CatalogStreamReader(_SnapshotStreamReader):
@@ -1113,29 +1047,12 @@ class _CatalogStreamReader(_SnapshotStreamReader):
         # microbatch planning call (ADVICE r10)
         self._pin_cache: dict = {}
 
-    def _cat_versions(self) -> list[int]:
-        import os
-
-        d = os.path.join(self._catalog, "_catalog")
-        if not os.path.isdir(d):
-            return []
-        return sorted(
-            int(n[1:-5])
-            for n in os.listdir(d)
-            if n.startswith("v") and n.endswith(".json")
-        )
-
     def _pin(self, cat_v: int) -> tuple[str, int] | None:
-        import json
-        import os
-
         if cat_v in self._pin_cache:
             return self._pin_cache[cat_v]
-        with open(
+        t = read_json(
             os.path.join(self._catalog, "_catalog", f"v{cat_v}.json")
-        ) as fh:
-            tables = json.load(fh)["tables"]
-        t = tables.get(self._table)
+        )["tables"].get(self._table)
         pin = (
             None
             if t is None
@@ -1148,7 +1065,7 @@ class _CatalogStreamReader(_SnapshotStreamReader):
         return pin
 
     def latestOffset(self) -> dict:
-        vs = self._cat_versions()
+        vs = versions(self._catalog, "_catalog")
         return {"version": vs[-1] if vs else 0}
 
     def partitions(self, start: dict, end: dict):
@@ -1159,7 +1076,7 @@ class _CatalogStreamReader(_SnapshotStreamReader):
                     None, self._cols, cdf=self._mode == "cdf"
                 )
             ]
-        cat_vs = self._cat_versions()
+        cat_vs = versions(self._catalog, "_catalog")
         if s != 0 and s not in cat_vs:
             raise ValueError(
                 f"catalog offset v{s} was vacuumed from {self._catalog}; "
@@ -1241,17 +1158,12 @@ def catalog_stream_schema(
     head-catalog layer pin, then reuse the layer schema helper
     (``mode="cdf"`` adds the ``change_type`` feed column, mirroring
     the layer stream)."""
-    import json
-    import os
-
-    d = os.path.join(cat_path, "_catalog")
-    head = sorted(
-        int(n[1:-5])
-        for n in os.listdir(d)
-        if n.startswith("v") and n.endswith(".json")
-    )[-1]
-    with open(os.path.join(d, f"v{head}.json")) as fh:
-        t = json.load(fh)["tables"][table]
+    vs = versions(cat_path, "_catalog")
+    if not vs:
+        raise FileNotFoundError(f"no committed catalog under {cat_path}")
+    t = read_json(os.path.join(cat_path, "_catalog", f"v{vs[-1]}.json"))[
+        "tables"
+    ][table]
     layer = str(t["path"]).removeprefix("file://").removeprefix("file:")
     if mode == "cdf":
         return snapshot_cdf_stream_schema(layer, cols)
@@ -1285,12 +1197,4 @@ class CatalogStreamDataSource(DataSource):
 
 def register_catalog_stream(spark) -> None:
     """Idempotently register the catalog-version streaming source."""
-    import sys
-
-    from pyspark import cloudpickle
-
-    from ..session import ensure_package_on_workers
-
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    ensure_package_on_workers(spark)
-    spark.dataSource.register(CatalogStreamDataSource)
+    _register_by_value(spark, CatalogStreamDataSource)

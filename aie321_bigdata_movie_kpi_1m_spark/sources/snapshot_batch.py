@@ -17,7 +17,9 @@ as a DSv2 ``SupportsPushDownFilters``):
   (segment-entry [min, max] envelopes first — untouched segments are
   never even opened — then per-file ranges) and onto the Bloom indexes
   (segment-level bit-set unions, then per-file bit lists) for point /
-  IN probes on the layer's bloom column.
+  IN probes on the layer's bloom column.  The decision is
+  ``pruning.plan_files`` — the same planner ``snapshots.snapshot_files``
+  runs.
 - every pushed filter is returned as UNSUPPORTED, so Spark re-applies
   them row-level: manifest pruning is an optimization, never the
   correctness boundary (files that straddle a bound still contribute
@@ -38,10 +40,11 @@ probes run only for int/string values (where ``CAST(x AS STRING)`` is
 reproducible in Python) — anything else conservatively skips bloom
 pruning.
 
-The planner reads manifest/segment JSON with plain file IO (the runner
-has no JVM): correct for ``file://`` layers — the test and single-node
-substrate; an object-store deployment would read manifests through its
-native client here, exactly like ``pyds._SnapshotStreamReader``.
+The planner reads manifest/segment JSON with ``pruning``'s plain file
+IO (the runner has no JVM): correct for ``file://`` layers — the test
+and single-node substrate; an object-store deployment would read
+manifests through its native client there, exactly like
+``pyds._SnapshotStreamReader``.
 
 This connector is the zero-caller-cooperation SQL façade; the native
 ``read_snapshot`` parquet scan remains the bulk path when the caller can
@@ -69,23 +72,26 @@ table); this is the §2.1 source surface composed with the table format.
 from __future__ import annotations
 
 import json
-import os
 from dataclasses import dataclass
 from typing import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    EqualTo,
     Filter,
-    GreaterThan,
-    GreaterThanOrEqual,
-    In,
     InputPartition,
-    LessThan,
-    LessThanOrEqual,
 )
 from pyspark.sql import types as T
+
+from .pruning import (
+    _normalize_filters,
+    _Pred,
+    local_path,
+    manifest_raw,
+    plan_files,
+    read_json,
+    versions,
+)
 
 # ---------------------------------------------------------------------------
 # Pure-Python XXH64, Spark-parity (xxHash64 spec; Spark's XXH64.java is a
@@ -197,88 +203,6 @@ def bloom_probe_positions(value, *, m: int, k: int) -> list[int] | None:
 # ---------------------------------------------------------------------------
 
 
-def _local(p: str) -> str:
-    return p.removeprefix("file:")
-
-
-def _read_json(p: str) -> dict:
-    with open(_local(p)) as fh:
-        return json.load(fh)
-
-
-def _versions(path: str) -> list[int]:
-    d = os.path.join(_local(path), "_manifests")
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        int(n[1:-5])
-        for n in os.listdir(d)
-        if n.startswith("v") and n.endswith(".json")
-    )
-
-
-def _manifest_raw(path: str, v: int) -> dict:
-    return _read_json(os.path.join(_local(path), "_manifests", f"v{v}.json"))
-
-
-@dataclass
-class _Pred:
-    """One pushed predicate, normalized: ``op`` in {eq, gt, gte, lt,
-    lte, in}, over top-level column ``col``."""
-
-    op: str
-    col: str
-    value: object
-
-
-def _normalize_filters(filters: list[Filter]) -> list[_Pred]:
-    out = []
-    for f in filters:
-        if isinstance(
-            f,
-            (EqualTo, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual),
-        ) and len(f.attribute) == 1:
-            op = {
-                EqualTo: "eq",
-                GreaterThan: "gt",
-                GreaterThanOrEqual: "gte",
-                LessThan: "lt",
-                LessThanOrEqual: "lte",
-            }[type(f)]
-            out.append(_Pred(op, f.attribute[0], f.value))
-        elif isinstance(f, In) and len(f.attribute) == 1:
-            out.append(_Pred("in", f.attribute[0], list(f.value)))
-    return out
-
-
-def _range_keeps(stats_entry, pred: _Pred) -> bool:
-    """May rows of a file/segment with [min, max] ``stats_entry`` satisfy
-    ``pred``?  Missing stats keep (cannot skip safely); recorded-but-
-    [None, None] (zero-row / all-NULL) skips — every pushed predicate is
-    NULL-rejecting.  Unorderable bound/stat pairs conservatively keep."""
-    if stats_entry is None:
-        return True
-    mn, mx = stats_entry[0], stats_entry[1]
-    if mn is None or mx is None:
-        return False
-    try:
-        if pred.op == "eq":
-            return mn <= pred.value <= mx
-        if pred.op == "gt":
-            return mx > pred.value
-        if pred.op == "gte":
-            return mx >= pred.value
-        if pred.op == "lt":
-            return mn < pred.value
-        if pred.op == "lte":
-            return mn <= pred.value
-        if pred.op == "in":
-            return any(mn <= v <= mx for v in pred.value)
-    except TypeError:
-        return True
-    return True
-
-
 def bucket_transform_value(value, n: int) -> int | None:
     """The bucket a value hashes to under the layer's hidden-partition
     ``bucket(n, col)`` transform — pure Python, byte-parity with the
@@ -318,7 +242,7 @@ def _derive_partition_preds(m: dict, preds: list[_Pred]) -> list[_Pred]:
     # files written before an evolution carry only their own spec's
     # derived stats, so probing the historical stat names is what keeps
     # pruning sharp on the old region; a file lacking a probed stat is
-    # conservatively kept (``_range_keeps(None) -> True``), so stale
+    # conservatively kept (missing stats keep), so stale
     # specs are never wrong, and every derived pred independently
     # over-approximates the source predicate, so ANDing old- and
     # new-spec preds stays sound on every file
@@ -400,14 +324,6 @@ def _derive_partition_preds(m: dict, preds: list[_Pred]) -> list[_Pred]:
     return out
 
 
-def _hex_has_bits(hx: str, positions: list[int]) -> bool:
-    arr = bytes.fromhex(hx) if hx else b""
-    for p in positions:
-        if p // 8 >= len(arr) or not (arr[p // 8] >> (p % 8)) & 1:
-            return False
-    return True
-
-
 def _bloom_pos_lists(m: dict, preds: list[_Pred]) -> list[list[int]] | None:
     """Probe position lists for eq/IN predicates on the layer's bloom
     column — ANDed across predicates is wrong (a row satisfies ALL
@@ -443,78 +359,38 @@ def plan_snapshot_scan(
     """Two-level manifest pruning, pure Python: returns
     {"files": [...], "delete_entries": [...], "schema": {...},
     "n_segments_total", "n_segments_read", "n_files_total"} for the
-    pruned read.  Mirrors ``snapshots.snapshot_files`` semantics
-    (segment-entry ranges + bloom unions first, then per-file stats +
-    blooms); pruning is never lossy — anything unknown keeps."""
-    versions = _versions(path)
-    if not versions:
+    pruned read.  The same ``pruning.plan_files`` planner as
+    ``snapshots.snapshot_files``, over plain-IO segment reads."""
+    vs = versions(path)
+    if not vs:
         raise FileNotFoundError(f"no committed snapshot under {path}")
-    v = versions[-1] if version is None else version
-    if v not in versions:
-        raise FileNotFoundError(f"version {v} not in {versions} at {path}")
-    m = _manifest_raw(path, v)
+    v = vs[-1] if version is None else version
+    if v not in vs:
+        raise FileNotFoundError(f"version {v} not in {vs} at {path}")
+    m = manifest_raw(path, v)
     # hidden partitioning: predicates on source columns additionally
     # probe the derived transform stats (bucket/truncate/day)
     preds = list(preds) + _derive_partition_preds(m, preds)
-    pos_list = _bloom_pos_lists(m, preds)
-    n_files_total = 0
-    n_segments_read = 0
-    files: list[str] = []
-    stats: dict = {}
-    blooms: dict = {}
-    if m.get("format", 1) >= 2:
-        entries = m.get("segments") or []
-        n_segments_total = len(entries)
-        n_files_total = sum(int(e.get("n_files") or 0) for e in entries)
-        survivors = []
-        for e in entries:
-            est = e.get("stats") or {}
-            if not all(_range_keeps(est.get(p.col), p) for p in preds):
-                continue
-            if (
-                pos_list is not None
-                and e.get("bloom_union") is not None
-                and not any(
-                    _hex_has_bits(e["bloom_union"], pos) for pos in pos_list
-                )
-            ):
-                continue
-            survivors.append(e)
-        for e in survivors:
-            seg = _read_json(e["path"])
-            n_segments_read += 1
-            files.extend(seg["files"])
-            stats.update(seg.get("stats") or {})
-            blooms.update(seg.get("blooms") or {})
-        files = sorted(files)
-    else:
-        files = list(m["files"])
-        stats = m.get("stats", {}) or {}
-        blooms = m.get("blooms", {}) or {}
-        n_segments_total = 0
-        n_files_total = len(files)
-    kept = []
-    for f in files:
-        base = f.rsplit("/", 1)[-1]
-        fst = stats.get(base, {})
-        if not all(_range_keeps(fst.get(p.col), p) for p in preds):
-            continue
-        if pos_list is not None:
-            bits = blooms.get(base)
-            if bits is not None:
-                bitset = set(bits)
-                if not any(
-                    all(pp in bitset for pp in pos) for pos in pos_list
-                ):
-                    continue
-        kept.append(f)
+    loaded: list[str] = []
+
+    def load_segment(seg_path: str) -> dict:
+        loaded.append(seg_path)
+        return read_json(seg_path)
+
+    files, _ = plan_files(m, preds, _bloom_pos_lists(m, preds), load_segment)
+    entries = m.get("segments") or []
+    fmt2 = m.get("format", 1) >= 2
     return {
-        "files": kept,
+        "files": files,
         "delete_entries": m.get("delete_files") or [],
         "schema": m.get("schema") or {},
-        "n_segments_total": n_segments_total,
-        "n_segments_read": n_segments_read,
-        "n_files_total": n_files_total,
+        "n_segments_total": len(entries) if fmt2 else 0,
+        "n_segments_read": len(loaded),
+        "n_files_total": (
+            sum(int(e.get("n_files") or 0) for e in entries)
+            if fmt2
+            else len(m["files"])
+        ),
     }
 
 
@@ -588,7 +464,7 @@ class _SnapshotBatchReader(DataSourceReader):
     def partitions(self):
         plan = plan_snapshot_scan(self._path, self._version, self._preds)
         if self._plan_log:
-            with open(_local(self._plan_log), "w") as fh:
+            with open(local_path(self._plan_log), "w") as fh:
                 json.dump(
                     {
                         "n_files_planned": len(plan["files"]),
@@ -640,17 +516,17 @@ class _SnapshotBatchReader(DataSourceReader):
         # key column the filter step needs (dropped again by the final
         # select) — at 100 TB reading 2 of 40 columns is the difference
         # between a projection and a table scan
-        file_cols = set(pq.read_schema(_local(partition.file)).names)
+        file_cols = set(pq.read_schema(local_path(partition.file)).names)
         need = [c for c in partition.cols if c in file_cols]
         for _, key_col in partition.eq_entries:
             if key_col not in need and key_col in file_cols:
                 need.append(key_col)
-        table = pq.read_table(_local(partition.file), columns=need)
+        table = pq.read_table(local_path(partition.file), columns=need)
         if partition.pos_dirs:
             dead: set[int] = set()
             for d in partition.pos_dirs:
                 dv = pq.read_table(
-                    _local(d), columns=["file", "pos"]
+                    local_path(d), columns=["file", "pos"]
                 ).filter(pc.equal(pc.field("file"), base))
                 dead.update(dv.column("pos").to_pylist())
             if dead:
@@ -666,7 +542,7 @@ class _SnapshotBatchReader(DataSourceReader):
                 # an evolved carried file lacking the key column reads
                 # NULL for it — NULL never equals a key, nothing to drop
                 continue
-            keys = pq.read_table(_local(kpath), columns=[key_col]).column(
+            keys = pq.read_table(local_path(kpath), columns=[key_col]).column(
                 key_col
             )
             hit = pc.fill_null(
@@ -689,11 +565,10 @@ class _SnapshotBatchReader(DataSourceReader):
 
 
 def _version_as_of(path: str, ts_epoch: float) -> int:
-    versions = _versions(path)
     eligible = [
         v
-        for v in versions
-        if float(_manifest_raw(path, v).get("committed_at") or 0) <= ts_epoch
+        for v in versions(path)
+        if float(manifest_raw(path, v).get("committed_at") or 0) <= ts_epoch
     ]
     if not eligible:
         raise FileNotFoundError(
@@ -717,15 +592,15 @@ class SnapshotBatchDataSource(DataSource):
 
     def schema(self):
         path = self.options["path"]
-        versions = _versions(path)
-        if not versions:
+        vs = versions(path)
+        if not vs:
             raise FileNotFoundError(f"no committed snapshot under {path}")
         v = (
             int(self.options["version"])
             if self.options.get("version")
-            else versions[-1]
+            else vs[-1]
         )
-        rec = _manifest_raw(path, v).get("schema") or {}
+        rec = manifest_raw(path, v).get("schema") or {}
         if self.options.get("cols"):
             # caller-side PROJECTION: only these columns plan, transfer
             # and read (the Python DataSource API has no pruning hook,
@@ -756,11 +631,14 @@ def register_snapshot_batch(spark) -> None:
     from pyspark import cloudpickle
 
     from ..session import ensure_package_on_workers
+    from . import pruning
 
     # planning runs in a driver-side Python worker that never sees
-    # addPyFile — pickle this module by value so the class arrives
-    # self-contained (pyarrow + stdlib only), same as the stream sources
-    cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    # addPyFile — pickle this module and the pruning core it plans with
+    # by value so the class arrives self-contained (pyarrow + stdlib
+    # only), same as the stream sources
+    for mod in (sys.modules[__name__], pruning):
+        cloudpickle.register_pickle_by_value(mod)
     ensure_package_on_workers(spark)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(SnapshotBatchDataSource)
@@ -789,10 +667,10 @@ def read_snapshot_pushdown(
     ``read_snapshot`` pins against, pinned the same way."""
     register_snapshot_batch(spark)
     if version is None and as_of is None:
-        versions = _versions(path)
-        if not versions:
+        vs = versions(path)
+        if not vs:
             raise FileNotFoundError(f"no committed snapshot under {path}")
-        version = versions[-1]
+        version = vs[-1]
     r = spark.read.format("snapshot_batch").option("path", path)
     if version is not None:
         r = r.option("version", str(version))

@@ -53,8 +53,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from ..operators.materialize import materialize
-
-_MANIFEST_DIR = "_manifests"
+from .pruning import (
+    MANIFEST_DIR as _MANIFEST_DIR,
+    bits_to_hex,
+    fold_minmax,
+    plan_files,
+    range_preds,
+    stats_keep,
+)
 
 
 class InProcessCommitLock:
@@ -575,38 +581,9 @@ def _aggregate_seg_stats(bases: list[str], seg_stats: dict) -> dict:
     cols = set(seg_stats[bases[0]])
     for b in bases[1:]:
         cols &= set(seg_stats[b])
-    out: dict = {}
-    for c in sorted(cols):
-        lo = hi = None
-        for b in bases:
-            s = seg_stats[b][c]
-            if s[0] is None or s[1] is None:
-                continue
-            lo = s[0] if lo is None or s[0] < lo else lo
-            hi = s[1] if hi is None or s[1] > hi else hi
-        out[c] = [lo, hi]
-    return out
-
-
-def _bits_to_hex(bits) -> str:
-    """Sorted bit-position list -> hex bitmap, sized to the highest set
-    bit (a probe position beyond the bitmap reads 0 = definitely absent,
-    so the encoding needs no knowledge of the bloom's m)."""
-    if not bits:
-        return ""
-    arr = bytearray(max(bits) // 8 + 1)
-    for b in bits:
-        arr[b // 8] |= 1 << (b % 8)
-    return bytes(arr).hex()
-
-
-def _hex_has_bits(hx: str, positions: list[int]) -> bool:
-    """True iff every probe position is set in the hex bitmap."""
-    arr = bytes.fromhex(hx) if hx else b""
-    for p in positions:
-        if p // 8 >= len(arr) or not (arr[p // 8] >> (p % 8)) & 1:
-            return False
-    return True
+    return {
+        c: fold_minmax(seg_stats[b][c] for b in bases) for c in sorted(cols)
+    }
 
 
 def _write_segment_entries(
@@ -667,7 +644,7 @@ def _write_segment_entries(
         # recorded when EVERY member file has a bloom entry — a missing
         # file bloom makes the union unable to say "definitely absent"
         bloom_union = (
-            _bits_to_hex(sorted({b for bs in seg_blooms.values() for b in bs}))
+            bits_to_hex(sorted({b for bs in seg_blooms.values() for b in bs}))
             if seg_blooms and all(b in seg_blooms for b in bases)
             else None
         )
@@ -716,22 +693,6 @@ def _entries_from_inline(
         m.get("colmeta", {}) or {},
         m.get("raw_sizes", {}) or {},
     )
-
-
-def _entry_range_keeps(entry_stats: dict, col: str, lo, hi) -> bool:
-    """Segment-entry-level range test (True = cannot skip).  Mirrors the
-    per-file semantics; a bound/stat pair the comparison cannot order
-    (e.g. a date bound against a migrated string stat) conservatively
-    keeps the segment — pruning is an optimization, never a filter."""
-    s = entry_stats.get(col)
-    if s is None:
-        return True
-    if s[0] is None or s[1] is None:
-        return False
-    try:
-        return (lo is None or s[1] >= lo) and (hi is None or s[0] <= hi)
-    except TypeError:
-        return True
 
 
 def _type_from_json(dtype_json: str):
@@ -1469,8 +1430,14 @@ def snapshot_files(
 ) -> list[str]:
     """The file list a read of this version plans over, after manifest
     data skipping.  ``prune_range=(col, lo, hi)`` keeps only files whose
-    committed [min, max] for ``col`` intersects [lo, hi] (files lacking
-    stats are conservatively kept; None bounds are open).
+    committed [min, max] for ``col`` intersects [lo, hi] (None bounds
+    are open); a list of such tuples is ANDed.  The keep decision is
+    ``sources/pruning.py``'s one rule set, shared with the
+    ``snapshot_batch`` pushdown planner: files or segments with no
+    stats for ``col`` are kept, recorded ``[None, None]`` stats (zero
+    rows / all NULL) are skipped because a range predicate is
+    NULL-rejecting, and a bound the stats cannot be ordered against
+    (e.g. an int bound over string stats) keeps the file.
     ``prune_point=(col, value)`` additionally consults the per-file
     Bloom index (``commit_snapshot(bloom_col=col)``): a file whose bloom
     is missing ANY of the probe's bit positions definitely does not
@@ -1518,8 +1485,11 @@ def snapshot_files(
         if isinstance(prune_range, tuple)
         else list(prune_range)
     )
-    # probe positions are computed ONCE per plan (one Spark job for the
-    # whole IN list) and shared by the segment-union and per-file probes
+    preds = [p for col, lo, hi in ranges for p in range_preds(col, lo, hi)]
+    # probe positions are computed ONCE per plan and shared by the
+    # segment-union and per-file probes, under the manifest's recorded
+    # bloom parameters (manifests from before parameter recording used
+    # the then-current constants, which the defaults preserve)
     pos_list: list[list[int]] | None = None
     probe_df: DataFrame | None = None
     bloom_m = int(m.get("bloom_m") or _BLOOM_BITS)
@@ -1533,76 +1503,13 @@ def snapshot_files(
             pos_list = _bloom_positions_multi(
                 spark, values, m=bloom_m, k=bloom_k
             )
-    if m.get("format", 1) >= 2:
-        # segment-level skip FIRST: entries whose per-column [min, max]
-        # cannot intersect the range are dropped before their segment
-        # file is even opened — planning cost is O(surviving segments),
-        # not O(all files ever), the property that keeps a 10^7-file
-        # layer plannable from KBs of JSON
-        entries = m.get("segments") or []
-        for col, lo, hi in ranges:
-            entries = [
-                e
-                for e in entries
-                if _entry_range_keeps(e.get("stats") or {}, col, lo, hi)
-            ]
-        if pos_list is not None:
-            # segment-level bloom skip: a segment whose recorded bloom
-            # UNION is missing any probe bit definitely lacks the value
-            # — skipped without even loading its segment file (entries
-            # without a union are conservatively loaded).  IN-lists keep
-            # a segment if ANY value's bits are all present.
-            entries = [
-                e
-                for e in entries
-                if e.get("bloom_union") is None
-                or any(_hex_has_bits(e["bloom_union"], pos) for pos in pos_list)
-            ]
-        files = []
-        stats = {}
-        blooms = {}
-        for e in entries:
-            seg = _read_segment(spark, e["path"])
-            files.extend(seg["files"])
-            stats.update(seg.get("stats") or {})
-            blooms.update(seg.get("blooms") or {})
-        files = sorted(files)
-    else:
-        files = m["files"]
-        stats = m.get("stats", {})
-        blooms = m.get("blooms", {})
-    for col, lo, hi in ranges:
-        kept = []
-        for f in files:
-            s = stats.get(f.rsplit("/", 1)[-1], {}).get(col)
-            if s is None:
-                kept.append(f)  # no stats recorded -> cannot skip safely
-            elif s[0] is None or s[1] is None:
-                # stats recorded but no min/max: zero rows, or every
-                # value NULL — safe to skip either way, because a range
-                # predicate is NULL-rejecting (the caller's contract)
-                continue
-            elif (lo is None or s[1] >= lo) and (hi is None or s[0] <= hi):
-                kept.append(f)
-        files = kept
-    if pos_list is not None:
-        if blooms:
-            # probe with the LAYER'S recorded bloom parameters (manifests
-            # from before parameter recording used the then-current
-            # constants, which the defaults preserve), reusing the
-            # positions computed once above
-            kept = []
-            for f in files:
-                bits = blooms.get(f.rsplit("/", 1)[-1])
-                if bits is None:
-                    kept.append(f)  # no bloom recorded -> keep
-                else:
-                    bitset = set(bits)
-                    # IN-list: maybe-present for ANY probe value keeps
-                    # the file (bloom can't say no)
-                    if any(all(p in bitset for p in pos) for pos in pos_list):
-                        kept.append(f)
-            files = kept
+    # segment entries are pruned before their segment file is even
+    # opened — planning cost is O(surviving segments), not O(all files
+    # ever), the property that keeps a 10^7-file layer plannable from
+    # KBs of JSON
+    files, blooms = plan_files(
+        m, preds, pos_list, lambda seg_path: _read_segment(spark, seg_path)
+    )
     if probe_df is not None and blooms:
         files = _prune_files_probe_df(
             spark,
@@ -1619,6 +1526,10 @@ def snapshot_files(
 #: driver-side probe-key volume moved by LIST-form point probes — the
 #: DataFrame probe path ships zero; tests pin it
 _POINT_PROBE_DRIVER_KEYS = {"n": 0}
+#: DataFrame probes that hit the bloom-saturation keep-all short-circuit
+#: — a caller asserting a strict prune reads this to tell "cannot prune
+#: by construction" from "failed to prune"
+_BLOOM_SATURATED = {"n": 0}
 
 
 def _prune_files_probe_df(
@@ -1688,6 +1599,7 @@ def _prune_files_probe_df(
     )
     p_bit = 1.0 - math.exp(-(n_values * k) / float(m))
     if n_values * (p_bit**k) >= 1.0:
+        _BLOOM_SATURATED["n"] += 1
         return files
     pos = values.select(
         "__v",
@@ -2290,8 +2202,9 @@ def delete_snapshot_keys(
     if m.get("format", 1) >= 2:
         cand_stats: dict = {}
         cand_bases: list[str] = []
+        key_range = range_preds(key_col, klo, khi)
         for e in m.get("segments") or []:
-            if not _entry_range_keeps(e.get("stats") or {}, key_col, klo, khi):
+            if not stats_keep(e.get("stats") or {}, key_range):
                 continue
             seg = _read_segment(spark, e["path"])
             cand_bases.extend(f.rsplit("/", 1)[-1] for f in seg["files"])
@@ -3051,29 +2964,18 @@ def snapshot_minmax(
     if m.get("format", 1) >= 2:
         # fold the SEGMENT-entry aggregates — zero segment reads.  An
         # entry lacking the column means some member file has no stats
-        # for it (the entry-level contract), so the answer cannot be
-        # exact and the caller must scan
-        lo = hi = None
-        for e in m.get("segments") or []:
-            s = (e.get("stats") or {}).get(col)
-            if s is None:
-                return None
-            if s[0] is None or s[1] is None:
-                continue
-            lo = s[0] if lo is None or s[0] < lo else lo
-            hi = s[1] if hi is None or s[1] > hi else hi
-        return (lo, hi)
-    stats = m.get("stats", {})
-    lo = hi = None
-    for f in m["files"]:
-        s = stats.get(f.rsplit("/", 1)[-1], {}).get(col)
-        if s is None:
-            return None  # a file without stats: cannot answer exactly
-        if s[0] is None or s[1] is None:
-            continue  # zero rows / all NULL contributes nothing
-        lo = s[0] if lo is None or s[0] < lo else lo
-        hi = s[1] if hi is None or s[1] > hi else hi
-    return (lo, hi)
+        # for it (the entry-level contract)
+        found = [
+            (e.get("stats") or {}).get(col) for e in m.get("segments") or []
+        ]
+    else:
+        stats = m.get("stats", {})
+        found = [
+            stats.get(f.rsplit("/", 1)[-1], {}).get(col) for f in m["files"]
+        ]
+    if any(s is None for s in found):
+        return None  # unstated stats: cannot answer exactly, scan instead
+    return tuple(fold_minmax(found))
 
 
 # observability hook: tests pin that CDF-covered ranges never pay the
@@ -3524,11 +3426,9 @@ def merge_snapshot(
         env = delta.agg(
             F.min(key_col).alias("__lo"), F.max(key_col).alias("__hi")
         ).first()
-        dlo, dhi = env["__lo"], env["__hi"]
+        key_range = range_preds(key_col, env["__lo"], env["__hi"])
         for e in m.get("segments") or []:
-            if dlo is not None and _entry_range_keeps(
-                e.get("stats") or {}, key_col, dlo, dhi
-            ):
+            if key_range and stats_keep(e.get("stats") or {}, key_range):
                 loaded.append((e, _read_segment(spark, e["path"])))
             else:
                 carried_entries.append(e)

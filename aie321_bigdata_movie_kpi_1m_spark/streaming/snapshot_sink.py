@@ -548,27 +548,3 @@ def wap_stream_to_catalog(
     )
     q.awaitTermination()
     return q
-
-
-def publish_stream_to_catalog(
-    stream: DataFrame,
-    cat_path: str,
-    plan_fn: Callable[[DataFrame], list],
-    *,
-    checkpoint_dir: str,
-    query_name: str = "catalog_publish",
-    app_id: str = "catalog_publish",
-):
-    """Run ``stream`` to completion (availableNow) as atomic
-    multi-table catalog transactions; see ``catalog_publish_writer``."""
-    q = (
-        stream.writeStream.foreachBatch(
-            catalog_publish_writer(cat_path, plan_fn, app_id=app_id)
-        )
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q

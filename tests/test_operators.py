@@ -4160,6 +4160,34 @@ class TestNeardupIndex:
         }
         assert got == {1, 2}
 
+    def test_saturated_dataframe_probe_skips_prune_assertion(
+        self, spark, tmp_path
+    ):
+        """A DataFrame probe of ~1k distinct keys saturates the blooms of
+        a multi-file bucket layer, so ``snapshot_files`` keeps every file
+        by its saturation short-circuit; the strict-prune assertion reads
+        that as 'cannot prune', not as 'did not prune'."""
+        import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
+        from aie321_bigdata_movie_kpi_1m_spark.plans import neardup_index as ni
+
+        group = str(tmp_path / "nd")
+        buckets = ni._buckets_path(group)
+        snap.commit_snapshot(
+            spark,
+            spark.range(0, 400)
+            .selectExpr("id AS bkey", "id AS doc_id")
+            .repartition(4),
+            buckets,
+            stats_cols=["bkey"],
+            bloom_col="bkey",
+        )
+        assert len(snap.snapshot_files(spark, buckets)) == 4
+        probe = spark.range(0, 1000).selectExpr("id * 7 AS bkey")
+        saturated = snap._BLOOM_SATURATED["n"]
+        rows = ni._pruned_bucket_rows(spark, group, probe, assert_pruned=True)
+        assert snap._BLOOM_SATURATED["n"] > saturated
+        assert rows.count() == 400
+
 
 class TestAnnIvfadc:
     """IVFADC through the persisted assignment layer: per-query file

@@ -722,3 +722,152 @@ def test_concurrent_writers_serialize_through_occ_retry(
     assert len(rows) == N_WRITERS + sum(
         len(v) for v in expected_rows.values()
     )
+
+
+# ---------------------------------------------------------------------------
+# Manifest pruning is lossless (sources/pruning.py).  Pure Python, no Spark
+# session: random layers of int-or-string files with NULLs, missing and
+# [None, None] stats, segments with aggregated entry stats and Bloom
+# unions, and eq/range/IN predicates whose bounds may not be orderable
+# against the stats.
+# ---------------------------------------------------------------------------
+
+_PRUNE_BLOOM = {"bloom_col": "c", "bloom_m": 64, "bloom_k": 3}
+_PRUNE_VALUE = st.one_of(st.integers(-20, 20), st.text("abc", max_size=2))
+
+
+@st.composite
+def pruning_case(draw):
+    segments = []
+    for _ in range(draw(st.integers(1, 3))):
+        # one write per segment: its files share the column's type
+        value = draw(
+            st.sampled_from([st.integers(-20, 20), st.text("abc", max_size=2)])
+        )
+        segments.append(
+            draw(
+                st.lists(
+                    st.tuples(
+                        st.lists(st.none() | value, max_size=5),
+                        st.booleans(),  # stats recorded
+                        st.booleans(),  # bloom recorded
+                    ),
+                    min_size=1,
+                    max_size=4,
+                )
+            )
+        )
+    pred = st.one_of(
+        st.tuples(
+            st.sampled_from(["eq", "gt", "gte", "lt", "lte"]), _PRUNE_VALUE
+        ),
+        st.tuples(st.just("in"), st.lists(_PRUNE_VALUE, max_size=3)),
+    )
+    return segments, draw(st.lists(pred, min_size=1, max_size=3)), draw(
+        st.booleans()
+    )
+
+
+def _pruning_layer(segments, segmented):
+    """(manifest, segment files by path, rows by file) for a layer."""
+    from aie321_bigdata_movie_kpi_1m_spark.sources import snapshots
+    from aie321_bigdata_movie_kpi_1m_spark.sources.pruning import bits_to_hex
+    from aie321_bigdata_movie_kpi_1m_spark.sources.snapshot_batch import (
+        bloom_probe_positions,
+    )
+
+    m = {"format": 2 if segmented else 1, "segments": [], **_PRUNE_BLOOM}
+    seg_files, rows_by_file = {}, {}
+    m_bits, k = _PRUNE_BLOOM["bloom_m"], _PRUNE_BLOOM["bloom_k"]
+    for si, files in enumerate(segments):
+        bases, stats, blooms = [], {}, {}
+        for fi, (rows, has_stats, has_bloom) in enumerate(files):
+            base = f"s{si}f{fi}.parquet"
+            bases.append(base)
+            rows_by_file[f"data/{base}"] = rows
+            vals = [v for v in rows if v is not None]
+            if has_stats:
+                stats[base] = {
+                    "c": [min(vals), max(vals)] if vals else [None, None]
+                }
+            if has_bloom:
+                blooms[base] = sorted(
+                    {
+                        b
+                        for v in vals
+                        for b in bloom_probe_positions(v, m=m_bits, k=k)
+                    }
+                )
+        seg_path = f"segments/s{si}.json"
+        seg_files[seg_path] = {
+            "files": [f"data/{b}" for b in bases],
+            "stats": stats,
+            "blooms": blooms,
+        }
+        union = sorted({b for bs in blooms.values() for b in bs})
+        m["segments"].append(
+            {
+                "path": seg_path,
+                "stats": snapshots._aggregate_seg_stats(bases, stats),
+                "bloom_union": (
+                    bits_to_hex(union)
+                    if all(b in blooms for b in bases)
+                    else None
+                ),
+            }
+        )
+    if not segmented:
+        m["files"] = [f for seg in seg_files.values() for f in seg["files"]]
+        for key in ("stats", "blooms"):
+            m[key] = {
+                b: v for seg in seg_files.values() for b, v in seg[key].items()
+            }
+        del m["segments"]
+    return m, seg_files, rows_by_file
+
+
+def _row_may_match(v, op, bound) -> bool:
+    """SQL truth of ``v <op> bound`` for a non-NULL match; a comparison
+    Python cannot order counts as a possible match (nothing proves
+    otherwise)."""
+    if v is None:
+        return False
+    try:
+        if op == "eq":
+            return v == bound
+        if op == "gt":
+            return v > bound
+        if op == "gte":
+            return v >= bound
+        if op == "lt":
+            return v < bound
+        if op == "lte":
+            return v <= bound
+        return v in bound
+    except TypeError:
+        return True
+
+
+@given(pruning_case())
+@settings(max_examples=300, deadline=None)
+def test_manifest_pruning_is_lossless(case):
+    from aie321_bigdata_movie_kpi_1m_spark.sources.pruning import (
+        _Pred,
+        plan_files,
+    )
+    from aie321_bigdata_movie_kpi_1m_spark.sources.snapshot_batch import (
+        _bloom_pos_lists,
+    )
+
+    segments, raw_preds, segmented = case
+    m, seg_files, rows_by_file = _pruning_layer(segments, segmented)
+    preds = [_Pred(op, "c", bound) for op, bound in raw_preds]
+    kept, _ = plan_files(
+        m, preds, _bloom_pos_lists(m, preds), seg_files.__getitem__
+    )
+    for f, rows in rows_by_file.items():
+        if any(
+            all(_row_may_match(v, p.op, p.value) for p in preds)
+            for v in rows
+        ):
+            assert f in kept, (f, rows, preds)

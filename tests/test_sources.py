@@ -335,6 +335,43 @@ class TestChunkedCsvDataSource:
         r.pushFilters([LessThanOrEqual(("k",), 1500)])
         assert 0 < len(r.partitions()) < n_all
 
+    def test_chunk_pruning_follows_shared_rule_set(self, tmp_path):
+        """Chunk pruning is sources/pruning.py's rule set, no Spark
+        needed: an all-NULL chunk ([None, None]) is skipped by any
+        pushed filter, IN lists prune, an unorderable bound keeps."""
+        import json
+
+        from pyspark.sql.datasource import EqualTo, In
+
+        from aie321_bigdata_movie_kpi_1m_spark.sources.pyds import (
+            _ChunkedCsvReader,
+        )
+
+        schema = T.StructType([T.StructField("k", T.LongType())])
+        chunks = [("a.csv", 0, 9), ("b.csv", 10, 19), ("null.csv", None, None)]
+        (tmp_path / "manifest.json").write_text(
+            json.dumps(
+                {
+                    "schema": schema.json(),
+                    "stats_col": "k",
+                    "files": [
+                        {"name": n, "rows": 2, "min": lo, "max": hi}
+                        for n, lo, hi in chunks
+                    ],
+                }
+            )
+        )
+        r = _ChunkedCsvReader(str(tmp_path), schema)
+
+        def planned(*filters):
+            r.pushFilters(list(filters))
+            return [os.path.basename(p.path) for p in r.partitions()]
+
+        assert planned() == ["a.csv", "b.csv", "null.csv"]
+        assert planned(EqualTo(("k",), 5)) == ["a.csv"]
+        assert planned(In(("k",), (15, 30))) == ["b.csv"]
+        assert planned(EqualTo(("k",), "x")) == ["a.csv", "b.csv"]
+
     def test_unsupported_type_fails_fast(self, spark, tmp_path):
         import pytest
 
@@ -1015,6 +1052,36 @@ class TestSnapshotLayer:
         )
         kept2 = snapshot_files(spark, path, 2, prune_range=("k", 9000, None))
         assert len(kept2) == 1 and "/data/v2-" in kept2[0]
+
+    def test_unorderable_prune_bound_keeps_files(self, spark, tmp_path):
+        """An int ``prune_range`` over string stats cannot be ordered, so
+        every file with recorded stats is kept (it used to raise
+        TypeError in the per-file loop); the all-NULL file is still
+        skipped, and the pushdown planner decides the same."""
+        from aie321_bigdata_movie_kpi_1m_spark.sources.snapshots import (
+            commit_snapshot,
+            snapshot_files,
+        )
+
+        path = str(tmp_path / "layer")
+        # four range partitions of 10 ids; the last one is all-NULL on s
+        df = spark.range(0, 40, 1, 4).selectExpr(
+            "id AS k", "IF(id < 30, CAST(id AS STRING), NULL) AS s"
+        )
+        commit_snapshot(spark, df, path, stats_cols=["s"])
+        all_f = snapshot_files(spark, path)
+        kept = snapshot_files(spark, path, prune_range=("s", 5, 10))
+        assert len(all_f) == 4 and len(kept) == 3 and set(kept) < set(all_f)
+
+        from aie321_bigdata_movie_kpi_1m_spark.sources.pruning import (
+            range_preds,
+        )
+        from aie321_bigdata_movie_kpi_1m_spark.sources.snapshot_batch import (
+            plan_snapshot_scan,
+        )
+
+        scan = plan_snapshot_scan(path, None, range_preds("s", 5, 10))
+        assert scan["files"] == kept
 
     def test_corrupt_manifest_fails_loudly(self, spark, tmp_path):
         """A truncated/garbled manifest must raise a parse error on read,
