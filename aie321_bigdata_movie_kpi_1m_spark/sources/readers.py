@@ -44,11 +44,92 @@ def read_parquet(
     spark: SparkSession, path: str, schema: T.StructType | None = None
 ) -> DataFrame:
     """Parquet scan; optional declared schema enables column pruning to be
-    checked against a fixed contract."""
+    checked against a fixed contract.
+
+    With no declared schema, a layer Spark wrote is read with the schema
+    Spark stored in its footer (``_footer_schema``): the same schema
+    Spark's inference returns, with no inference job.  Anything else falls
+    back to Spark's inference."""
     reader = spark.read
+    if schema is None:
+        schema = _footer_schema(spark, path)
     if schema is not None:
         reader = reader.schema(schema)
     return reader.parquet(path)
+
+
+#: footer key under which Spark's parquet writer stores the written
+#: DataFrame's schema as JSON; ``ParquetFileFormat.readSchemaFromFooter``
+#: reads the same key
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+_SUMMARY_FILES = ("_metadata", "_common_metadata")
+_GLOB_CHARS = set("{}[]*?\\")
+
+
+def _spark_lists(name: str) -> bool:
+    """Spark's listing filter (``InMemoryFileIndex.shouldFilterOutPathName``):
+    hidden ``_``/``.`` names and in-flight copies are not part of a layer,
+    except the parquet summary files."""
+    if name.startswith(_SUMMARY_FILES):
+        return True
+    return not (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema Spark's inference would give ``path``, read from one
+    parquet footer on the driver with no Spark job; None where the read
+    must fall back to inference.
+
+    With ``mergeSchema`` off, Spark infers from the first data file in
+    path order and prefers the schema its writer stored under
+    ``_SPARK_SCHEMA_KEY``; this reads that key from that file.  The stored
+    fields keep the writer's nullability, and Spark makes a declared
+    file-source schema nullable through structs, arrays and maps
+    (``asNullable``) exactly as it does an inferred one.
+
+    Falls back (None) for: a URI scheme other than ``file:`` (or a bare
+    path on a non-local default filesystem), glob or escape characters,
+    ``mergeSchema`` on, partition subdirectories, ``_metadata`` /
+    ``_common_metadata`` summary files, no data file, an unreadable
+    footer, or no stored key (files written by other engines).
+    """
+    import json
+    import os
+    from urllib.parse import urlparse
+
+    if _GLOB_CHARS & set(path):
+        return None
+    uri = urlparse(path)
+    if uri.scheme == "file":
+        local = uri.path
+    elif uri.scheme:
+        return None
+    else:
+        default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+        if not (default_fs or "file:").startswith("file:"):
+            return None
+        local = path
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false").lower() == "true":
+        return None
+    if os.path.isdir(local):
+        names = sorted(n for n in os.listdir(local) if _spark_lists(n))
+        if not names or any(
+            n.startswith(_SUMMARY_FILES) or os.path.isdir(os.path.join(local, n))
+            for n in names
+        ):
+            return None
+        local = os.path.join(local, names[0])
+    try:
+        import pyarrow.parquet as pq
+
+        stored = (pq.read_metadata(local).metadata or {}).get(_SPARK_SCHEMA_KEY)
+        return T.StructType.fromJson(json.loads(stored)) if stored else None
+    except (ImportError, OSError, ValueError):
+        return None
 
 
 def read_jdbc(

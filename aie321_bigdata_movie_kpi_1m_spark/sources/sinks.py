@@ -6,18 +6,24 @@ Reference surface covered (SURVEY.md §2.1):
   no single-node 2x memory buffer.
 - S7/S8 Google-Sheets-style bounded export (publish.py:41-97) ->
   ``bounded_export``: the engine's contract ends at limit + batched
-  iteration; the network client is the caller's adapter.  NaN/Inf
+  Arrow record batches; the network client is the caller's adapter.  NaN/Inf
   scrubbing (publish.py:50-57) happens at this boundary only — in-engine
   data uses real SQL NULLs.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .readers import read_parquet
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 def write_parquet(
@@ -148,55 +154,57 @@ def scrub_non_finite(df: DataFrame) -> DataFrame:
 
 def bounded_export(
     df: DataFrame,
-    consume_batch: Callable[[list[tuple]], None],
+    consume_batch: Callable[[pa.RecordBatch], None],
     *,
-    max_rows: int | None = 50_000,
+    max_rows: int = 50_000,
     batch_size: int = 50_000,
 ) -> int:
     """Bounded, batched export to an external API client (reference S7:
     LIMIT 50000 at publish.py:17,122-128 + 50k-row chunked append_rows at
     publish.py:71,85-90).
 
-    Uses ``toLocalIterator`` so only one partition's rows are resident on
-    the driver at a time — the pattern that keeps a 100 TB table exportable
-    (you export a bounded slice, never a collect of everything).
+    The first ``max_rows`` rows, NaN/±Inf scrubbed, are collected once as
+    Arrow and handed to ``consume_batch`` as ``pyarrow.RecordBatch``es of
+    ``batch_size`` rows (the last one holds the remainder) — columnar, with
+    no Python object per row.  Only the bounded slice is ever resident on
+    the driver (you export a bounded slice, never a collect of
+    everything), so ``max_rows`` must be a positive row count.
     Returns the number of rows exported.
     """
-    bounded = scrub_non_finite(df.limit(max_rows) if max_rows is not None else df)
-    batch: list[tuple] = []
-    n = 0
-    it: Iterator = bounded.toLocalIterator()
-    for row in it:
-        batch.append(tuple(row))
-        if len(batch) >= batch_size:
-            consume_batch(batch)
-            n += len(batch)
-            batch = []
-    if batch:
+    if max_rows is None or max_rows < 1:
+        raise ValueError(f"max_rows must be a positive row count, got {max_rows!r}")
+    table = scrub_non_finite(df.limit(max_rows)).toArrow()
+    # one chunk first: Spark's Arrow collect arrives in maxRecordsPerBatch
+    # chunks, and to_batches never merges across chunk boundaries
+    for batch in table.combine_chunks().to_batches(max_chunksize=batch_size):
         consume_batch(batch)
-        n += len(batch)
-    return n
+    return table.num_rows
 
 
-def layer_parquet_bytes(spark, path: str) -> int:
-    """Total bytes of the ``.parquet`` data files under ``path``, resolved
-    through the Hadoop FileSystem API so the same call works on any
-    substrate the cluster can read — ``file://``, ``hdfs://``, ``s3a://``,
-    a bare local path alike.  (A local ``os.walk`` returns nothing for a
-    remote URI, which would silently collapse compaction sizing to one
-    output file — the failure mode this helper exists to prevent.)
-    """
+def _parquet_file_sizes(spark, path: str) -> list[int]:
+    """Byte sizes of the ``.parquet`` data files under ``path`` (recursive
+    over partition subdirectories), listed through the Hadoop FileSystem
+    API so the same call works on any substrate the cluster can read —
+    ``file://``, ``hdfs://``, ``s3a://``, a bare local path alike.  (A
+    local ``os.walk`` returns nothing for a remote URI.)"""
     jvm = spark.sparkContext._jvm
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(hconf)
-    files = fs.listFiles(hpath, True)  # recursive over partition subdirs
-    total = 0
+    files = hpath.getFileSystem(hconf).listFiles(hpath, True)
+    sizes = []
     while files.hasNext():
         status = files.next()
         if status.getPath().getName().endswith(".parquet"):
-            total += status.getLen()
-    return total
+            sizes.append(status.getLen())
+    return sizes
+
+
+def layer_parquet_bytes(spark, path: str) -> int:
+    """Total bytes of the ``.parquet`` data files under ``path``, on any
+    Hadoop filesystem (``_parquet_file_sizes``) — a local walk would
+    silently collapse compaction sizing to one output file on a remote
+    URI, the failure mode this helper exists to prevent."""
+    return sum(_parquet_file_sizes(spark, path))
 
 
 def compact_parquet_layer(
@@ -216,19 +224,21 @@ def compact_parquet_layer(
     costs, so periodic compaction to ~128 MB files is standard hygiene.
     Byte sizing goes through the Hadoop FileSystem API
     (``layer_parquet_bytes``) so it is substrate-portable — hdfs:// and
-    s3a:// layers size identically to local ones.  Returns the output
-    file count.  Write-then-swap is the caller's policy; writing to a
-    distinct ``dst_path`` keeps the operation atomic at the directory
-    level (no reader ever sees a half-compacted layer).
+    s3a:// layers size identically to local ones.  Returns the number of
+    files written, listed the same way: ``coalesce`` cannot raise the
+    scan's partition count, so that can be fewer than the sized count.
+    Write-then-swap is the caller's policy; writing to a distinct
+    ``dst_path`` keeps the operation atomic at the directory level (no
+    reader ever sees a half-compacted layer).
     """
     import math
 
-    df = spark.read.parquet(src_path)
+    df = read_parquet(spark, src_path)
     total = layer_parquet_bytes(spark, src_path)
     n_files = max(1, math.ceil(total / target_file_bytes))
     # coalesce, not repartition: compaction must not pay a shuffle
     df.coalesce(n_files).write.mode("overwrite").parquet(dst_path)
-    return n_files
+    return len(_parquet_file_sizes(spark, dst_path))
 
 
 def observed_write(

@@ -47,8 +47,6 @@ def test_decode_roundtrips_header(spark, assets):
 
 
 @pytest.mark.slow
-
-
 def test_decode_rejects_real_formats(spark):
     # decode auto-upgrades to Pillow when importable; in this sandbox
     # (no PIL) a real format must fail loudly, never mis-decode
@@ -333,8 +331,6 @@ def test_multibatch_open_session_reemission(spark, tmp_path):
 
 
 @pytest.mark.slow
-
-
 def test_streaming_dedup_cross_batch_state(spark, tmp_path):
     """Cross-batch dedup state: a duplicate arriving in a LATER batch is
     recognized against the fingerprint state from the first batch (the

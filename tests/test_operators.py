@@ -121,8 +121,6 @@ def test_streaming_session_kernel_drops_nat(spark):
 
 
 @pytest.mark.slow
-
-
 def test_session_boundaries(spark):
     events = spark.createDataFrame(
         [(1, ts("2024-01-01 10:00:00")),
@@ -189,8 +187,6 @@ def test_simhash_deterministic_and_local(spark):
 
 
 @pytest.mark.slow
-
-
 def test_lsh_topk_recall_on_clustered_vectors(spark):
     # LSH's contract is high recall in the high-similarity regime (near-dup
     # retrieval), so test on clustered vectors: 5 tight clusters (cos>0.9
@@ -1297,7 +1293,6 @@ class TestTokenIndexMaintenance:
         return spark.createDataFrame(rows, "doc_id long, text string")
 
     @pytest.mark.slow
-
     def test_delete_maintenance_is_o_delta_and_driver_free(
         self, spark, tmp_path
     ):
@@ -1366,7 +1361,6 @@ class TestTokenIndexMaintenance:
         assert stats["total_tokens"] == 2 + 4 + 4
 
     @pytest.mark.slow
-
     def test_update_and_insert_maintenance(self, spark, tmp_path):
         """Updates re-point a doc's postings to its new text (old rows
         equality-deleted, new rows appended AFTER the delete, so
@@ -1581,7 +1575,6 @@ class TestIndexedPhraseSearch:
             ti.indexed_phrase_search(spark, group, ["a"])
 
     @pytest.mark.slow
-
     def test_phrase_results_track_maintenance(self, spark, tmp_path):
         """An update through the change-feed refresh re-points the
         positions — phrase hits change with NO rebuild."""
@@ -1694,8 +1687,6 @@ def test_token_index_readers_never_see_torn_state(spark, tmp_path):
 
 
 @pytest.mark.slow
-
-
 def test_maintain_token_index_folds_deletes_and_repins(spark, tmp_path):
     """The index lifecycle loop: refreshes leave small files + live
     equality-delete entries; maintenance compacts where the advisor
@@ -1827,7 +1818,6 @@ class TestTokenIndexRound10:
         assert dl == {-3: 3, -2: 2, 1: 1, 0: 1}
 
     @pytest.mark.slow
-
     def test_delta_partitioning_scales_with_rows(self, spark, tmp_path):
         """r9 verdict item 2: the postings delta writes
         ceil(delta tokens / target) files — a micro-batch lands ONE
@@ -1965,7 +1955,6 @@ class TestTokenIndexRound10:
             )
 
     @pytest.mark.slow
-
     def test_maintenance_compaction_keeps_bloom_skipping(
         self, spark, tmp_path
     ):
@@ -2021,7 +2010,6 @@ class TestTokenIndexRound10:
         assert after == before
 
     @pytest.mark.slow
-
     def test_doclen_mirror_serves_and_falls_back(self, spark, tmp_path):
         """r9 verdict item 3: BM25's doclen side reads from the
         doc_id-bucketed mirror when it matches the pinned version and
@@ -2109,7 +2097,6 @@ class TestTokenIndexRound10:
         ] == [(r["doc_id"], r["bm25_r4"]) for r in stale_rows]
 
     @pytest.mark.slow
-
     def test_doclen_mirror_gc_grace_period(self, spark, tmp_path):
         """r10 verdict item 3, the injected interleaving: a reader
         resolves the OLD mirror, maintenance re-syncs mid-"scan", and
@@ -2181,7 +2168,6 @@ class TestTokenIndexRound10:
         assert _vdirs() == {f"v{vb}", f"v{vc}"}
 
     @pytest.mark.slow
-
     def test_auto_maintenance_governor_fires_and_pins_consistent(
         self, spark
     ):
@@ -2231,7 +2217,6 @@ class TestTokenIndexRound10:
         assert any(d >= 1000000 for d in dl_docs)
 
     @pytest.mark.slow
-
     def test_shared_governor_closes_loop_on_ann_stream(self, spark):
         """r11 verdict item 4: ALL THREE tiers share one governor
         implementation (plans.maintenance.auto_maintenance_hook) and
@@ -2309,7 +2294,6 @@ class TestTokenIndexRound10:
         assert "TakeOrderedAndProject" in plan
 
     @pytest.mark.slow
-
     def test_refresh_vs_maintenance_race_pins_never_torn(
         self, spark, tmp_path, monkeypatch
     ):
@@ -2620,7 +2604,6 @@ class TestLexiconSideband:
         assert ti._LEX_PROBE_STATS["fallbacks"] == stats0["fallbacks"] + 1
 
     @pytest.mark.slow
-
     def test_deletes_keep_sideband_exact(self, spark, tmp_path, monkeypatch):
         """Complete negative rows: deleting docs through the change-feed
         refresh re-ranks the lexicon exactly (a delete can DEMOTE the
@@ -2657,7 +2640,6 @@ class TestLexiconSideband:
         assert ti._LEX_PROBE_STATS["resolved"] == stats0["resolved"] + 1
 
     @pytest.mark.slow
-
     def test_netting_merges_complete_commits_only(
         self, spark, tmp_path, monkeypatch
     ):
@@ -2796,7 +2778,6 @@ class TestAnnAssignTopk:
         self._check_decontaminate(spark, group, shard)
 
     @pytest.mark.slow
-
     def test_batch_adc_executor_side_no_driver_model_rows(
         self, spark, tmp_path
     ):
@@ -2879,8 +2860,6 @@ class TestAnnAssignTopk:
 
 
 @pytest.mark.slow
-
-
 def test_maintain_ann_assignments_folds_and_keeps_blooms(spark, tmp_path):
     """The vector tier's maintenance loop: refresh churn leaves small
     files + live equality-delete entries; the cycle compacts, FOLDS the
@@ -3114,7 +3093,6 @@ class TestIndexedPrefixSearch:
         )
 
     @pytest.mark.slow
-
     def test_prefix_tracks_deletes(self, spark, tmp_path):
         """Merge-on-read equality deletes drop a doc from prefix
         results with no rebuild."""
@@ -3162,7 +3140,6 @@ class TestReclusterMaintenance:
     dulled."""
 
     @pytest.mark.slow
-
     def test_token_index_recluster_restores_prefix_pruning(
         self, spark, tmp_path
     ):
@@ -3217,7 +3194,6 @@ class TestReclusterMaintenance:
         assert after == before and after
 
     @pytest.mark.slow
-
     def test_neardup_recluster_keeps_lookup_exact(self, spark, tmp_path):
         from aie321_bigdata_movie_kpi_1m_spark.plans import neardup_index as ni
 
@@ -3339,7 +3315,6 @@ class TestIndexedWildcardSearch:
         assert pruned == full and pruned
 
     @pytest.mark.slow
-
     def test_wildcard_tracks_vocabulary_churn(self, spark, tmp_path):
         """Refresh folds the vocabulary delta O(delta): a new token
         becomes wildcard-servable, a token whose last posting vanishes
@@ -3639,7 +3614,6 @@ class TestIndexedFuzzySearch:
         assert pruned == full and pruned
 
     @pytest.mark.slow
-
     def test_fuzzy_tracks_vocabulary_churn(self, spark, tmp_path):
         """Refresh folds the vocabulary delta O(delta) into the fuzzy
         layer alongside the permuterm one: a new token becomes
@@ -4084,8 +4058,6 @@ class TestNeardupIndex:
 
 
     @pytest.mark.slow
-
-
     def test_maintenance_compacts_and_keeps_pruning(self, spark, tmp_path):
         """After churn, maintenance folds the delete entries and packs
         small files; lookups are unchanged and the Bloom (regenerated
@@ -4292,7 +4264,6 @@ class TestAnnIvfadc:
         assert dict(vx._ANN_FIT_RUNS) == fits_before
 
     @pytest.mark.slow
-
     def test_residual_refresh_encodes_under_pinned_kind(
         self, spark, tmp_path
     ):
@@ -4340,7 +4311,6 @@ class TestAnnIvfadc:
         assert dict(vx._ANN_FIT_RUNS) == fits_before
 
     @pytest.mark.slow
-
     def test_residual_recall_improves_on_clustered_corpus(
         self, spark, tmp_path
     ):

@@ -3,6 +3,8 @@ star-derived raw view, writing real parquet layers."""
 
 from __future__ import annotations
 
+import pytest
+
 from aie321_bigdata_movie_kpi_1m_spark.plans.movie_view import movies_raw_from_star
 from aie321_bigdata_movie_kpi_1m_spark.plans.pipeline import run_movie_pipeline
 from aie321_bigdata_movie_kpi_1m_spark.sources.readers import read_parquet
@@ -25,3 +27,17 @@ def test_movie_pipeline_layers(spark, tmp_path):
     # overwrite semantics: re-run lands identically (drop-and-recreate analog)
     res2 = run_movie_pipeline(spark, raw, out)
     assert res2 == res
+
+
+@pytest.mark.parametrize("empty", [False, True], ids=["sf0.001", "empty"])
+def test_pipeline_counts_are_the_written_layers(spark, sf_dir, tmp_path, empty):
+    raw = movies_raw_from_star(spark, sf_dir)
+    if empty:
+        raw = spark.createDataFrame([], raw.schema)
+    out = str(tmp_path / "prod")
+    res = run_movie_pipeline(spark, raw, out)
+
+    written = [read_parquet(spark, f"{out}/{name}").count() for name in (
+        "movie_facts", "movie_genre_fact", "genre_average_revenue")]
+    assert [res.facts_rows, res.genre_fact_rows, res.summary_rows] == written
+    assert (sum(written) == 0) == empty

@@ -443,8 +443,6 @@ def test_duplicate_spans_shuffles_on_hash_with_partial_agg(spark):
 
 
 @pytest.mark.slow
-
-
 def test_catalog_wide_no_cartesian_no_rowwise_python(spark):
     """Catalog-wide scale lint: NO query may plan a CartesianProduct
     (unkeyed all-pairs — broadcast nested-loop against a broadcast side

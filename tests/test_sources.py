@@ -51,6 +51,76 @@ def test_parquet_layer_roundtrip(spark, tmp_path):
     assert read_parquet(spark, str(tmp_path / "layer")).count() == 1
 
 
+def test_footer_schema_equals_inferred_schema_without_a_job(spark, sf_dir, tmp_path):
+    import time
+
+    from aie321_bigdata_movie_kpi_1m_spark.plans.movie_view import movies_raw_from_star
+    from aie321_bigdata_movie_kpi_1m_spark.plans.pipeline import run_movie_pipeline
+    from aie321_bigdata_movie_kpi_1m_spark.sources.readers import _footer_schema
+
+    out = str(tmp_path / "layers")
+    write_parquet(movies_raw_from_star(spark, sf_dir), f"{out}/raw")
+    run_movie_pipeline(spark, read_parquet(spark, f"{out}/raw"), out)
+    nested = spark.range(0, 50, 1, 3).selectExpr(
+        "id",
+        "named_struct('x', id, 'ys', array(id), 'm', map('k', id)) AS s",
+        "array(named_struct('v', double(id))) AS arr",
+        "map(cast(id AS string), array(id)) AS m",
+    ).withMetadata("id", {"comment": "key"})
+    write_parquet(nested, f"{out}/nested")
+
+    layers = ["raw", "movie_facts", "movie_genre_fact", "genre_average_revenue",
+              "nested"]
+    for name in layers:
+        path = f"{out}/{name}"
+        assert _footer_schema(spark, path) is not None, name
+        # json() carries nullability at every depth and field metadata
+        assert (read_parquet(spark, path).schema.json()
+                == spark.read.parquet(path).schema.json()), name
+    assert _footer_schema(spark, f"file://{out}/nested") is not None
+
+    # job-free: a footer read under one job group, then an inferred read
+    # under another; once the second group's job is visible, a job of the
+    # first (posted earlier on the same listener queue) would be too
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    try:
+        sc.setJobGroup("footer-schema-read", "footer")
+        read_parquet(spark, f"{out}/movie_facts").schema
+        sc.setJobGroup("footer-schema-infer", "infer")
+        spark.read.parquet(f"{out}/movie_facts").schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 10
+    while not tracker.getJobIdsForGroup("footer-schema-infer"):
+        assert time.monotonic() < deadline, "inference job never observed"
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup("footer-schema-read") == []
+
+
+def test_footer_schema_falls_back_to_inference(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aie321_bigdata_movie_kpi_1m_spark.sources.readers import _footer_schema
+
+    parted = str(tmp_path / "parted")
+    spark.range(0, 20).selectExpr("id", "id % 2 AS p").write.partitionBy("p").parquet(
+        parted
+    )
+    foreign = tmp_path / "foreign"
+    foreign.mkdir()
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int32()), "v": ["a", None]}),
+                   foreign / "part-0.parquet")
+    for path in (parted, str(foreign)):
+        assert _footer_schema(spark, path) is None
+        assert (read_parquet(spark, path).schema.json()
+                == spark.read.parquet(path).schema.json())
+    # remote URIs and globs are Spark's to resolve: nothing is opened here
+    for path in ("hdfs://namenode:8020/layers/movie_facts",
+                 "s3a://bucket/layers/movie_facts", f"{parted}/p=*"):
+        assert _footer_schema(spark, path) is None
+
+
 def test_scrub_non_finite_nulls_only_float_columns(spark):
     df = spark.createDataFrame(
         [(1, float("nan"), "x"), (2, float("inf"), "y"), (3, 1.5, "z")],
@@ -63,12 +133,58 @@ def test_scrub_non_finite_nulls_only_float_columns(spark):
 
 def test_bounded_export_limits_and_batches(spark):
     df = spark.createDataFrame([(i, float(i)) for i in range(25)], "k long, v double")
-    batches: list[list[tuple]] = []
+    batches: list = []
     n = bounded_export(df, batches.append, max_rows=10, batch_size=4)
     assert n == 10
     assert [len(b) for b in batches] == [4, 4, 2]
-    exported = {row[0] for b in batches for row in b}
+    exported = {row["k"] for b in batches for row in b.to_pylist()}
     assert len(exported) == 10
+
+
+def _bits(value):
+    """A value with every double replaced by its IEEE-754 bit pattern, so
+    equality is bit-for-bit (NaN, -0.0) rather than numeric."""
+    import struct
+
+    if isinstance(value, float):
+        return struct.pack("<d", value)
+    if isinstance(value, (list, tuple)):
+        return [_bits(v) for v in value]
+    return value
+
+
+def test_bounded_export_arrow_batches_match_row_path(spark):
+    # > 10k rows over 4 partitions, so Spark's Arrow collect arrives in
+    # several 10k-row chunks that the export must re-cut to batch_size
+    df = spark.range(0, 12_500, 1, 4).selectExpr(
+        "id",
+        "CASE id % 7 WHEN 0 THEN double('NaN') WHEN 1 THEN double('inf') "
+        "WHEN 2 THEN double('-inf') WHEN 3 THEN CAST(NULL AS double) "
+        "WHEN 4 THEN -0.0D ELSE double(id) / 3 END AS v",
+        "CAST(double(id) / 7 AS float) AS f",
+        "IF(id % 5 = 0, NULL, concat('t', id)) AS s",
+        "array(id, id * 2) AS a",
+        "array(double(id) / 3, double('NaN')) AS dv",
+    )
+    batches: list = []
+    n = bounded_export(df, batches.append, max_rows=11_000, batch_size=3_000)
+    assert n == 11_000
+    assert [b.num_rows for b in batches] == [3_000, 3_000, 3_000, 2_000]
+    assert all(b.schema.names == df.columns for b in batches)
+
+    want = [_bits(list(r)) for r in scrub_non_finite(df.limit(11_000)).collect()]
+    got = [_bits([row[c] for c in df.columns])
+           for b in batches for row in b.to_pylist()]
+    assert got == want
+    # the scrub held at the Arrow boundary: no top-level NaN/Inf survives
+    assert not any(
+        isinstance(row["v"], float) and not math.isfinite(row["v"])
+        for b in batches for row in b.to_pylist()
+    )
+
+    for bad in (None, 0):
+        with pytest.raises(ValueError, match="max_rows"):
+            bounded_export(df, batches.append, max_rows=bad)
 
 
 def test_partitioned_write_enables_partition_pruning(spark, tmp_path):
@@ -248,7 +364,6 @@ class TestChunkedCsvDataSource:
         register_chunked_csv(spark)
 
     @pytest.mark.slow
-
     def test_roundtrip_exact_and_chunk_cap(self, spark, tmp_path):
         import json
 
@@ -270,7 +385,6 @@ class TestChunkedCsvDataSource:
         assert df.exceptAll(back).count() == 0
 
     @pytest.mark.slow
-
     def test_append_mode_keeps_existing_chunks(self, spark, tmp_path):
         """mode('append') must MERGE the manifest: the old commit()
         rewrote it with only the new job's files, silently dropping every
@@ -485,7 +599,6 @@ class TestReplayParquetStreamSource:
         assert sum(batches2) == 0
 
     @pytest.mark.slow
-
     def test_partitioned_reader_task_retry_exactly_once(self, sf_dir, tmp_path):
         """Executor-side reads must be idempotent under TASK RETRY: fail
         one range partition's first attempt mid-batch and assert the
@@ -3459,7 +3572,6 @@ class TestHiddenPartitioning:
         assert log_all["n_files_planned"] == log_all["n_files_total"]
 
     @pytest.mark.slow
-
     def test_partition_spec_evolution_prunes_both_generations(
         self, spark, tmp_path
     ):
@@ -6769,7 +6881,6 @@ class TestCatalogMaintenanceSweep:
     per-path min_pinned retention floors."""
 
     @pytest.mark.slow
-
     def test_sweep_act_replan_and_pinned_reads_survive(
         self, spark, tmp_path
     ):
