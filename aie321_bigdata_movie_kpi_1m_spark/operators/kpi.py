@@ -57,6 +57,14 @@ GENRE_FACT_COLUMNS = [
 ]
 
 
+def _sort_small(agg: DataFrame, *cols) -> DataFrame:
+    """Order an aggregate with few rows (one per genre, year, country or
+    runtime bucket) inside one partition.  A global ``orderBy`` would
+    sample range bounds and shuffle again: two extra jobs per query for
+    a result of tens of rows."""
+    return agg.coalesce(1).sortWithinPartitions(*cols)
+
+
 def clean_movies(raw: DataFrame) -> DataFrame:
     """Cleaning layer: list-parse, numeric coercion, year derivation, id cast
     (transform.py:96-105).  All JVM-side expressions; Catalyst folds this
@@ -110,7 +118,7 @@ def build_genre_summary(genre_fact: DataFrame) -> DataFrame:
     Input rows already passed the imdb_rating filter (double-filter quirk,
     SURVEY.md §1.4 Q4); here the revenue>0 filter applies, then
     group-by-genre mean(revenue)/count, sorted descending.  Partial+final
-    hash agg, single shuffle on genre_name.
+    hash agg, single shuffle on genre_name, then ``_sort_small``.
     """
     return (
         genre_fact.filter(F.col("revenue").isNotNull() & (F.col("revenue") > 0))
@@ -119,7 +127,7 @@ def build_genre_summary(genre_fact: DataFrame) -> DataFrame:
             F.avg("revenue").alias("average_revenue"),
             F.count("movie_fact_id").alias("total_movies"),
         )
-        .orderBy(F.col("average_revenue").desc())
+        .transform(_sort_small, F.col("average_revenue").desc())
     )
 
 
@@ -144,7 +152,7 @@ def films_per_year(facts: DataFrame) -> DataFrame:
         facts.filter(F.col("release_year").isNotNull())
         .groupBy("release_year")
         .agg(F.count(F.lit(1)).alias("n_films"))
-        .orderBy("release_year")
+        .transform(_sort_small, "release_year")
     )
 
 
@@ -159,7 +167,7 @@ def country_popularity(facts: DataFrame) -> DataFrame:
             F.avg("popularity").alias("avg_popularity"),
             F.count(F.lit(1)).alias("n_movies"),
         )
-        .orderBy(F.col("avg_popularity").desc())
+        .transform(_sort_small, F.col("avg_popularity").desc())
     )
 
 
@@ -177,5 +185,5 @@ def runtime_rating_relationship(facts: DataFrame, bucket_minutes: int = 30) -> D
             F.avg("imdb_rating").alias("avg_rating"),
             F.count(F.lit(1)).alias("n_movies"),
         )
-        .orderBy("runtime_bucket")
+        .transform(_sort_small, "runtime_bucket")
     )

@@ -15,8 +15,13 @@ This is the registry behind ``__spark_entry__.queries()`` /
 
 from __future__ import annotations
 
+import functools
+import os
+import re
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,6 +66,47 @@ def register(
         return fn
 
     return deco
+
+
+def _tag(sf_dir: str) -> str:
+    """Filesystem/table-name-safe tag for one testdata scale."""
+    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
+    return re.sub(r"[^A-Za-z0-9_]", "_", base)
+
+
+T = TypeVar("T")
+
+
+def fixture_layer(
+    build: Callable[[SparkSession, str], T],
+) -> Callable[[SparkSession, str], T]:
+    """Build a query fixture (scratch layer, index group, catalog,
+    fitted quantizer) once per process and per scale, then hand every
+    later caller the same result — built state stays resident so later
+    queries skip the rebuild.
+
+    The key is ``_tag(sf_dir)``, the per-scale identity every builder's
+    scratch path already uses.  One lock per key: the first caller
+    builds, a concurrent caller of the same key waits and gets the same
+    object, callers of different keys never wait on each other.  The
+    result is recorded only after ``build`` returns, so a builder that
+    raises records nothing and the next call builds again.
+    ``__wrapped__`` is the undecorated builder, for a forced rebuild."""
+    built: dict[str, T] = {}
+    locks: dict[str, threading.Lock] = {}
+    guard = threading.Lock()
+
+    @functools.wraps(build)
+    def layer(spark: SparkSession, sf_dir: str) -> T:
+        tag = _tag(sf_dir)
+        with guard:
+            lock = locks.setdefault(tag, threading.Lock())
+        with lock:
+            if tag not in built:
+                built[tag] = build(spark, sf_dir)
+            return built[tag]
+
+    return layer
 
 
 def facts_from_star(spark: SparkSession, sf_dir: str) -> DataFrame:

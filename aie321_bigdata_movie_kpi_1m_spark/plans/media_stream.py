@@ -12,7 +12,6 @@ share one definition of correctness.
 from __future__ import annotations
 
 import os
-import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -21,14 +20,9 @@ from pyspark.sql import functions as F
 from ..operators.multimodal import decode_assets, extract_features, synthesize_assets
 from ..session import scratch_dir
 from ..sources.readers import load_star_table
-from .catalog import register
+from .catalog import _tag, fixture_layer, register
 
 _SCRATCH = scratch_dir()
-
-
-def _tag(sf_dir: str) -> str:
-    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return re.sub(r"[^A-Za-z0-9_]", "_", base)
 
 
 @register(
@@ -318,9 +312,9 @@ def _run_to_memory_sink(
 
 
 _FLUSH_TYPE = "__flush__"
-_FLUSH_DIRS_BUILT: set[str] = set()
 
 
+@fixture_layer
 def _flushed_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage the events table for a TRUE APPEND-MODE streaming run: file
     one is the real events table (canonical micros timestamps), file two
@@ -340,8 +334,6 @@ def _flushed_events_dir(spark: SparkSession, sf_dir: str) -> str:
     NOT be filtered).  On a real bus the same flush is a heartbeat/
     punctuation message.  Built once per process."""
     path = f"{_SCRATCH}/append_events/{_tag(sf_dir)}"
-    if path in _FLUSH_DIRS_BUILT:
-        return path
     from datetime import timedelta
 
     events = load_star_table(spark, sf_dir, "events")
@@ -353,7 +345,6 @@ def _flushed_events_dir(spark: SparkSession, sf_dir: str) -> str:
         schema=events.schema,
     )
     sentinel.coalesce(1).write.mode("append").parquet(path)
-    _FLUSH_DIRS_BUILT.add(path)
     return path
 
 
@@ -911,9 +902,7 @@ def q_streaming_window_counts_update(
     )
 
 
-_SNAPSHOT_SINK_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _snapshot_sink_layer(spark: SparkSession, sf_dir: str) -> str:
     """Stream the (flush-staged) events files into a snapshot layer via
     the exactly-once foreachBatch sink: maxFilesPerTrigger=1 makes one
@@ -930,8 +919,6 @@ def _snapshot_sink_layer(spark: SparkSession, sf_dir: str) -> str:
 
     base = f"{_SCRATCH}/snapshot_sink/{_tag(sf_dir)}"
     path = f"{base}/layer"
-    if path in _SNAPSHOT_SINK_BUILT:
-        return path
     src = _flushed_events_dir(spark, sf_dir)
     drop_snapshot_layer(spark, path)
     shutil.rmtree(f"{base}/ckpt", ignore_errors=True)
@@ -953,7 +940,6 @@ def _snapshot_sink_layer(spark: SparkSession, sf_dir: str) -> str:
         raise AssertionError(
             f"expected one commit per micro-batch, got versions={versions}"
         )
-    _SNAPSHOT_SINK_BUILT.add(path)
     return path
 
 
@@ -997,9 +983,7 @@ def q_streaming_snapshot_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SNAPSHOT_UPSERT_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _snapshot_upsert_layer(spark: SparkSession, sf_dir: str) -> str:
     """Stream the events table as FOUR unordered micro-batches into a
     user-keyed snapshot layer via the CDC upsert sink: batch one
@@ -1015,8 +999,6 @@ def _snapshot_upsert_layer(spark: SparkSession, sf_dir: str) -> str:
 
     base = f"{_SCRATCH}/snapshot_upsert/{_tag(sf_dir)}"
     path = f"{base}/layer"
-    if path in _SNAPSHOT_UPSERT_BUILT:
-        return path
     events = (
         load_star_table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
@@ -1046,7 +1028,6 @@ def _snapshot_upsert_layer(spark: SparkSession, sf_dir: str) -> str:
         raise AssertionError(
             f"expected one commit per micro-batch, got versions={versions}"
         )
-    _SNAPSHOT_UPSERT_BUILT.add(path)
     return path
 
 
@@ -1131,9 +1112,7 @@ def q_streaming_stream_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     return out.filter(F.col("user_id") != -1)  # sentinel self-match
 
 
-_SNAPSHOT_CDC_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _snapshot_cdc_layer(spark: SparkSession, sf_dir: str) -> str:
     """Events as a Debezium-style CDC feed in THREE time-ordered
     micro-batches: each row carries op = 'delete' when its event_type is
@@ -1154,8 +1133,6 @@ def _snapshot_cdc_layer(spark: SparkSession, sf_dir: str) -> str:
 
     base = f"{_SCRATCH}/snapshot_cdc/{_tag(sf_dir)}"
     path = f"{base}/layer"
-    if path in _SNAPSHOT_CDC_BUILT:
-        return path
     events = (
         load_star_table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull() & F.col("user_id").isNotNull())
@@ -1197,7 +1174,6 @@ def _snapshot_cdc_layer(spark: SparkSession, sf_dir: str) -> str:
             "expected >= 3 merge + >= 1 delete commits, got "
             f"versions={versions}"
         )
-    _SNAPSHOT_CDC_BUILT.add(path)
     return path
 
 
@@ -1287,9 +1263,7 @@ def q_streaming_stream_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.filter(F.col("user_id") != -1)  # sentinel self-match
 
 
-_SNAPSHOT_SOURCE_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _snapshot_source_layer(spark: SparkSession, sf_dir: str) -> str:
     """Layer for the snapshot-as-a-STREAM-SOURCE roundtrip: documents
     committed as v1 = one third, then two appends — so the head equals
@@ -1298,8 +1272,6 @@ def _snapshot_source_layer(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.snapshots import commit_snapshot, drop_snapshot_layer
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/stream_source_layer"
-    if path in _SNAPSHOT_SOURCE_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     docs = load_star_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
@@ -1312,7 +1284,6 @@ def _snapshot_source_layer(spark: SparkSession, sf_dir: str) -> str:
             path,
             mode="append",
         )
-    _SNAPSHOT_SOURCE_BUILT.add(path)
     return path
 
 
@@ -1371,9 +1342,7 @@ def q_streaming_snapshot_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MEDALLION_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _medallion_silver_layer(spark: SparkSession, sf_dir: str) -> str:
     """End-to-end MEDALLION hop: the bronze documents layer (3 manifest
     versions) is consumed AS A STREAM (snapshot_stream source), a
@@ -1389,8 +1358,6 @@ def _medallion_silver_layer(spark: SparkSession, sf_dir: str) -> str:
     from ..streaming.snapshot_sink import append_stream_to_snapshot
 
     silver = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/medallion_silver"
-    if silver in _MEDALLION_BUILT:
-        return silver
     register_snapshot_stream(spark)
     bronze = _snapshot_source_layer(spark, sf_dir)
     drop_snapshot_layer(spark, silver)
@@ -1412,7 +1379,6 @@ def _medallion_silver_layer(spark: SparkSession, sf_dir: str) -> str:
         app_id="bronze_to_silver",
         stats_cols=["doc_id"],
     )
-    _MEDALLION_BUILT.add(silver)
     return silver
 
 
@@ -1452,9 +1418,7 @@ def q_streaming_medallion_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CATALOG_PUBLISH_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _catalog_publish_store(spark: SparkSession, sf_dir: str) -> str:
     """Documents streamed in 4 scale-stable micro-batches; every batch
     publishes TWO tables atomically through the versioned table catalog
@@ -1471,8 +1435,6 @@ def _catalog_publish_store(spark: SparkSession, sf_dir: str) -> str:
     from ..streaming.snapshot_sink import catalog_publish_writer
 
     cat = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/catalog_publish"
-    if cat in _CATALOG_PUBLISH_BUILT:
-        return cat
     docs_layer, stats_layer = f"{cat}_docs", f"{cat}_stats"
     for p in (cat, docs_layer, stats_layer):
         drop_snapshot_layer(spark, p)
@@ -1511,7 +1473,6 @@ def _catalog_publish_store(spark: SparkSession, sf_dir: str) -> str:
     q.processAllAvailable()
     q.stop()
     q.awaitTermination()
-    _CATALOG_PUBLISH_BUILT.add(cat)
     return cat
 
 
@@ -1577,9 +1538,7 @@ def q_streaming_catalog_publish(
     )
 
 
-_STREAM_WAP_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _stream_wap_store(spark: SparkSession, sf_dir: str) -> str:
     """STREAMING WRITE-AUDIT-PUBLISH fixture: the docs table seeds the
     catalog EMPTY at v1, then documents stream in 4 scale-stable
@@ -1595,8 +1554,6 @@ def _stream_wap_store(spark: SparkSession, sf_dir: str) -> str:
     from ..streaming.snapshot_sink import wap_stream_to_catalog
 
     cat = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/stream_wap"
-    if cat in _STREAM_WAP_BUILT:
-        return cat
     docs_layer = f"{cat}_docs"
     # rebuild hygiene must drop the BRANCH ROOT too: branch paths are
     # keyed by batch id, and a fresh checkpoint restarts ids at 0 — a
@@ -1653,7 +1610,6 @@ def _stream_wap_store(spark: SparkSession, sf_dir: str) -> str:
     q.processAllAvailable()
     q.stop()
     q.awaitTermination()
-    _STREAM_WAP_BUILT.add(cat)
     return cat
 
 
@@ -1772,9 +1728,7 @@ def q_streaming_catalog_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CDF_TAIL_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _cdf_tail_layer(spark: SparkSession, sf_dir: str) -> str:
     """Change-feed-enabled customer layer exercising the full
     CDC-maintained lifecycle a CDF tail must survive: v1 bootstrap
@@ -1794,8 +1748,6 @@ def _cdf_tail_layer(spark: SparkSession, sf_dir: str) -> str:
     )
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/cdf_tail_layer"
-    if path in _CDF_TAIL_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     base = load_star_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -1839,13 +1791,10 @@ def _cdf_tail_layer(spark: SparkSession, sf_dir: str) -> str:
             (F.col("c_custkey") % 2 == 1) & (F.col("c_custkey") % 7 == 0)
         ).select("c_custkey"),
     )
-    _CDF_TAIL_BUILT.add(path)
     return path
 
 
-_CATALOG_CDF_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _catalog_cdf_store(spark: SparkSession, sf_dir: str) -> str:
     """CATALOG-PINNED twin of ``_cdf_tail_layer`` (r13 verdict item
     #7): the same 5-step CDC lifecycle on a change-feed customer
@@ -1864,8 +1813,6 @@ def _catalog_cdf_store(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.table_catalog import commit_catalog
 
     cat = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/catalog_cdf"
-    if cat in _CATALOG_CDF_BUILT:
-        return cat
     path = f"{cat}_cust"
     for p in (cat, path):
         drop_snapshot_layer(spark, p)
@@ -1921,7 +1868,6 @@ def _catalog_cdf_store(spark: SparkSession, sf_dir: str) -> str:
         ).select("c_custkey"),
     )
     pin()
-    _CATALOG_CDF_BUILT.add(cat)
     return cat
 
 

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup, packing, text_analysis
 from ..sources.readers import load_star_table
-from .catalog import register
+from .catalog import _tag, fixture_layer, register
 
 #: shared oracle expression: the heuristic quality blend (lockstep with
 #: operators.text_analysis.quality_score; requires `text` + the tok CTE's
@@ -276,9 +276,7 @@ def q_doc_quality_topp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TOKEN_INDEX_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _token_index_group(spark: SparkSession, sf_dir: str) -> str:
     """SECONDARY INVERTED INDEX GROUP (``plans/token_index.py``):
     postings + doclen + corpus-stats ledger, each a snapshot layer,
@@ -287,11 +285,9 @@ def _token_index_group(spark: SparkSession, sf_dir: str) -> str:
     a change feed.  Once per process."""
     from ..sources.snapshots import drop_snapshot_layer
     from . import token_index
-    from .warehouse import _SCRATCH, _tag
+    from .warehouse import _SCRATCH
 
     group = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/token_index"
-    if group in _TOKEN_INDEX_BUILT:
-        return group
     drop_snapshot_layer(spark, group)
     docs = load_star_table(spark, sf_dir, "documents")
     # FIXTURE SIZING: the production default (100k posting rows per
@@ -314,7 +310,6 @@ def _token_index_group(spark: SparkSession, sf_dir: str) -> str:
         splits=2,
         target_rows_per_file=max(100, n_tok // 16),
     )
-    _TOKEN_INDEX_BUILT.add(group)
     return group
 
 
@@ -993,13 +988,12 @@ def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NEARDUP_INDEX_BUILT: set[str] = set()
-
 #: synthetic query-doc id for the lookup fixture: outside the corpus id
 #: range, so i != j holds trivially and the oracle can name it
 _NEARDUP_QID = 1_000_000
 
 
+@fixture_layer
 def _neardup_index_group(spark: SparkSession, sf_dir: str) -> str:
     """Persisted MinHash-LSH near-dup index (``plans/neardup_index.py``)
     over the documents corpus, bootstrapped in two incremental appends —
@@ -1009,11 +1003,9 @@ def _neardup_index_group(spark: SparkSession, sf_dir: str) -> str:
     collapse each delta into one file)."""
     from ..sources.snapshots import drop_snapshot_layer
     from . import neardup_index
-    from .warehouse import _SCRATCH, _tag
+    from .warehouse import _SCRATCH
 
     group = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/neardup_index"
-    if group in _NEARDUP_INDEX_BUILT:
-        return group
     drop_snapshot_layer(spark, group)
     docs = load_star_table(spark, sf_dir, "documents")
     # aim ~64 files across the layer regardless of corpus size (one
@@ -1030,7 +1022,6 @@ def _neardup_index_group(spark: SparkSession, sf_dir: str) -> str:
         splits=2,
         target_rows_per_file=max(250, n_docs * 32 // 64),
     )
-    _NEARDUP_INDEX_BUILT.add(group)
     return group
 
 
@@ -1101,9 +1092,7 @@ def q_indexed_neardup_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NEARDUP_CHURN_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _neardup_churn_group(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Near-dup index maintained through CHURN: a docs snapshot layer
     bootstraps with doc_id % 3 != 0, the index builds from that state,
@@ -1114,12 +1103,10 @@ def _neardup_churn_group(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     docs state = documents WHERE doc_id % 10 != 0."""
     from ..sources import snapshots as snap
     from . import neardup_index
-    from .warehouse import _SCRATCH, _tag
+    from .warehouse import _SCRATCH
 
     root = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/neardup_churn"
     grp, docs_path = f"{root}/index", f"{root}/docs"
-    if root in _NEARDUP_CHURN_BUILT:
-        return grp, docs_path
     snap.drop_snapshot_layer(spark, root)
     docs = load_star_table(spark, sf_dir, "documents").select(
         "doc_id", "text"
@@ -1172,7 +1159,6 @@ def _neardup_churn_group(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         ),
         target_rows_per_file=tgt,
     )
-    _NEARDUP_CHURN_BUILT.add(root)
     return grp, docs_path
 
 
@@ -1270,13 +1256,12 @@ def q_indexed_neardup_batch_admission(
     )
 
 
-_STREAM_NEARDUP_BUILT: set[str] = set()
-
 #: observability: maintenance runs fired by the stream governor
 #: (builder-asserted >= 1 — the loop must actually close mid-stream)
 _STREAM_NEARDUP_STATS = {"batches": 0, "maintenance_runs": 0}
 
 
+@fixture_layer
 def _stream_neardup_group(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Near-dup index maintained ENTIRELY BY A STREAM — the dedup twin
     of vectors._stream_ann_group: the docs layer's keyed CDF stream
@@ -1300,12 +1285,10 @@ def _stream_neardup_group(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         snapshot_cdf_stream_schema,
     )
     from . import neardup_index
-    from .warehouse import _SCRATCH, _tag
+    from .warehouse import _SCRATCH
 
     root = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/stream_neardup"
     grp, docs_path = f"{root}/index", f"{root}/docs"
-    if root in _STREAM_NEARDUP_BUILT:
-        return grp, docs_path
     snap.drop_snapshot_layer(spark, root)
     ckpt = f"{root}_ckpt"
     shutil.rmtree(ckpt, ignore_errors=True)
@@ -1424,7 +1407,6 @@ def _stream_neardup_group(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             "stream governor never ran maintenance: the fixture must "
             "exercise the mid-stream compaction loop"
         )
-    _STREAM_NEARDUP_BUILT.add(root)
     return grp, docs_path
 
 
@@ -3011,9 +2993,7 @@ def q_train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_INDEX_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _stream_maintained_index(spark: SparkSession, sf_dir: str) -> str:
     """An index group maintained ENTIRELY BY A STREAM: the docs layer's
     change-data-feed stream (bootstrap inserts, then an equality-delete
@@ -3040,11 +3020,9 @@ def _stream_maintained_index(spark: SparkSession, sf_dir: str) -> str:
         drop_snapshot_layer,
     )
     from . import token_index
-    from .warehouse import _SCRATCH, _tag
+    from .warehouse import _SCRATCH
 
     group = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/stream_index"
-    if group in _STREAM_INDEX_BUILT:
-        return group
     docs_layer = f"{group}_docs"
     ckpt = f"{group}_ckpt"
     for p in (group, docs_layer):
@@ -3126,7 +3104,6 @@ def _stream_maintained_index(spark: SparkSession, sf_dir: str) -> str:
     q.processAllAvailable()
     q.stop()
     q.awaitTermination()
-    _STREAM_INDEX_BUILT.add(group)
     return group
 
 
@@ -3172,9 +3149,7 @@ def q_streaming_index_maintenance(
     )
 
 
-_AUTO_MAINT_STATS: dict[str, dict] = {}
-
-
+@fixture_layer
 def _auto_maint_index(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
     """Stream-maintained index WITH the AUTO-MAINTENANCE GOVERNOR wired
     into the sink (r10 verdict item 8): a bootstrap insert commit plus
@@ -3200,11 +3175,9 @@ def _auto_maint_index(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
         drop_snapshot_layer,
     )
     from . import token_index
-    from .warehouse import _SCRATCH, _tag
+    from .warehouse import _SCRATCH
 
     group = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/auto_maint_index"
-    if group in _AUTO_MAINT_STATS:
-        return group, _AUTO_MAINT_STATS[group]
     docs_layer = f"{group}_docs"
     ckpt = f"{group}_ckpt"
     for p in (group, docs_layer):
@@ -3306,7 +3279,6 @@ def _auto_maint_index(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
         q.processAllAvailable()
     q.stop()
     q.awaitTermination()
-    _AUTO_MAINT_STATS[group] = stats
     return group, stats
 
 

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..operators import similarity
 from ..sources.readers import load_star_table
-from .catalog import register
+from .catalog import fixture_layer, register
 from ..operators.materialize import materialize
 
 #: query vectors: the first 8 ids — broadcast side of the search
@@ -118,10 +118,14 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.cosine_neardup_pairs(emb, threshold=0.4, n_blocks=8)
 
 
-#: fitted IVF quantizers per (sf_dir, k, iters): an IVF index is built
-#: once and queried many times; refitting on every query call would
-#: misstate the cost model the operator exists to demonstrate
-_IVF_INDEX_CACHE: dict = {}
+@fixture_layer
+def _ivf_centroids(spark: SparkSession, sf_dir: str):
+    """The 16-cell, 1-iteration IVF quantizer shared by ann_ivf_topk,
+    semdedup_pairs and ann_recall_eval: an IVF index is built once and
+    queried many times; refitting on every query call would misstate
+    the cost model the operator exists to demonstrate."""
+    emb = load_star_table(spark, sf_dir, "embeddings")
+    return similarity.ivf_fit_centroids(emb, n_centroids=16, iters=1)
 
 
 def _ivf_cells_prefix(n_centroids: int = 16) -> str:
@@ -213,11 +217,6 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    key = (sf_dir, 16, 1)
-    if key not in _IVF_INDEX_CACHE:
-        _IVF_INDEX_CACHE[key] = similarity.ivf_fit_centroids(
-            emb, n_centroids=16, iters=1
-        )
     return similarity.ivf_topk(
         emb,
         queries,
@@ -225,7 +224,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_centroids=16,
         n_probe=6,
         iters=1,
-        centroids=_IVF_INDEX_CACHE[key],
+        centroids=_ivf_centroids(spark, sf_dir),
     )
 
 
@@ -462,20 +461,24 @@ WHERE list_inner_product(ea.v, eb.v)
 )
 def q_semdedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_star_table(spark, sf_dir, "embeddings")
-    key = (sf_dir, 16, 1)
-    if key not in _IVF_INDEX_CACHE:
-        _IVF_INDEX_CACHE[key] = similarity.ivf_fit_centroids(
-            emb, n_centroids=16, iters=1
-        )
     return similarity.semdedup_pairs(
-        emb, _IVF_INDEX_CACHE[key], threshold=0.35
+        emb, _ivf_centroids(spark, sf_dir), threshold=0.35
     )
 
 
 _PQ_M = 4
 _PQ_CODES = 16
 _PQ_CAND = 40
-_PQ_INDEX_CACHE: dict = {}
+
+
+@fixture_layer
+def _pq_codebooks(spark: SparkSession, sf_dir: str):
+    """Per-subspace PQ codebooks for ann_pq_topk, fitted once per process
+    like the IVF quantizer."""
+    emb = load_star_table(spark, sf_dir, "embeddings")
+    return similarity.pq_fit_codebooks(
+        emb, dims=_DIMS, m=_PQ_M, n_codes=_PQ_CODES, iters=1
+    )
 
 
 def _pq_subspace_blocks(
@@ -593,11 +596,6 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    key = (sf_dir, _PQ_M, _PQ_CODES)
-    if key not in _PQ_INDEX_CACHE:
-        _PQ_INDEX_CACHE[key] = similarity.pq_fit_codebooks(
-            emb, dims=_DIMS, m=_PQ_M, n_codes=_PQ_CODES, iters=1
-        )
     return similarity.pq_topk(
         emb,
         queries,
@@ -606,7 +604,7 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         m=_PQ_M,
         n_codes=_PQ_CODES,
         n_candidates=_PQ_CAND,
-        codebooks=_PQ_INDEX_CACHE[key],
+        codebooks=_pq_codebooks(spark, sf_dir),
     )
 
 
@@ -676,11 +674,6 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = similarity.cosine_topk(emb, queries, k=_TOP_K).select(
         "query_id", "neighbor_id"
     )
-    key = (sf_dir, 16, 1)
-    if key not in _IVF_INDEX_CACHE:
-        _IVF_INDEX_CACHE[key] = similarity.ivf_fit_centroids(
-            emb, n_centroids=16, iters=1
-        )
     approx = (
         similarity.ivf_topk(
             emb,
@@ -689,7 +682,7 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_centroids=16,
             n_probe=6,
             iters=1,
-            centroids=_IVF_INDEX_CACHE[key],
+            centroids=_ivf_centroids(spark, sf_dir),
         )
         .select("query_id", "neighbor_id")
         .withColumn("__hit", F.lit(1))
@@ -1386,9 +1379,7 @@ def refresh_ann_assignments(
         changes.unpersist()
 
 
-_ANN_CDF_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _ann_cdf_group(spark: SparkSession, sf_dir: str) -> str:
     """Fixture: an embeddings CDF layer hit by a delete batch
     (vec_id % 7 = 3) and an insert batch (negated mirrors of
@@ -1404,8 +1395,6 @@ def _ann_cdf_group(spark: SparkSession, sf_dir: str) -> str:
 
     tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
     group = scratch_dir("snapshots", tag, "ann_cdf")
-    if group in _ANN_CDF_BUILT:
-        return group
     emb_layer = f"{group}/embeddings"
     for p in (emb_layer, f"{group}/assign"):
         snap.drop_snapshot_layer(spark, p)
@@ -1461,7 +1450,6 @@ def _ann_cdf_group(spark: SparkSession, sf_dir: str) -> str:
         ),
         model_layer=scratch_dir("snapshots", tag, "ivf_model"),
     )
-    _ANN_CDF_BUILT.add(group)
     return group
 
 
@@ -1914,14 +1902,13 @@ def q_ann_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_ANN_BUILT: set[str] = set()
-
 #: observability: governor activity on the ANN stream (builder-asserted
 #: >= 1 maintenance run — the loop must close MID-STREAM)
 _STREAM_ANN_STATS = {"batches": 0, "sweeps": 0, "maintenance_runs": 0,
                      "actions": 0}
 
 
+@fixture_layer
 def _stream_ann_group(spark: SparkSession, sf_dir: str) -> str:
     """Vector tier maintained ENTIRELY BY A STREAM — the ANN twin of
     textops._stream_maintained_index: the embeddings layer's keyed CDF
@@ -1953,8 +1940,6 @@ def _stream_ann_group(spark: SparkSession, sf_dir: str) -> str:
 
     tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
     group = scratch_dir("snapshots", tag, "stream_ann")
-    if group in _STREAM_ANN_BUILT:
-        return group
     emb_layer = f"{group}/embeddings"
     ckpt = f"{group}_ckpt"
     for p in (emb_layer, f"{group}/assign"):
@@ -2066,7 +2051,6 @@ def _stream_ann_group(spark: SparkSession, sf_dir: str) -> str:
             "ANN stream governor never ran maintenance: the fixture "
             "must exercise the mid-stream compaction loop"
         )
-    _STREAM_ANN_BUILT.add(group)
     return group
 
 
@@ -2207,9 +2191,7 @@ def maintain_ann_assignments(
     return {"assign": actions}
 
 
-_PLAIN_ANN_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _plain_ann_group(spark: SparkSession, sf_dir: str) -> str:
     """UNCHURNED assignment layer over the raw embeddings — the dense
     tower's serving state for hybrid retrieval: the shared persisted
@@ -2224,8 +2206,6 @@ def _plain_ann_group(spark: SparkSession, sf_dir: str) -> str:
 
     tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
     group = scratch_dir("snapshots", tag, "ann_plain")
-    if group in _PLAIN_ANN_BUILT:
-        return group
     snap.drop_snapshot_layer(spark, f"{group}/assign")
     emb = load_star_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
@@ -2237,7 +2217,6 @@ def _plain_ann_group(spark: SparkSession, sf_dir: str) -> str:
         model_layer=scratch_dir("snapshots", tag, "ivf_model"),
         target_rows_per_file=63,
     )
-    _PLAIN_ANN_BUILT.add(group)
     return group
 
 
@@ -3651,9 +3630,7 @@ cand AS (SELECT query_id, neighbor_id FROM shortlist WHERE rn <= {n_cand}),
 {_RERANK_SQL}"""
 
 
-_IVFADC_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _ivfadc_group(spark: SparkSession, sf_dir: str) -> str:
     """IVFADC group over the embeddings table, once per process —
     SHARING the scratch coarse-quantizer and PQ-codebook model layers
@@ -3667,8 +3644,6 @@ def _ivfadc_group(spark: SparkSession, sf_dir: str) -> str:
 
     tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
     group = scratch_dir("snapshots", tag, "ivfadc")
-    if group in _IVFADC_BUILT:
-        return group
     drop_snapshot_layer(spark, f"{group}/assign")
     emb = load_star_table(spark, sf_dir, "embeddings")
     n = emb.count()
@@ -3680,7 +3655,6 @@ def _ivfadc_group(spark: SparkSession, sf_dir: str) -> str:
         pq_layer=scratch_dir("snapshots", tag, "pq_model"),
         target_rows_per_file=max(32, n // 12),
     )
-    _IVFADC_BUILT.add(group)
     return group
 
 
@@ -3846,14 +3820,13 @@ def maintain_ann_ivfadc(
     return {"assign": actions}
 
 
-_STREAM_IVFADC_BUILT: set[str] = set()
-
 #: observability: governor activity on the IVFADC stream
 #: (builder-asserted >= 1 maintenance run)
 _STREAM_IVFADC_STATS = {"batches": 0, "sweeps": 0, "maintenance_runs": 0,
                         "actions": 0}
 
 
+@fixture_layer
 def _stream_ivfadc_group(spark: SparkSession, sf_dir: str) -> str:
     """IVFADC tier maintained ENTIRELY BY A STREAM — the fourth and
     final index family through the CDF-stream + shared-governor loop
@@ -3880,8 +3853,6 @@ def _stream_ivfadc_group(spark: SparkSession, sf_dir: str) -> str:
 
     tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
     group = scratch_dir("snapshots", tag, "stream_ivfadc")
-    if group in _STREAM_IVFADC_BUILT:
-        return group
     emb_layer = f"{group}/embeddings"
     ckpt = f"{group}_ckpt"
     for p in (emb_layer, f"{group}/assign"):
@@ -3987,7 +3958,6 @@ def _stream_ivfadc_group(spark: SparkSession, sf_dir: str) -> str:
             "IVFADC stream governor never ran maintenance: the fixture "
             "must exercise the mid-stream compaction loop"
         )
-    _STREAM_IVFADC_BUILT.add(group)
     return group
 
 
@@ -4037,9 +4007,7 @@ def q_streaming_ivfadc_maintenance(
     return ann_ivfadc_topk(spark, group, queries, assert_pruned=False)
 
 
-_IVFADC_RES_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _ivfadc_residual_group(spark: SparkSession, sf_dir: str) -> str:
     """Residual-encoded IVFADC group — shares the coarse-quantizer
     model layer with the raw group (same cells, so recall deltas are
@@ -4052,8 +4020,6 @@ def _ivfadc_residual_group(spark: SparkSession, sf_dir: str) -> str:
 
     tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
     group = scratch_dir("snapshots", tag, "ivfadc_res")
-    if group in _IVFADC_RES_BUILT:
-        return group
     drop_snapshot_layer(spark, f"{group}/assign")
     emb = load_star_table(spark, sf_dir, "embeddings")
     n = emb.count()
@@ -4066,7 +4032,6 @@ def _ivfadc_residual_group(spark: SparkSession, sf_dir: str) -> str:
         by_residual=True,
         target_rows_per_file=max(32, n // 12),
     )
-    _IVFADC_RES_BUILT.add(group)
     return group
 
 

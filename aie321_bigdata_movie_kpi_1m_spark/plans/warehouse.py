@@ -16,7 +16,6 @@ roundtrip queries (sandbox boundary: never outside the repo).
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -25,19 +24,9 @@ from ..functions.money import cents as _cents
 from ..operators.ids import assign_contiguous_ids
 from ..session import scratch_dir
 from ..sources.readers import load_star_table
-from .catalog import register
+from .catalog import _tag, fixture_layer, register
 
 _SCRATCH = scratch_dir()
-
-
-def _tag(sf_dir: str) -> str:
-    """Filesystem/table-name-safe tag for one testdata scale."""
-    base = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    return re.sub(r"[^A-Za-z0-9_]", "_", base)
-
-
-#: per-process fixture marker for the compaction query's shattered input
-_COMPACT_INPUT_BUILT: set[str] = set()
 
 
 @register(
@@ -220,6 +209,19 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@fixture_layer
+def _compact_input(spark: SparkSession, sf_dir: str) -> str:
+    """lineitem shattered into 48 tiny files: the pathological input the
+    compactor is exercised on.  Fixture scaffolding, not part of the
+    operation under measurement, so it is written once per process; the
+    compaction itself re-runs per call."""
+    small = f"{_SCRATCH}/compact/{_tag(sf_dir)}/small"
+    load_star_table(spark, sf_dir, "lineitem").repartition(48).write.mode(
+        "overwrite"
+    ).parquet(small)
+    return small
+
+
 @register(
     "compact_layer_roundtrip",
     """
@@ -242,22 +244,13 @@ GROUP BY l_returnflag
 def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.sinks import compact_parquet_layer
 
-    tag = _tag(sf_dir)
-    small = f"{_SCRATCH}/compact/{tag}/small"
-    packed = f"{_SCRATCH}/compact/{tag}/packed"
-    li = load_star_table(spark, sf_dir, "lineitem")
-    # the 48-file shatter is FIXTURE scaffolding (the pathological input
-    # the compactor is being exercised on), not part of the operation
-    # under measurement — write it once per process like every other
-    # fixture layer; the compaction itself re-runs per call
-    # the in-memory marker is only a fast-path hint: also gate on the
+    small = _compact_input(spark, sf_dir)
+    packed = f"{_SCRATCH}/compact/{_tag(sf_dir)}/packed"
+    # the fixture cache is only a fast-path hint: also gate on the
     # _SUCCESS marker so an external wipe of .scratch mid-process
     # triggers a rebuild instead of a missing-input failure (ADVICE r15)
-    if small not in _COMPACT_INPUT_BUILT or not os.path.exists(
-        f"{small}/_SUCCESS"
-    ):
-        li.repartition(48).write.mode("overwrite").parquet(small)
-        _COMPACT_INPUT_BUILT.add(small)
+    if not os.path.exists(f"{small}/_SUCCESS"):
+        _compact_input.__wrapped__(spark, sf_dir)
     compact_parquet_layer(spark, small, packed, target_file_bytes=64 << 20)
     back = spark.read.parquet(packed)
     return back.groupBy("l_returnflag").agg(
@@ -472,9 +465,7 @@ v3 AS (SELECT * FROM v2 WHERE c_mktsegment = 'BUILDING')
 """
 
 
-_SNAPSHOT_LAYERS_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _snapshot_layer(spark: SparkSession, sf_dir: str) -> str:
     """(Re)build the versioned demo layer: v1 = customer slice
     (overwrite), v2 = appended synthetic BUILDING customers (append —
@@ -486,8 +477,6 @@ def _snapshot_layer(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.snapshots import commit_snapshot, drop_snapshot_layer
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/customer_layer"
-    if path in _SNAPSHOT_LAYERS_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     base = load_star_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -504,7 +493,6 @@ def _snapshot_layer(spark: SparkSession, sf_dir: str) -> str:
         F.col("c_mktsegment") == "BUILDING"
     )
     commit_snapshot(spark, v3, path, mode="overwrite")
-    _SNAPSHOT_LAYERS_BUILT.add(path)
     return path
 
 
@@ -575,19 +563,15 @@ def q_snapshot_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return snapshot_changes(spark, path, 1, 3)
 
 
-_DPP_LAYERS_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _orders_partitioned_layer(spark: SparkSession, sf_dir: str) -> str:
     """Orders written partitioned by o_orderpriority (5 hive-style
     partitions) — the layout that lets a selective dim join prune whole
     partitions at runtime.  Built once per process."""
     path = f"{_SCRATCH}/dpp/{_tag(sf_dir)}/orders_by_prio"
-    if path not in _DPP_LAYERS_BUILT:
-        load_star_table(spark, sf_dir, "orders").write.mode(
-            "overwrite"
-        ).partitionBy("o_orderpriority").parquet(path)
-        _DPP_LAYERS_BUILT.add(path)
+    load_star_table(spark, sf_dir, "orders").write.mode(
+        "overwrite"
+    ).partitionBy("o_orderpriority").parquet(path)
     return path
 
 
@@ -652,9 +636,7 @@ def q_dpp_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SKIP_LAYERS_BUILT: dict[str, str] = {}
-
-
+@fixture_layer
 def _orders_skip_layer(spark: SparkSession, sf_dir: str) -> str:
     """Orders committed to a snapshot layer range-clustered on
     o_orderkey (8 disjoint-range files) with per-file min/max stats in
@@ -663,8 +645,6 @@ def _orders_skip_layer(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.snapshots import commit_snapshot, drop_snapshot_layer
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/orders_skip_layer"
-    if path in _SKIP_LAYERS_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     orders = load_star_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
@@ -675,7 +655,6 @@ def _orders_skip_layer(spark: SparkSession, sf_dir: str) -> str:
         path,
         stats_cols=["o_orderkey"],
     )
-    _SKIP_LAYERS_BUILT[path] = path
     return path
 
 
@@ -887,9 +866,7 @@ def q_snapshot_incremental_refresh_keyed(
     )
 
 
-_COMPACT_LAYERS_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _compact_layer(spark: SparkSession, sf_dir: str) -> str:
     """Dedicated layer for the in-layer compaction roundtrip: v1 = the
     customer slice deliberately sprayed over 12 small files, v2 = an
@@ -906,8 +883,6 @@ def _compact_layer(spark: SparkSession, sf_dir: str) -> str:
     )
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/compact_layer"
-    if path in _COMPACT_LAYERS_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     base = load_star_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -925,7 +900,6 @@ def _compact_layer(spark: SparkSession, sf_dir: str) -> str:
             f"rewrite_snapshot did not compact: {n_before} -> "
             f"{report['files_after']} files"
         )
-    _COMPACT_LAYERS_BUILT.add(path)
     return path
 
 
@@ -967,9 +941,7 @@ def q_snapshot_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MERGE_LAYERS_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _merge_layer(spark: SparkSession, sf_dir: str) -> str:
     """Layer for the copy-on-write MERGE roundtrip: v1 = the customer
     slice RANGE-CLUSTERED on the key across 8 files with key stats in
@@ -986,8 +958,6 @@ def _merge_layer(spark: SparkSession, sf_dir: str) -> str:
     )
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/merge_layer"
-    if path in _MERGE_LAYERS_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     base = load_star_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -1016,7 +986,6 @@ def _merge_layer(spark: SparkSession, sf_dir: str) -> str:
         raise AssertionError(
             f"merge rewrote every file: {report} — file pruning failed"
         )
-    _MERGE_LAYERS_BUILT.add(path)
     return path
 
 
@@ -1067,9 +1036,7 @@ def q_snapshot_merge_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CLUSTER_LAYERS_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _cluster_layer(spark: SparkSession, sf_dir: str) -> str:
     """Layer for the clustered-rewrite roundtrip: v1 = the customer slice
     hash-scrambled across 6 files (every file straddles the whole key
@@ -1088,8 +1055,6 @@ def _cluster_layer(spark: SparkSession, sf_dir: str) -> str:
     )
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/cluster_layer"
-    if path in _CLUSTER_LAYERS_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     base = load_star_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -1106,7 +1071,6 @@ def _cluster_layer(spark: SparkSession, sf_dir: str) -> str:
             f"clustered rewrite did not sharpen skipping: "
             f"{len(before)} -> {len(after)} files kept for {band}"
         )
-    _CLUSTER_LAYERS_BUILT.add(path)
     return path
 
 
@@ -1143,9 +1107,7 @@ def q_snapshot_cluster_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BLOOM_LAYERS_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _bloom_layer(spark: SparkSession, sf_dir: str) -> str:
     """Layer for the Bloom point-lookup roundtrip: the documents slice
     hash-scrambled across 8 files — the layout where min/max stats are
@@ -1160,8 +1122,6 @@ def _bloom_layer(spark: SparkSession, sf_dir: str) -> str:
     )
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/bloom_layer"
-    if path in _BLOOM_LAYERS_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     docs = load_star_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
@@ -1186,7 +1146,6 @@ def _bloom_layer(spark: SparkSession, sf_dir: str) -> str:
             f"bloom index did not out-prune min/max stats: all={len(all_f)} "
             f"range={len(by_range)} bloom={len(by_bloom)}"
         )
-    _BLOOM_LAYERS_BUILT.add(path)
     return path
 
 
@@ -1219,9 +1178,7 @@ def q_snapshot_bloom_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DELETE_LAYERS_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _delete_layer(spark: SparkSession, sf_dir: str) -> str:
     """Layer for the merge-on-read DELETE roundtrip: documents slice
     key-clustered into 8 files, then ``doc_id % 10 = 3`` deleted as
@@ -1238,8 +1195,6 @@ def _delete_layer(spark: SparkSession, sf_dir: str) -> str:
     )
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/delete_layer"
-    if path in _DELETE_LAYERS_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     docs = load_star_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
@@ -1258,7 +1213,6 @@ def _delete_layer(spark: SparkSession, sf_dir: str) -> str:
         and snapshot_row_count(spark, path) == n_total - res["rows_deleted"]
     ):
         raise AssertionError(f"merge-on-read delete contract broken: {res}")
-    _DELETE_LAYERS_BUILT.add(path)
     return path
 
 
@@ -1298,9 +1252,7 @@ def q_snapshot_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STATS_BROADCAST_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _stats_broadcast_views(spark: SparkSession, sf_dir: str) -> str:
     """Dimension layer + stats-driven SQL facade for the broadcast-join
     roundtrip: the nation slice committed as a snapshot layer (sizes
@@ -1321,8 +1273,6 @@ def _stats_broadcast_views(spark: SparkSession, sf_dir: str) -> str:
     tag = _tag(sf_dir)
     path = f"{_SCRATCH}/snapshots/{tag}/stats_bcast_dim"
     view = f"nation_snap_{tag}"
-    if path in _STATS_BROADCAST_BUILT:
-        return view
     drop_snapshot_layer(spark, path)
     commit_snapshot(
         spark,
@@ -1372,7 +1322,6 @@ def _stats_broadcast_views(spark: SparkSession, sf_dir: str) -> str:
             )
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    _STATS_BROADCAST_BUILT.add(path)
     return view
 
 
@@ -1415,9 +1364,7 @@ def q_snapshot_stats_broadcast_join(
     )
 
 
-_EQ_DELETE_LAYERS_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _eq_delete_layer(spark: SparkSession, sf_dir: str) -> str:
     """Layer for the KEY-EQUALITY delete roundtrip: v1 = customer slice
     range-clustered on the key (8 files, key stats), v2 =
@@ -1434,8 +1381,6 @@ def _eq_delete_layer(spark: SparkSession, sf_dir: str) -> str:
     )
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/eq_delete_layer"
-    if path in _EQ_DELETE_LAYERS_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     base = load_star_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -1463,7 +1408,6 @@ def _eq_delete_layer(spark: SparkSession, sf_dir: str) -> str:
         mode="append",
         stats_cols=["c_custkey"],
     )
-    _EQ_DELETE_LAYERS_BUILT.add(path)
     return path
 
 
@@ -1541,9 +1485,7 @@ def q_snapshot_count_metadata_only(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-_ZORDER_LAYERS_BUILT: dict[str, tuple[int, int, int, int]] = {}
-
-
+@fixture_layer
 def _zorder_layer(spark: SparkSession, sf_dir: str) -> tuple[str, tuple]:
     """Layer for the Z-order rewrite roundtrip: a lineitem slice
     hash-scrambled across 16 files (v1 — the builder asserts a 10%
@@ -1563,8 +1505,6 @@ def _zorder_layer(spark: SparkSession, sf_dir: str) -> tuple[str, tuple]:
     )
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/zorder_layer"
-    if path in _ZORDER_LAYERS_BUILT:
-        return path, _ZORDER_LAYERS_BUILT[path]
     drop_snapshot_layer(spark, path)
     li = load_star_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_quantity"
@@ -1614,7 +1554,6 @@ def _zorder_layer(spark: SparkSession, sf_dir: str) -> tuple[str, tuple]:
             f"p={len(post_p)} both={len(both)}"
         )
     bounds = (olo, ohi, plo, phi)
-    _ZORDER_LAYERS_BUILT[path] = bounds
     return path, bounds
 
 
@@ -1700,9 +1639,7 @@ def q_snapshot_minmax_metadata_only(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-_BINPACK_LAYERS_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _binpack_layer(spark: SparkSession, sf_dir: str) -> str:
     """Layer for the bin-packing compaction roundtrip: one healthy base
     file (90% of documents) plus three tiny append files (the remaining
@@ -1718,8 +1655,6 @@ def _binpack_layer(spark: SparkSession, sf_dir: str) -> str:
     )
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/binpack_layer"
-    if path in _BINPACK_LAYERS_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     docs = load_star_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
@@ -1757,7 +1692,6 @@ def _binpack_layer(spark: SparkSession, sf_dir: str) -> str:
             f"bin-packing contract broken: {res}, "
             f"before={len(before)} after={len(after)} big_carried={big in after}"
         )
-    _BINPACK_LAYERS_BUILT.add(path)
     return path
 
 
@@ -1831,9 +1765,7 @@ def q_snapshot_history_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_RESTORE_LAYERS_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _restore_layer(spark: SparkSession, sf_dir: str) -> str:
     """Layer for the RESTORE roundtrip: v1 = the full documents slice,
     v2 = a botched overwrite (a 10% subset — the bad-job scenario),
@@ -1849,8 +1781,6 @@ def _restore_layer(spark: SparkSession, sf_dir: str) -> str:
     )
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/restore_layer"
-    if path in _RESTORE_LAYERS_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     docs = load_star_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
@@ -1869,7 +1799,6 @@ def _restore_layer(spark: SparkSession, sf_dir: str) -> str:
         and snapshot_files(spark, path, 3) == snapshot_files(spark, path, 1)
     ):
         raise AssertionError(f"restore contract broken: v3={v3} hist={hist}")
-    _RESTORE_LAYERS_BUILT.add(path)
     return path
 
 
@@ -1937,9 +1866,7 @@ def q_snapshot_restore_provenance(
     )
 
 
-_IVM_JOIN_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _ivm_join_layers(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Two append-only snapshot layers for JOIN-view maintenance: the
     fact (orders) and the dim (customer), each committed as v1 = a
@@ -1950,8 +1877,6 @@ def _ivm_join_layers(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
     base = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/ivm_join"
     pa, pb = f"{base}/fact", f"{base}/dim"
-    if base in _IVM_JOIN_BUILT:
-        return pa, pb
     orders = load_star_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -1965,7 +1890,6 @@ def _ivm_join_layers(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         drop_snapshot_layer(spark, p)
         commit_snapshot(spark, df.filter(gate).coalesce(2), p)
         commit_snapshot(spark, df.filter(~gate).coalesce(2), p, mode="append")
-    _IVM_JOIN_BUILT.add(base)
     return pa, pb
 
 
@@ -2029,9 +1953,7 @@ def q_ivm_join_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PUSHDOWN_LAYERS_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _orders_pushdown_layer(spark: SparkSession, sf_dir: str) -> str:
     """Orders committed range-clustered on o_orderkey with BOTH per-file
     min/max stats AND the Bloom point index — the layout the pushdown
@@ -2040,8 +1962,6 @@ def _orders_pushdown_layer(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.snapshots import commit_snapshot, drop_snapshot_layer
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/orders_pushdown_layer"
-    if path in _PUSHDOWN_LAYERS_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     orders = load_star_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
@@ -2053,7 +1973,6 @@ def _orders_pushdown_layer(spark: SparkSession, sf_dir: str) -> str:
         stats_cols=["o_orderkey"],
         bloom_col="o_orderkey",
     )
-    _PUSHDOWN_LAYERS_BUILT.add(path)
     return path
 
 
@@ -2120,9 +2039,7 @@ def q_snapshot_pushdown_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return band.unionByName(point)
 
 
-_HIDDEN_PART_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _hidden_partition_layer(spark: SparkSession, sf_dir: str) -> str:
     """Customer committed under HIDDEN PARTITIONING: a
     ``bucket(8, c_custkey)`` partition spec with ``cluster=True``, so
@@ -2136,8 +2053,6 @@ def _hidden_partition_layer(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.snapshots import commit_snapshot, drop_snapshot_layer
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/hidden_partition_layer"
-    if path in _HIDDEN_PART_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     cust = load_star_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -2162,7 +2077,6 @@ def _hidden_partition_layer(spark: SparkSession, sf_dir: str) -> str:
         raise AssertionError(
             f"hidden-partition probe did not prune: rows={n}, plan={log}"
         )
-    _HIDDEN_PART_BUILT.add(path)
     return path
 
 
@@ -2208,9 +2122,7 @@ def q_snapshot_hidden_partition_prune(
     )
 
 
-_EVOLVED_PART_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _evolved_partition_layer(spark: SparkSession, sf_dir: str) -> str:
     """PARTITION-SPEC EVOLUTION fixture: the even-key half of customer
     committed under ``bucket(4, c_custkey)``, the odd-key half APPENDED
@@ -2228,8 +2140,6 @@ def _evolved_partition_layer(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.snapshots import commit_snapshot, drop_snapshot_layer
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/evolved_partition_layer"
-    if path in _EVOLVED_PART_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     cust = load_star_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -2266,7 +2176,6 @@ def _evolved_partition_layer(spark: SparkSession, sf_dir: str) -> str:
             f"evolved-spec probe did not prune both generations: "
             f"rows={n}, plan={log}"
         )
-    _EVOLVED_PART_BUILT.add(path)
     return path
 
 
@@ -2309,9 +2218,7 @@ def q_snapshot_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-_WAP_STAR_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _wap_star_store(spark: SparkSession, sf_dir: str) -> str:
     """MULTI-TABLE WAP fixture: facts (orders with o_orderkey % 4 = 0)
     + dims (customer segments) published at catalog v1; a facts branch
@@ -2330,8 +2237,6 @@ def _wap_star_store(spark: SparkSession, sf_dir: str) -> str:
     )
 
     cat = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/wap_star"
-    if cat in _WAP_STAR_BUILT:
-        return cat
     pf, pd = f"{cat}_facts", f"{cat}_dims"
     bf, bd = f"{cat}_bfacts", f"{cat}_bdims"
     for p in (cat, pf, pd, bf, bd):
@@ -2397,7 +2302,6 @@ def _wap_star_store(spark: SparkSession, sf_dir: str) -> str:
             bd: {"labeled": "c_mktsegment IS NOT NULL"},
         },
     )
-    _WAP_STAR_BUILT.add(cat)
     return cat
 
 
@@ -2464,9 +2368,7 @@ def q_snapshot_wap_publish_many(spark: SparkSession, sf_dir: str) -> DataFrame:
     return level(1).unionByName(level(2))
 
 
-_CATALOG_TXN_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _catalog_txn_store(spark: SparkSession, sf_dir: str) -> str:
     """Two-table catalog exercising multi-table ATOMIC commits: txn 1
     publishes facts (orders with o_orderkey % 3 = 0) + dims (customer
@@ -2479,8 +2381,6 @@ def _catalog_txn_store(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.table_catalog import multi_table_commit
 
     cat = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/catalog_txn"
-    if cat in _CATALOG_TXN_BUILT:
-        return cat
     pa = f"{cat}_facts"
     pb = f"{cat}_dims"
     for p in (cat, pa, pb):
@@ -2527,7 +2427,6 @@ def _catalog_txn_store(spark: SparkSession, sf_dir: str) -> str:
             ),
         ],
     )
-    _CATALOG_TXN_BUILT.add(cat)
     return cat
 
 
@@ -2595,9 +2494,7 @@ def q_snapshot_catalog_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return level(1).unionByName(level(2))
 
 
-_WAP_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _wap_store(spark: SparkSession, sf_dir: str) -> str:
     """WRITE-AUDIT-PUBLISH fixture: documents published at catalog v1,
     then a WAP branch (zero-copy clone of the pinned state) takes an
@@ -2619,8 +2516,6 @@ def _wap_store(spark: SparkSession, sf_dir: str) -> str:
     )
 
     cat = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/wap_catalog"
-    if cat in _WAP_BUILT:
-        return cat
     docs_layer, branch = f"{cat}_docs", f"{cat}_audit"
     for p in (cat, docs_layer, branch):
         # rebuild hygiene drops sources AND their WAP branches together,
@@ -2654,7 +2549,6 @@ def _wap_store(spark: SparkSession, sf_dir: str) -> str:
     wap_publish(
         spark, cat, branch, checks={"ids_present": "doc_id IS NOT NULL"}
     )
-    _WAP_BUILT.add(cat)
     return cat
 
 
@@ -2716,9 +2610,7 @@ def q_snapshot_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     return level(1).unionByName(level(2))
 
 
-_MERGE_CDF_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _orders_merge_cdf_layer(spark: SparkSession, sf_dir: str) -> str:
     """Orders committed CHANGE-FEED-enabled and key-clustered, then
     MERGEd with a deterministic CDC batch: every 7th order re-priced
@@ -2733,8 +2625,6 @@ def _orders_merge_cdf_layer(spark: SparkSession, sf_dir: str) -> str:
     )
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/orders_merge_cdf"
-    if path in _MERGE_CDF_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     orders = load_star_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -2757,7 +2647,6 @@ def _orders_merge_cdf_layer(spark: SparkSession, sf_dir: str) -> str:
         )
     )
     merge_snapshot(spark, delta, path, "o_orderkey", stats_cols=["o_orderkey"])
-    _MERGE_CDF_BUILT.add(path)
     return path
 
 
@@ -2835,9 +2724,7 @@ def q_ivm_merge_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MERGE_EVOLVE_BUILT: set[str] = set()
-
-
+@fixture_layer
 def _docs_merge_evolve_layer(spark: SparkSession, sf_dir: str) -> str:
     """Documents layer whose schema EVOLVES through a MERGE: v1 commits
     (doc_id, lang) key-clustered; v2 merges a delta carrying a new
@@ -2851,8 +2738,6 @@ def _docs_merge_evolve_layer(spark: SparkSession, sf_dir: str) -> str:
     )
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/docs_merge_evolve"
-    if path in _MERGE_EVOLVE_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     docs = load_star_table(spark, sf_dir, "documents").select(
         "doc_id", "lang"
@@ -2874,7 +2759,6 @@ def _docs_merge_evolve_layer(spark: SparkSession, sf_dir: str) -> str:
         )
     )
     merge_snapshot(spark, delta, path, "doc_id", stats_cols=["doc_id"])
-    _MERGE_EVOLVE_BUILT.add(path)
     return path
 
 
@@ -2921,13 +2805,12 @@ def q_snapshot_merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MAINT_LAYERS_BUILT: set[str] = set()
-
 #: maintenance-plan knobs, shared by the engine call and the SQL oracle
 _MAINT_BUCKETS = 12
 _MAINT_TARGET_ROWS = 10_000
 
 
+@fixture_layer
 def _maintenance_layer(spark: SparkSession, sf_dir: str) -> str:
     """A layer in exactly the shape steady-state micro-batch ingest
     leaves behind: 12 tiny single-file appends (documents split by
@@ -2938,8 +2821,6 @@ def _maintenance_layer(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.snapshots import commit_snapshot, drop_snapshot_layer
 
     path = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/maint_layer"
-    if path in _MAINT_LAYERS_BUILT:
-        return path
     drop_snapshot_layer(spark, path)
     docs = load_star_table(spark, sf_dir, "documents").select(
         "doc_id", "source"
@@ -2952,7 +2833,6 @@ def _maintenance_layer(spark: SparkSession, sf_dir: str) -> str:
             mode="overwrite" if i == 0 else "append",
             stats_cols=["doc_id"],
         )
-    _MAINT_LAYERS_BUILT.add(path)
     return path
 
 
@@ -3029,13 +2909,12 @@ def q_snapshot_maintenance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CMAINT_BUILT: set[str] = set()
-
 #: orders-side knobs for the catalog-wide sweep (docs side reuses
 #: _MAINT_BUCKETS/_MAINT_TARGET_ROWS so the two advisors share arithmetic)
 _CMAINT_ORD_BUCKETS = 8
 
 
+@fixture_layer
 def _cmaint_catalog(spark: SparkSession, sf_dir: str) -> str:
     """A 4-table catalog in maintenance-relevant shapes: ``docs`` = the
     12-append interleaved documents layer (same fixture the single-layer
@@ -3051,8 +2930,6 @@ def _cmaint_catalog(spark: SparkSession, sf_dir: str) -> str:
     from ..sources.table_catalog import commit_catalog
 
     cat = f"{_SCRATCH}/snapshots/{_tag(sf_dir)}/cmaint_cat"
-    if cat in _CMAINT_BUILT:
-        return cat
     import shutil
 
     shutil.rmtree(cat, ignore_errors=True)
@@ -3102,7 +2979,6 @@ def _cmaint_catalog(spark: SparkSession, sf_dir: str) -> str:
             "nation": {"path": nation_path, "version": 1},
         },
     )
-    _CMAINT_BUILT.add(cat)
     return cat
 
 

@@ -181,30 +181,15 @@ def bounded_export(
     return table.num_rows
 
 
-def _parquet_file_sizes(spark, path: str) -> list[int]:
-    """Byte sizes of the ``.parquet`` data files under ``path`` (recursive
-    over partition subdirectories), listed through the Hadoop FileSystem
-    API so the same call works on any substrate the cluster can read —
-    ``file://``, ``hdfs://``, ``s3a://``, a bare local path alike.  (A
-    local ``os.walk`` returns nothing for a remote URI.)"""
-    jvm = spark.sparkContext._jvm
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    files = hpath.getFileSystem(hconf).listFiles(hpath, True)
-    sizes = []
-    while files.hasNext():
-        status = files.next()
-        if status.getPath().getName().endswith(".parquet"):
-            sizes.append(status.getLen())
-    return sizes
-
-
 def layer_parquet_bytes(spark, path: str) -> int:
-    """Total bytes of the ``.parquet`` data files under ``path``, on any
-    Hadoop filesystem (``_parquet_file_sizes``) — a local walk would
-    silently collapse compaction sizing to one output file on a remote
-    URI, the failure mode this helper exists to prevent."""
-    return sum(_parquet_file_sizes(spark, path))
+    """Total bytes of the ``.parquet`` data files under ``path`` (recursive
+    over partition subdirectories), on any Hadoop filesystem
+    (``snapshots.parquet_file_sizes``) — a local walk would silently
+    collapse compaction sizing to one output file on a remote URI, the
+    failure mode this helper exists to prevent."""
+    from .snapshots import parquet_file_sizes
+
+    return sum(parquet_file_sizes(spark, path).values())
 
 
 def compact_parquet_layer(
@@ -233,12 +218,14 @@ def compact_parquet_layer(
     """
     import math
 
+    from .snapshots import parquet_file_sizes
+
     df = read_parquet(spark, src_path)
     total = layer_parquet_bytes(spark, src_path)
     n_files = max(1, math.ceil(total / target_file_bytes))
     # coalesce, not repartition: compaction must not pay a shuffle
     df.coalesce(n_files).write.mode("overwrite").parquet(dst_path)
-    return len(_parquet_file_sizes(spark, dst_path))
+    return len(parquet_file_sizes(spark, dst_path))
 
 
 def observed_write(

@@ -324,22 +324,15 @@ def _read_text(spark: SparkSession, path: str) -> str:
         stream.close()
 
 
-def _list_parquet_files(spark: SparkSession, path: str) -> list[str]:
-    jvm, fs = _fs(spark, path)
-    it = fs.listFiles(_hpath(jvm, path), True)
-    files = []
-    while it.hasNext():
-        p = it.next().getPath()
-        if p.getName().endswith(".parquet"):
-            files.append(p.toString())
-    return sorted(files)
-
-
-def _list_parquet_sizes(spark: SparkSession, path: str) -> dict[str, int]:
-    """Basename -> byte size for the parquet files under ``path`` (one
-    recursive listing; the commit-time source of the manifest's ``sizes``
-    map, which is what lets compaction and broadcast-size estimation run
-    without per-file RPCs later)."""
+def parquet_file_sizes(spark: SparkSession, path: str) -> dict[str, int]:
+    """Full path -> byte size for the ``.parquet`` data files under
+    ``path``, sorted by path: one recursive listing through the Hadoop
+    FileSystem API (the cached ``_fs`` handle), so ``file://``,
+    ``hdfs://``, ``s3a://`` and bare local paths all work — a local walk
+    sees nothing under a remote URI.  A commit takes both its file list
+    and the manifest's ``sizes`` map from this one call, which is what
+    lets compaction and broadcast-size estimation run without per-file
+    RPCs later."""
     jvm, fs = _fs(spark, path)
     it = fs.listFiles(_hpath(jvm, path), True)
     sizes: dict[str, int] = {}
@@ -347,8 +340,17 @@ def _list_parquet_sizes(spark: SparkSession, path: str) -> dict[str, int]:
         st = it.next()
         p = st.getPath()
         if p.getName().endswith(".parquet"):
-            sizes[p.getName()] = int(st.getLen())
-    return sizes
+            sizes[p.toString()] = int(st.getLen())
+    return dict(sorted(sizes.items()))
+
+
+def _list_parquet_files(spark: SparkSession, path: str) -> list[str]:
+    return list(parquet_file_sizes(spark, path))
+
+
+def _basename_sizes(sizes: dict[str, int]) -> dict[str, int]:
+    """The manifest's ``sizes`` map is keyed by file basename."""
+    return {f.rsplit("/", 1)[-1]: n for f, n in sizes.items()}
 
 
 def _logical_size_expr(schema: T.StructType):
@@ -1273,7 +1275,8 @@ def commit_snapshot(
     df.write.mode("error").parquet(data_dir)
     if effective_checks:
         _enforce_checks(spark, data_dir, effective_checks)
-    files = _list_parquet_files(spark, data_dir)
+    listed = parquet_file_sizes(spark, data_dir)
+    files = list(listed)
     # appends inherit the layer's recorded sketch domains; layers from
     # before domain recording default to the string-cast domain their
     # sketches were built in
@@ -1296,7 +1299,7 @@ def commit_snapshot(
         if bloom_col
         else {}
     )
-    sizes = _list_parquet_sizes(spark, data_dir)
+    sizes = _basename_sizes(listed)
     # default=str inside the segment/manifest writers: non-JSON stat
     # types (dates/timestamps) serialize as ISO strings, whose
     # lexicographic order matches their natural order — pass string
@@ -3574,7 +3577,8 @@ def merge_snapshot(
         ch_dir = f"{path}/_changes/v{version}-{uuid.uuid4().hex[:8]}"
         ch.write.mode("error").parquet(ch_dir)
         cdf_entry = {"path": ch_dir}
-    new_files = _list_parquet_files(spark, data_dir)
+    new_sizes = parquet_file_sizes(spark, data_dir)
+    new_files = list(new_sizes)
     merge_dom_inherit = m.get("stat_doms")
     if merge_dom_inherit is None:
         merge_dom_inherit = {c: "string" for c in stats_cols or []}
@@ -3630,7 +3634,7 @@ def merge_snapshot(
         new_stats,
         new_counts,
         merge_blooms,
-        _list_parquet_sizes(spark, data_dir),
+        _basename_sizes(new_sizes),
         new_colmeta,
         new_raw,
     )
@@ -3811,7 +3815,8 @@ def compact_small_files(
     version = head + 1
     data_dir = f"{path}/data/v{version}-{uuid.uuid4().hex[:8]}"
     raw.coalesce(n_out).write.mode("error").parquet(data_dir)
-    new_files = _list_parquet_files(spark, data_dir)
+    new_sizes = parquet_file_sizes(spark, data_dir)
+    new_files = list(new_sizes)
     compact_dom_inherit = m.get("stat_doms")
     if compact_dom_inherit is None:
         compact_dom_inherit = {c: "string" for c in stats_cols or []}
@@ -3870,7 +3875,7 @@ def compact_small_files(
         new_stats,
         new_counts,
         new_blooms,
-        _list_parquet_sizes(spark, data_dir),
+        _basename_sizes(new_sizes),
         new_colmeta,
         new_raw,
     )

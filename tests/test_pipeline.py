@@ -41,3 +41,19 @@ def test_pipeline_counts_are_the_written_layers(spark, sf_dir, tmp_path, empty):
         "movie_facts", "movie_genre_fact", "genre_average_revenue")]
     assert [res.facts_rows, res.genre_fact_rows, res.summary_rows] == written
     assert (sum(written) == 0) == empty
+
+
+def test_genre_summary_layer_is_one_sorted_file(spark, sf_dir, tmp_path):
+    import glob
+
+    import pyarrow.parquet as pq
+
+    raw = movies_raw_from_star(spark, sf_dir)
+    out = str(tmp_path / "prod")
+    res = run_movie_pipeline(spark, raw, out)
+
+    files = glob.glob(f"{out}/genre_average_revenue/*.parquet")
+    assert len(files) == 1
+    avg = pq.read_table(files[0]).column("average_revenue").to_pylist()
+    assert len(avg) == res.summary_rows > 1
+    assert avg == sorted(avg, reverse=True)

@@ -61,6 +61,23 @@ def test_agg_is_two_phase(spark):
     assert plan.count("HashAggregate") >= 2
 
 
+@pytest.mark.parametrize(
+    "name, col, descending",
+    [
+        ("bq3_films_per_year", "release_year", False),
+        ("bq4_country_popularity", "avg_popularity", True),
+        ("bq5_runtime_rating", "runtime_bucket", False),
+    ],
+)
+def test_small_kpi_results_sort_without_a_range_shuffle(spark, name, col, descending):
+    # tens of result rows: ordered inside one partition, never by a global
+    # sort that samples range bounds and shuffles a second time
+    assert "rangepartitioning" not in plan_of(spark, name)
+    got = [r[col] for r in CATALOG[name].fn(spark, SF).collect()]
+    assert len(got) > 1
+    assert got == sorted(got, reverse=descending)
+
+
 def test_neardup_join_is_keyed_not_cartesian(spark):
     plan = plan_of(spark, "neardup_jaccard")
     assert "CartesianProduct" not in plan
@@ -796,3 +813,133 @@ def test_batch_adc_tables_are_executor_side_expressions(spark):
     assert [s for s in schemas if "embedding" not in s], (
         "no embedding-free ADC scan found:\n" + "\n".join(schemas)
     )
+
+
+# ---------------------------------------------------------------------------
+# catalog.fixture_layer: the one once-per-process fixture mechanism.  The
+# decorator tests are pure Python (no Spark session).
+# ---------------------------------------------------------------------------
+
+
+def _layer(body):
+    """A ``fixture_layer`` over ``body(sf_dir)`` plus its call log."""
+    from aie321_bigdata_movie_kpi_1m_spark.plans.catalog import fixture_layer
+
+    calls: list[str] = []
+
+    @fixture_layer
+    def build(spark, sf_dir):
+        calls.append(sf_dir)
+        return body(sf_dir)
+
+    return build, calls
+
+
+def test_fixture_layer_builds_once_for_concurrent_callers():
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    def body(sf_dir):
+        time.sleep(0.2)  # every other caller arrives mid-build
+        return object()
+
+    build, calls = _layer(body)
+    start = threading.Barrier(8, timeout=5)
+
+    def call(_):
+        start.wait()
+        return build(None, SF)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = list(pool.map(call, range(8)))
+    finally:
+        sys.setswitchinterval(interval)
+    assert calls == [SF]
+    assert all(g is got[0] for g in got)
+    # same scale tag, same object; __wrapped__ is the undecorated builder
+    assert build(None, SF + "/") is got[0]
+    assert build.__wrapped__(None, SF) is not got[0] and len(calls) == 2
+
+
+@pytest.mark.parametrize("split", ["scales", "builders"])
+def test_fixture_layer_keys_do_not_wait_on_each_other(split):
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    # each build waits for the other to be building too: one lock shared
+    # by both keys would make this barrier time out
+    both = threading.Barrier(2, timeout=5)
+
+    def body(sf_dir):
+        both.wait()
+        return sf_dir
+
+    a, _ = _layer(body)
+    if split == "scales":
+        jobs = [(a, SF), (a, "sf0.01")]
+    else:
+        jobs = [(a, SF), (_layer(body)[0], SF)]
+    with ThreadPoolExecutor(2) as pool:
+        got = list(pool.map(lambda job: job[0](None, job[1]), jobs))
+    assert got == [sf for _, sf in jobs]
+
+
+def test_fixture_layer_records_nothing_when_the_build_raises():
+    import threading
+
+    def body(sf_dir):
+        if len(calls) == 1:
+            raise RuntimeError("build failed")
+        return "built"
+
+    build, calls = _layer(body)
+    with pytest.raises(RuntimeError, match="build failed"):
+        build(None, SF)
+    # the lock was released: another thread's call builds again, and
+    # does not hang
+    out: list[str] = []
+    t = threading.Thread(target=lambda: out.append(build(None, SF)))
+    t.start()
+    t.join(5)
+    assert not t.is_alive() and out == ["built"]
+    assert build(None, SF) == "built" and len(calls) == 2
+
+
+def test_no_hand_rolled_fixture_registries():
+    """Fixture layers are built through catalog.fixture_layer only."""
+    import pathlib
+    import re
+
+    from aie321_bigdata_movie_kpi_1m_spark.plans import catalog
+
+    registry = re.compile(
+        r"^(_[A-Z0-9_]+_BUILT\b|_AUTO_MAINT_STATS|_(IVF|PQ)_INDEX_CACHE)"
+    )
+    hits = [
+        f"{path.name}:{n}: {line}"
+        for path in sorted(pathlib.Path(catalog.__file__).parent.glob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if registry.match(line)
+    ]
+    assert not hits, "\n".join(hits)
+
+
+def test_compact_roundtrip_rebuilds_a_wiped_input(spark):
+    """The 48-file compaction input is a cached fixture layer, but a wipe
+    of its directory mid-process triggers a rebuild, not a
+    missing-input failure."""
+    import shutil
+
+    from aie321_bigdata_movie_kpi_1m_spark.plans.catalog import _tag
+    from aie321_bigdata_movie_kpi_1m_spark.plans.warehouse import _SCRATCH
+
+    fn = CATALOG["compact_layer_roundtrip"].fn
+    first = sorted(map(tuple, fn(spark, SF).collect()))
+    shutil.rmtree(f"{_SCRATCH}/compact/{_tag(SF)}/small")
+    assert sorted(map(tuple, fn(spark, SF).collect())) == first
+    assert first
