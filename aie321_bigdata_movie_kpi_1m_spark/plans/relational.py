@@ -20,7 +20,7 @@ from ..operators.asof import asof_join
 from ..session import scratch_dir
 from ..operators.sessions import session_summary
 from ..sources.readers import load_star_table
-from .catalog import register
+from .catalog import _tag, register
 from ..operators.materialize import materialize
 
 
@@ -47,15 +47,12 @@ GROUP BY c_mktsegment
     tags=("sources",),
 )
 def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from ..schemas import STAR_SCHEMAS
     from ..sources.readers import read_csv
     from ..sources.sinks import write_csv
 
     cust = load_star_table(spark, sf_dir, "customer")
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = scratch_dir("csv_roundtrip", tag)
+    path = scratch_dir("csv_roundtrip", _tag(sf_dir))
     # nullValue sentinel keeps NULL distinguishable from '' on re-read
     write_csv(cust, path, nullValue="\\N")
     back = read_csv(spark, path, STAR_SCHEMAS["customer"], nullValue="\\N")
@@ -83,14 +80,11 @@ GROUP BY s_nationkey
     tags=("sources",),
 )
 def q_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from ..schemas import STAR_SCHEMAS
     from ..sources.sinks import write_json
 
     supp = load_star_table(spark, sf_dir, "supplier")
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = scratch_dir("json_roundtrip", tag)
+    path = scratch_dir("json_roundtrip", _tag(sf_dir))
     write_json(supp, path)
     back = spark.read.schema(STAR_SCHEMAS["supplier"]).json(path)
     return back.groupBy("s_nationkey").agg(
@@ -955,13 +949,10 @@ GROUP BY o_orderpriority
     tags=("sources", "partitioning"),
 )
 def q_partitioned_layer_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from ..sources.sinks import write_parquet
 
     orders = load_star_table(spark, sf_dir, "orders")
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = scratch_dir("partitioned_orders", tag)
+    path = scratch_dir("partitioned_orders", _tag(sf_dir))
     write_parquet(orders, path, partition_by=["o_orderstatus"])
     back = spark.read.parquet(path).filter(F.col("o_orderstatus") == "F")
     return back.groupBy("o_orderpriority").agg(
@@ -1241,8 +1232,6 @@ GROUP BY o_orderstatus
     tags=("sources",),
 )
 def q_chunked_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from ..session import ensure_package_on_workers
     from ..sources.pyds import register_chunked_csv
 
@@ -1253,8 +1242,7 @@ def q_chunked_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey", "o_orderstatus", "o_totalprice")
         .filter(F.col("o_orderkey") % 10 == 0)
     )
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = scratch_dir("chunked_source", tag)
+    path = scratch_dir("chunked_source", _tag(sf_dir))
     (
         orders.repartition(4, "o_orderkey")
         .write.format("chunked_csv")
@@ -1825,13 +1813,10 @@ FROM documents
     tags=("sinks", "quality"),
 )
 def q_observed_write_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from ..sources.sinks import observed_write
 
     docs = load_star_table(spark, sf_dir, "documents")
-    tag = os.path.basename(os.path.normpath(sf_dir)) or "sf"
-    path = scratch_dir("observed_write", tag)
+    path = scratch_dir("observed_write", _tag(sf_dir))
     got = observed_write(
         docs,
         path,

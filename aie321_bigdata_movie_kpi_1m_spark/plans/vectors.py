@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from ..operators import similarity
 from ..sources.readers import load_star_table
-from .catalog import fixture_layer, register
+from .catalog import _tag, fixture_layer, register
 from ..operators.materialize import materialize
 
 #: query vectors: the first 8 ids — broadcast side of the search
@@ -942,10 +942,7 @@ def q_ann_persisted_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    import os as _os
-
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-    layer = scratch_dir("snapshots", tag, "ivf_model")
+    layer = scratch_dir("snapshots", _tag(sf_dir), "ivf_model")
     cents = persisted_ivf_centroids(
         spark, emb, layer, n_centroids=16, iters=1
     )
@@ -1007,16 +1004,13 @@ def persisted_pq_codebooks(
     tags=("similarity", "snapshots", "model"),
 )
 def q_ann_persisted_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
     from ..session import scratch_dir
 
     emb = load_star_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-    layer = scratch_dir("snapshots", tag, "pq_model")
+    layer = scratch_dir("snapshots", _tag(sf_dir), "pq_model")
     books = persisted_pq_codebooks(spark, emb, layer)
     return similarity.pq_topk(
         emb,
@@ -1057,14 +1051,11 @@ ORDER BY cluster
     tags=("similarity", "model", "sampling"),
 )
 def q_cluster_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
     from ..operators.similarity import _as_double, _nearest_centroids_udf
     from ..session import scratch_dir
 
     emb = load_star_table(spark, sf_dir, "embeddings")
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-    layer = scratch_dir("snapshots", tag, "ivf_model")
+    layer = scratch_dir("snapshots", _tag(sf_dir), "ivf_model")
     cents = persisted_ivf_centroids(
         spark, emb, layer, n_centroids=16, iters=1
     )
@@ -1130,16 +1121,13 @@ GROUP BY c ORDER BY cluster
     tags=("similarity", "model", "quality", "text"),
 )
 def q_cluster_quality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
     from ..operators import text_analysis
     from ..operators.similarity import _as_double, _nearest_centroids_udf
     from ..session import scratch_dir
 
     emb = load_star_table(spark, sf_dir, "embeddings")
     docs = load_star_table(spark, sf_dir, "documents")
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
-    layer = scratch_dir("snapshots", tag, "ivf_model")
+    layer = scratch_dir("snapshots", _tag(sf_dir), "ivf_model")
     cents = persisted_ivf_centroids(
         spark, emb, layer, n_centroids=16, iters=1
     )
@@ -1388,12 +1376,10 @@ def _ann_cdf_group(spark: SparkSession, sf_dir: str) -> str:
     the SHARED scratch IVF fit (bit-equal to the oracle's SQL replay of
     the fit over the ORIGINAL corpus, which is exactly the point: churn
     updates assignments, never the fit).  Once per process."""
-    import os as _os
-
     from ..session import scratch_dir
     from ..sources import snapshots as snap
 
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
+    tag = _tag(sf_dir)
     group = scratch_dir("snapshots", tag, "ann_cdf")
     emb_layer = f"{group}/embeddings"
     for p in (emb_layer, f"{group}/assign"):
@@ -1723,13 +1709,10 @@ FROM ranked WHERE rn <= {_TOP_K}
     tags=("similarity", "model", "snapshots", "cdc", "pruning"),
 )
 def q_ann_cdf_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
     from ..session import scratch_dir
     from ..sources.snapshots import read_snapshot
 
     group = _ann_cdf_group(spark, sf_dir)
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
     queries = (
         read_snapshot(spark, f"{group}/embeddings")
         .filter(F.col("vec_id") < _N_QUERIES)
@@ -1746,7 +1729,7 @@ def q_ann_cdf_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         group,
         queries,
-        model_layer=scratch_dir("snapshots", tag, "ivf_model"),
+        model_layer=scratch_dir("snapshots", _tag(sf_dir), "ivf_model"),
         assert_pruned=False,
     )
 
@@ -1879,13 +1862,10 @@ FROM best WHERE rn = 1
     tags=("similarity", "model", "snapshots", "corpus", "pruning"),
 )
 def q_ann_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
     from ..session import scratch_dir
     from ..sources.snapshots import read_snapshot
 
     group = _ann_cdf_group(spark, sf_dir)
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
     shard = (
         read_snapshot(spark, f"{group}/embeddings")
         .filter(F.pmod(F.col("vec_id"), F.lit(5)) == 2)
@@ -1898,7 +1878,7 @@ def q_ann_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         group,
         shard,
-        model_layer=scratch_dir("snapshots", tag, "ivf_model"),
+        model_layer=scratch_dir("snapshots", _tag(sf_dir), "ivf_model"),
     )
 
 
@@ -1928,7 +1908,6 @@ def _stream_ann_group(spark: SparkSession, sf_dir: str) -> str:
     delete entries warrant compaction, builder-asserted to fire at
     least once so the compact/fold loop is proven to close MID-STREAM
     for the vector tier too.  Once per process."""
-    import os as _os
     import shutil
 
     from ..session import scratch_dir
@@ -1938,7 +1917,7 @@ def _stream_ann_group(spark: SparkSession, sf_dir: str) -> str:
         snapshot_cdf_stream_schema,
     )
 
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
+    tag = _tag(sf_dir)
     group = scratch_dir("snapshots", tag, "stream_ann")
     emb_layer = f"{group}/embeddings"
     ckpt = f"{group}_ckpt"
@@ -2199,12 +2178,10 @@ def _plain_ann_group(spark: SparkSession, sf_dir: str) -> str:
     with cell stats + Bloom, and searches ride ``ann_assign_topk``'s
     pruned reads.  Toy-scale target keeps ~8+ files so the per-query
     strict-subset assertion stays exercised.  Once per process."""
-    import os as _os
-
     from ..session import scratch_dir
     from ..sources import snapshots as snap
 
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
+    tag = _tag(sf_dir)
     group = scratch_dir("snapshots", tag, "ann_plain")
     snap.drop_snapshot_layer(spark, f"{group}/assign")
     emb = load_star_table(spark, sf_dir, "embeddings").select(
@@ -3637,12 +3614,10 @@ def _ivfadc_group(spark: SparkSession, sf_dir: str) -> str:
     the persisted-model queries already fit (fit-or-load means building
     this group never refits anything).  Fixture file sizing: ~12
     cell-clustered files so per-query pruning has files to skip."""
-    import os as _os
-
     from ..session import scratch_dir
     from ..sources.snapshots import drop_snapshot_layer
 
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
+    tag = _tag(sf_dir)
     group = scratch_dir("snapshots", tag, "ivfadc")
     drop_snapshot_layer(spark, f"{group}/assign")
     emb = load_star_table(spark, sf_dir, "embeddings")
@@ -3840,7 +3815,6 @@ def _stream_ivfadc_group(spark: SparkSession, sf_dir: str) -> str:
     arrives by stream, encoded under the PINNED codebooks.  The shared
     governor (bound to ``maintain_ann_ivfadc``) compacts mid-stream,
     builder-asserted.  Final corpus state: vec_id % 7 != 3."""
-    import os as _os
     import shutil
 
     from ..session import scratch_dir
@@ -3851,7 +3825,7 @@ def _stream_ivfadc_group(spark: SparkSession, sf_dir: str) -> str:
     )
     from .maintenance import auto_maintenance_hook
 
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
+    tag = _tag(sf_dir)
     group = scratch_dir("snapshots", tag, "stream_ivfadc")
     emb_layer = f"{group}/embeddings"
     ckpt = f"{group}_ckpt"
@@ -4013,12 +3987,10 @@ def _ivfadc_residual_group(spark: SparkSession, sf_dir: str) -> str:
     model layer with the raw group (same cells, so recall deltas are
     attributable to the ENCODING alone) but fits its own residual
     codebooks under a separate pq layer."""
-    import os as _os
-
     from ..session import scratch_dir
     from ..sources.snapshots import drop_snapshot_layer
 
-    tag = _os.path.basename(_os.path.normpath(sf_dir)) or "sf"
+    tag = _tag(sf_dir)
     group = scratch_dir("snapshots", tag, "ivfadc_res")
     drop_snapshot_layer(spark, f"{group}/assign")
     emb = load_star_table(spark, sf_dir, "embeddings")
@@ -4186,89 +4158,3 @@ def q_ivfadc_residual_recall_eval(
         (F.count(F.lit(1)) * _TOP_K).cast("long").alias("n_expected"),
     )
 
-
-def pq_rebuild_gate(
-    spark: SparkSession,
-    embeddings: DataFrame,
-    layer: str,
-    *,
-    min_recall: float,
-    dims: int = _DIMS,
-    m: int = _PQ_M,
-    n_codes: int = _PQ_CODES,
-    n_candidates: int = _PQ_CAND,
-    iters: int = 1,
-    k: int = _TOP_K,
-    n_queries: int = _N_QUERIES,
-) -> dict:
-    """REBUILD GATE for the PQ codebooks — the codebook twin of
-    ``ivf_rebuild_gate``, completing the model-lifecycle symmetry for
-    the IVFADC tier's second model: measure recall@k of the PERSISTED
-    codebooks' ADC search against the exact baseline and re-fit +
-    commit a new codebook version ONLY when recall degrades below
-    ``min_recall`` (corpus churn can drift the data away from the
-    codewords just as it drifts away from the coarse centroids).  A
-    passing gate commits nothing.  Re-fits stay exclusively here: the
-    IVFADC refresh path loads, never fits.  Returns {"recall",
-    "rebuilt", "model_version"}."""
-    from ..sources.snapshots import snapshot_versions
-
-    queries = embeddings.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    books = persisted_pq_codebooks(
-        spark, embeddings, layer, dims=dims, m=m, n_codes=n_codes,
-        iters=iters,
-    )
-
-    def _recall(b) -> float:
-        exact = similarity.cosine_topk(embeddings, queries, k=k).select(
-            "query_id", "neighbor_id"
-        )
-        approx = (
-            similarity.pq_topk(
-                embeddings,
-                queries,
-                k=k,
-                dims=dims,
-                m=m,
-                n_codes=n_codes,
-                n_candidates=n_candidates,
-                codebooks=b,
-            )
-            .select("query_id", "neighbor_id")
-            .withColumn("__hit", F.lit(1))
-        )
-        row = (
-            exact.join(approx, ["query_id", "neighbor_id"], "left")
-            .agg(
-                (
-                    F.sum(F.coalesce(F.col("__hit"), F.lit(0)))
-                    / F.count(F.lit(1))
-                ).alias("r")
-            )
-            .first()
-        )
-        return float(row["r"])
-
-    recall = _recall(books)
-    rebuilt = False
-    if recall < min_recall:
-        _ANN_FIT_RUNS["pq"] += 1
-        books = similarity.pq_fit_codebooks(
-            embeddings, dims=dims, m=m, n_codes=n_codes, iters=iters
-        )
-        save_ann_model(
-            spark,
-            layer,
-            {s: b for s, b in enumerate(books)},
-            {"kind": "pq", "dims": dims, "m": m, "n_codes": n_codes,
-             "iters": iters},
-        )
-        rebuilt = True
-        recall = _recall(books)
-    return {
-        "recall": recall,
-        "rebuilt": rebuilt,
-        "model_version": snapshot_versions(spark, layer)[-1],
-    }

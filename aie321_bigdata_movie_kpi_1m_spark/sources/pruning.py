@@ -43,6 +43,9 @@ from pyspark.sql.datasource import (
 )
 
 MANIFEST_DIR = "_manifests"
+#: the one manifest layout every writer records and every reader accepts:
+#: per-file maps in segment files, one summary entry per segment
+MANIFEST_FORMAT = 2
 
 
 # ---------------------------------------------------------------------------
@@ -72,12 +75,23 @@ def versions(root: str, sub: str = MANIFEST_DIR) -> list[int]:
     )
 
 
+def checked_manifest(m: dict, path: str) -> dict:
+    """``m``, parsed from ``path``, if it is a segmented manifest.  Any
+    other format raises ``ValueError``: such a manifest has no
+    ``segments``, so reading past it would return an empty table."""
+    if m.get("format") != MANIFEST_FORMAT:
+        raise ValueError(
+            f"{path}: manifest format {m.get('format')!r} is not supported "
+            f"(only format {MANIFEST_FORMAT}, segmented manifests, is read)"
+        )
+    return m
+
+
 def manifest_raw(root: str, v: int) -> dict:
     """Version ``v``'s manifest exactly as written (segment maps are not
     loaded)."""
-    return read_json(
-        os.path.join(local_path(root), MANIFEST_DIR, f"v{v}.json")
-    )
+    p = os.path.join(local_path(root), MANIFEST_DIR, f"v{v}.json")
+    return checked_manifest(read_json(p), p)
 
 
 # ---------------------------------------------------------------------------
@@ -211,37 +225,31 @@ def plan_files(
     """The files of manifest ``m`` that may hold a row satisfying every
     pred, and the per-file bloom map of what was loaded.
 
-    Segmented (format-2) manifests are pruned on their entries first —
-    the entry's aggregated [min, max], then its Bloom union — so a
-    skipped segment is never loaded (``load_segment`` runs once per
-    survivor); then each surviving file is tested on its own ranges and
-    Bloom bits.  ``pos_list`` holds one bit-position list per probe
-    value (an IN list keeps a file if ANY value may be present); None
-    disables Bloom pruning.  Files and segments without a Bloom are
-    kept."""
-    if m.get("format", 1) >= 2:
-        files: list[str] = []
-        stats: dict = {}
-        blooms: dict = {}
-        for e in m.get("segments") or []:
-            if not stats_keep(e.get("stats") or {}, preds):
-                continue
-            union = e.get("bloom_union")
-            if (
-                pos_list is not None
-                and union is not None
-                and not any(hex_has_bits(union, pos) for pos in pos_list)
-            ):
-                continue
-            seg = load_segment(e["path"])
-            files.extend(seg["files"])
-            stats.update(seg.get("stats") or {})
-            blooms.update(seg.get("blooms") or {})
-        files.sort()
-    else:
-        files = list(m["files"])
-        stats = m.get("stats") or {}
-        blooms = m.get("blooms") or {}
+    Segment entries are pruned first — the entry's aggregated [min,
+    max], then its Bloom union — so a skipped segment is never loaded
+    (``load_segment`` runs once per survivor); then each surviving file
+    is tested on its own ranges and Bloom bits.  ``pos_list`` holds one
+    bit-position list per probe value (an IN list keeps a file if ANY
+    value may be present); None disables Bloom pruning.  Files and
+    segments without a Bloom are kept."""
+    files: list[str] = []
+    stats: dict = {}
+    blooms: dict = {}
+    for e in m.get("segments") or []:
+        if not stats_keep(e.get("stats") or {}, preds):
+            continue
+        union = e.get("bloom_union")
+        if (
+            pos_list is not None
+            and union is not None
+            and not any(hex_has_bits(union, pos) for pos in pos_list)
+        ):
+            continue
+        seg = load_segment(e["path"])
+        files.extend(seg["files"])
+        stats.update(seg.get("stats") or {})
+        blooms.update(seg.get("blooms") or {})
+    files.sort()
     kept = []
     for f in files:
         base = f.rsplit("/", 1)[-1]

@@ -638,15 +638,13 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         return versions(self._path)
 
     def _file_set(self, m: dict) -> set[str]:
-        """All data files of one manifest — segment-aware (format 2
-        loads every segment; only used for initial snapshots and
-        format-migration boundaries, where O(all) is the honest cost)."""
-        if m.get("format", 1) >= 2:
-            out: set[str] = set()
-            for e in m.get("segments") or []:
-                out.update(read_json(e["path"])["files"])
-            return out
-        return set(m["files"])
+        """All data files of one manifest — loads every segment; only
+        used for a stream's initial snapshot, where O(all) is the honest
+        cost."""
+        out: set[str] = set()
+        for e in m.get("segments") or []:
+            out.update(read_json(e["path"])["files"])
+        return out
 
     def initialOffset(self) -> dict:
         return {"version": 0}
@@ -696,12 +694,6 @@ class _SnapshotStreamReader(DataSourceStreamReader):
                     (f, True, v) for f in sorted(self._file_set(m))
                 )
             elif mode == "append":
-                if prev_m.get("format", 1) < 2 or m.get("format", 1) < 2:
-                    raise ValueError(
-                        f"version {v}: format-1 manifest in a cdf range "
-                        "— the segment diff needs format 2 (any "
-                        "mutating commit migrates the layer)"
-                    )
                 prev_seg = {
                     e2["path"] for e2 in prev_m.get("segments") or []
                 }
@@ -802,13 +794,9 @@ class _SnapshotStreamReader(DataSourceStreamReader):
             return self._partitions_cdf(s, e, vs)
         have_prev = s in vs
         prev_seg: set[str] | None = None
-        prev_files: set[str] = set()
         if have_prev:
             pm = manifest_raw(self._path, s)
-            if pm.get("format", 1) >= 2:
-                prev_seg = {e["path"] for e in pm.get("segments") or []}
-            else:
-                prev_files = self._file_set(pm)
+            prev_seg = {e["path"] for e in pm.get("segments") or []}
         files: list[str] = []
         for v in [x for x in vs if s < x <= e]:
             m = manifest_raw(self._path, v)
@@ -823,27 +811,18 @@ class _SnapshotStreamReader(DataSourceStreamReader):
                     f"version {v} carries deletion vectors — file "
                     "difference is not row difference; compact first"
                 )
-            fmt2 = m.get("format", 1) >= 2
-            if prev_seg is not None and fmt2:
+            cur_seg = {e["path"] for e in m.get("segments") or []}
+            if prev_seg is not None:
                 # SEGMENT set difference: appends carry prior entries by
                 # reference, so only the NEW segments' files are read —
                 # the O(delta) planning path for a long-lived tail
-                cur_seg = {e["path"] for e in m.get("segments") or []}
                 for entry in m.get("segments") or []:
                     if entry["path"] not in prev_seg:
                         files.extend(sorted(read_json(entry["path"])["files"]))
-                prev_seg = cur_seg
             else:
-                # initial snapshot, or a format boundary in the range:
-                # fall back to the file-set difference once
-                cur = self._file_set(m)
-                files.extend(sorted(cur - prev_files))
-                prev_files = cur
-                prev_seg = (
-                    {e["path"] for e in m.get("segments") or []}
-                    if fmt2
-                    else None
-                )
+                # initial snapshot: the start version's whole file set
+                files.extend(sorted(self._file_set(m)))
+            prev_seg = cur_seg
             have_prev = True
         if not files:
             return [_SnapshotFilePartition(None, self._cols)]

@@ -379,18 +379,13 @@ def plan_snapshot_scan(
 
     files, _ = plan_files(m, preds, _bloom_pos_lists(m, preds), load_segment)
     entries = m.get("segments") or []
-    fmt2 = m.get("format", 1) >= 2
     return {
         "files": files,
         "delete_entries": m.get("delete_files") or [],
         "schema": m.get("schema") or {},
-        "n_segments_total": len(entries) if fmt2 else 0,
+        "n_segments_total": len(entries),
         "n_segments_read": len(loaded),
-        "n_files_total": (
-            sum(int(e.get("n_files") or 0) for e in entries)
-            if fmt2
-            else len(m["files"])
-        ),
+        "n_files_total": sum(int(e.get("n_files") or 0) for e in entries),
     }
 
 

@@ -55,12 +55,15 @@ from pyspark.sql import types as T
 from ..operators.materialize import materialize
 from .pruning import (
     MANIFEST_DIR as _MANIFEST_DIR,
+    MANIFEST_FORMAT,
     bits_to_hex,
+    checked_manifest,
     fold_minmax,
     plan_files,
     range_preds,
     stats_keep,
 )
+from .readers import read_parquet
 
 
 class InProcessCommitLock:
@@ -427,17 +430,17 @@ def snapshot_versions(spark: SparkSession, path: str) -> list[int]:
 
 
 # ---------------------------------------------------------------------------
-# Segmented manifests (format 2) — Iceberg's manifest-list idea.
+# Segmented manifests — Iceberg's manifest-list idea.
 #
-# A format-1 manifest inlines every live data file with its stats into ONE
-# JSON document, so read planning parses O(all files ever) on the driver:
-# at 100 TB (10^6-10^7 files) that is a multi-GB parse per query — the one
-# real scale-killer in a single-document design.  Format 2 instead stores
-# the per-file maps (files / stats / counts / blooms / sizes) in immutable
-# SEGMENT files under ``_manifests/segments/``, and the version manifest
-# carries only one small entry per segment: path, file/row/byte totals,
-# and per-column [min, max] aggregated over the segment's files.  The
-# consequences, each load-bearing at scale:
+# A manifest that inlined every live data file with its stats into ONE
+# JSON document would make read planning parse O(all files ever) on the
+# driver: at 100 TB (10^6-10^7 files) a multi-GB parse per query — the one
+# real scale-killer in a single-document design.  So the per-file maps
+# (files / stats / counts / blooms / sizes) live in immutable SEGMENT files
+# under ``_manifests/segments/``, and the version manifest carries only
+# one small entry per segment: path, file/row/byte totals, and per-column
+# [min, max] aggregated over the segment's files.  The consequences, each
+# load-bearing at scale:
 #
 # - **Planning is O(pruned segments).** ``snapshot_files(prune_range=...)``
 #   drops whole segments on the entry-level [min, max] before reading a
@@ -446,17 +449,21 @@ def snapshot_versions(spark: SparkSession, path: str) -> list[int]:
 #   handful of KB-sized JSONs, however many files the table has.
 # - **Appends write O(delta) manifest bytes.** An append carries the head's
 #   segment entries BY REFERENCE and writes new segment(s) for the new
-#   files only — where format 1 re-serialized the whole file inventory on
-#   every commit.
+#   files only, never re-serializing the whole file inventory.
 # - **COUNT(*) is entry-arithmetic.** Per-segment n_rows makes
 #   ``snapshot_row_count`` a zero-segment-read fold.
 #
 # Segments are immutable and content-addressed (version + random token in
 # the name), so carrying an entry by reference is always safe; vacuum GCs
 # segment files no surviving manifest references, with the same in-flight
-# grace window as data staging dirs.  Format-1 manifests remain fully
-# readable; the first mutating commit migrates them by packing the inline
-# maps into segments (one-time O(head files) metadata write, zero data IO).
+# grace window as data staging dirs.
+#
+# This is the ONLY layout (``"format": MANIFEST_FORMAT``, i.e. 2): every
+# writer records it, and every manifest read (``_manifest_raw`` here,
+# ``pruning.manifest_raw`` in the Python DataSources) passes through
+# ``pruning.checked_manifest``, which refuses any other format with a
+# ``ValueError`` naming the manifest's path.  Without the refusal, an
+# inline manifest (no ``segments`` key) would read as an empty table.
 # ---------------------------------------------------------------------------
 
 _SEGMENT_MAX_FILES = 256
@@ -517,12 +524,11 @@ def _evict_json_cache(path: str) -> None:
 
 
 def _manifest_raw(spark: SparkSession, path: str, version: int) -> dict:
-    """The version manifest EXACTLY as written — for format 2 the
-    per-file maps live in segment files and are NOT loaded.  Planning
-    paths work from this plus only the segments they need."""
-    return _read_json_cached(
-        spark, f"{path}/{_MANIFEST_DIR}/v{version}.json"
-    )
+    """The version manifest EXACTLY as written — the per-file maps live
+    in segment files and are NOT loaded.  Planning paths work from this
+    plus only the segments they need."""
+    p = f"{path}/{_MANIFEST_DIR}/v{version}.json"
+    return checked_manifest(_read_json_cached(spark, p), p)
 
 
 def _read_segment(spark: SparkSession, seg_path: str) -> dict:
@@ -536,15 +542,13 @@ def _read_segment(spark: SparkSession, seg_path: str) -> dict:
 
 
 def _manifest(spark: SparkSession, path: str, version: int) -> dict:
-    """MATERIALIZED view of one version's manifest: for segmented
-    manifests the per-file maps (files/stats/counts/blooms/sizes) are
-    loaded from ALL segment files and inlined — the compatibility path
-    for maintenance jobs and tests that want the full inventory.  Hot
-    paths (snapshot_files, row_count, merge, append delta) must NOT use
-    this; they stay O(relevant segments) via ``_manifest_raw``."""
+    """MATERIALIZED view of one version's manifest: the per-file maps
+    (files/stats/counts/blooms/sizes) are loaded from ALL segment files
+    and inlined — for maintenance jobs and tests that want the full
+    inventory.  Hot paths (snapshot_files, row_count, merge, append
+    delta) must NOT use this; they stay O(relevant segments) via
+    ``_manifest_raw``."""
     m = _manifest_raw(spark, path, version)
-    if m.get("format", 1) < 2:
-        return m
     files: list[str] = []
     stats: dict = {}
     counts: dict = {}
@@ -674,27 +678,6 @@ def _write_segment_entries(
             }
         )
     return entries
-
-
-def _entries_from_inline(
-    spark: SparkSession, path: str, version: int, m: dict
-) -> list[dict]:
-    """One-time migration of a format-1 manifest: pack its inline
-    per-file maps into segment files (written under ``version``'s name,
-    so vacuum's in-flight grace covers them) and return the entries —
-    zero data IO, O(head files) metadata."""
-    return _write_segment_entries(
-        spark,
-        path,
-        version,
-        m["files"],
-        m.get("stats", {}) or {},
-        m.get("counts") or {},
-        m.get("blooms", {}) or {},
-        m.get("sizes", {}) or {},
-        m.get("colmeta", {}) or {},
-        m.get("raw_sizes", {}) or {},
-    )
 
 
 def _type_from_json(dtype_json: str):
@@ -858,7 +841,7 @@ def _file_stats(
     NO stats entry, which a reader must conservatively keep."""
     import base64
 
-    src_df = spark.read.parquet(data_dir)
+    src_df = read_parquet(spark, data_dir)
     aggs = [
         F.count(F.lit(1)).alias("__n"),
         # logical in-memory bytes (see _logical_size_expr): the
@@ -991,7 +974,7 @@ def _file_blooms(
     NULL-rejecting by SQL semantics)."""
     probe = F.col(bloom_col).cast("string")
     rows = (
-        spark.read.parquet(data_dir)
+        read_parquet(spark, data_dir)
         .filter(F.col(bloom_col).isNotNull())
         .select(
             F.input_file_name().alias("__f"),
@@ -1320,15 +1303,8 @@ def commit_snapshot(
     carried_entries: list = []
     if mode == "append" and head:
         # O(delta) manifest write: the head's segment entries carry BY
-        # REFERENCE; only the delta's files got new segments.  A
-        # format-1 head migrates here (its inline maps pack into
-        # segments once; zero data IO)
-        if prev.get("format", 1) >= 2:
-            carried_entries = prev.get("segments") or []
-        else:
-            carried_entries = _entries_from_inline(
-                spark, path, version, _manifest(spark, path, head)
-            )
+        # REFERENCE; only the delta's files got new segments
+        carried_entries = prev.get("segments") or []
         # old files' deletion vectors stay valid: appends add files only
         delete_files = prev.get("delete_files") or []
     _write_text(
@@ -1339,7 +1315,7 @@ def commit_snapshot(
                 "version": version,
                 "committed_at": time.time(),
                 "mode": mode,
-                "format": 2,
+                "format": MANIFEST_FORMAT,
                 "segments": carried_entries + new_entries,
                 "bloom_col": bloom_col
                 or (prev.get("bloom_col") if mode == "append" and head else None),
@@ -1373,7 +1349,7 @@ def _enforce_checks(
         F.sum(F.when(~F.expr(pred), 1).otherwise(0)).alias(name)
         for name, pred in checks.items()
     ]
-    row = spark.read.parquet(data_dir).agg(*aggs).first()
+    row = read_parquet(spark, data_dir).agg(*aggs).first()
     bad = {
         name: int(row[name]) for name in checks if row[name] and row[name] > 0
     }
@@ -2045,12 +2021,6 @@ def delete_snapshot(
     # a DELETE changes no data file: the new manifest carries the head's
     # segment entries BY REFERENCE and only appends the delete entry —
     # O(1) manifest bytes however large the table
-    if m.get("format", 1) >= 2:
-        seg_entries = m.get("segments") or []
-    else:
-        seg_entries = _entries_from_inline(
-            spark, path, version, _manifest(spark, path, head)
-        )
     _write_text(
         spark,
         f"{path}/{_MANIFEST_DIR}/v{version}.json",
@@ -2059,8 +2029,8 @@ def delete_snapshot(
                 "version": version,
                 "committed_at": time.time(),
                 "mode": "delete",
-                "format": 2,
-                "segments": seg_entries,
+                "format": MANIFEST_FORMAT,
+                "segments": m.get("segments") or [],
                 "bloom_col": m.get("bloom_col"),
                 "bloom_m": m.get("bloom_m"),
                 "bloom_k": m.get("bloom_k"),
@@ -2202,19 +2172,15 @@ def delete_snapshot_keys(
         n_keys = len(set(kvals))
     # two-level metadata-only touch-scope resolution (zero data reads):
     # segment entries by key envelope, then per-file [min, max] ranges
-    if m.get("format", 1) >= 2:
-        cand_stats: dict = {}
-        cand_bases: list[str] = []
-        key_range = range_preds(key_col, klo, khi)
-        for e in m.get("segments") or []:
-            if not stats_keep(e.get("stats") or {}, key_range):
-                continue
-            seg = _read_segment(spark, e["path"])
-            cand_bases.extend(f.rsplit("/", 1)[-1] for f in seg["files"])
-            cand_stats.update(seg.get("stats") or {})
-    else:
-        cand_bases = [f.rsplit("/", 1)[-1] for f in m["files"]]
-        cand_stats = m.get("stats", {})
+    cand_stats: dict = {}
+    cand_bases: list[str] = []
+    key_range = range_preds(key_col, klo, khi)
+    for e in m.get("segments") or []:
+        if not stats_keep(e.get("stats") or {}, key_range):
+            continue
+        seg = _read_segment(spark, e["path"])
+        cand_bases.extend(f.rsplit("/", 1)[-1] for f in seg["files"])
+        cand_stats.update(seg.get("stats") or {})
     ranges = []
     touched: set[str] = set()
     for b in cand_bases:
@@ -2261,12 +2227,6 @@ def delete_snapshot_keys(
             "touches": sorted(touched),
             "path": f"{path}/_changes/v{version}-eqpre",
         }
-    if m.get("format", 1) >= 2:
-        seg_entries = m.get("segments") or []
-    else:
-        seg_entries = _entries_from_inline(
-            spark, path, version, _manifest(spark, path, head)
-        )
     _write_text(
         spark,
         f"{path}/{_MANIFEST_DIR}/v{version}.json",
@@ -2275,8 +2235,8 @@ def delete_snapshot_keys(
                 "version": version,
                 "committed_at": time.time(),
                 "mode": "delete",
-                "format": 2,
-                "segments": seg_entries,
+                "format": MANIFEST_FORMAT,
+                "segments": m.get("segments") or [],
                 "bloom_col": m.get("bloom_col"),
                 "bloom_m": m.get("bloom_m"),
                 "bloom_k": m.get("bloom_k"),
@@ -2327,40 +2287,22 @@ def snapshot_row_count(
     if v not in versions:
         raise FileNotFoundError(f"version {v} not in {versions} at {path}")
     m = _manifest_raw(spark, path, v)
-    if m.get("format", 1) >= 2:
-        # pure segment-entry arithmetic — ZERO segment reads, zero data
-        # scans.  Sound because every mutator maintains the invariant
-        # that delete-entry touches reference only files live in the
-        # same manifest (appends carry entries verbatim over a growing
-        # file set; merge/compact trim rewritten bases out)
-        entries = m.get("segments") or []
-        if any(e.get("n_rows") is None for e in entries):
-            return None
-        if any(
-            e.get("kind") == "equality" for e in m.get("delete_files") or []
-        ):
-            # an equality delete's match count is unknown without a scan
-            # (that is its point: O(keys) metadata, no data read) — the
-            # manifest cannot answer exactly until compaction folds it
-            return None
-        total = sum(int(e["n_rows"]) for e in entries)
-        for e in m.get("delete_files") or []:
-            total -= sum(int(n) for n in e["touches"].values())
-        return total
-    counts = m.get("counts")
-    if not counts:
+    # pure segment-entry arithmetic — ZERO segment reads, zero data
+    # scans.  Sound because every mutator maintains the invariant that
+    # delete-entry touches reference only files live in the same
+    # manifest (appends carry entries verbatim over a growing file set;
+    # merge/compact trim rewritten bases out)
+    entries = m.get("segments") or []
+    if any(e.get("n_rows") is None for e in entries):
         return None
     if any(e.get("kind") == "equality" for e in m.get("delete_files") or []):
+        # an equality delete's match count is unknown without a scan
+        # (that is its point: O(keys) metadata, no data read) — the
+        # manifest cannot answer exactly until compaction folds it
         return None
-    bases = [f.rsplit("/", 1)[-1] for f in m["files"]]
-    if any(b not in counts for b in bases):
-        return None
-    total = sum(int(counts[b]) for b in bases)
-    live = set(bases)
+    total = sum(int(e["n_rows"]) for e in entries)
     for e in m.get("delete_files") or []:
-        # entries may reference files a later MERGE rewrote; only files
-        # still in this version's list carry their deletions
-        total -= sum(int(n) for b, n in e["touches"].items() if b in live)
+        total -= sum(int(n) for n in e["touches"].values())
     return total
 
 
@@ -2369,18 +2311,15 @@ def snapshot_table_bytes(
 ) -> int | None:
     """Total data bytes of one version from SEGMENT-ENTRY ARITHMETIC —
     zero segment reads, zero file RPCs.  None when any entry predates
-    size recording (or the manifest is format 1) — the caller falls
-    back to a listing or skips the size-based decision."""
+    size recording — the caller falls back to a listing or skips the
+    size-based decision."""
     versions = snapshot_versions(spark, path)
     if not versions:
         raise FileNotFoundError(f"no committed snapshot under {path}")
     v = versions[-1] if version is None else version
     if v not in versions:
         raise FileNotFoundError(f"version {v} not in {versions} at {path}")
-    m = _manifest_raw(spark, path, v)
-    if m.get("format", 1) < 2:
-        return None
-    entries = m.get("segments") or []
+    entries = _manifest_raw(spark, path, v).get("segments") or []
     if any(e.get("bytes") is None for e in entries):
         return None
     return sum(int(e["bytes"]) for e in entries)
@@ -2405,10 +2344,7 @@ def snapshot_table_raw_bytes(
     v = versions[-1] if version is None else version
     if v not in versions:
         raise FileNotFoundError(f"version {v} not in {versions} at {path}")
-    m = _manifest_raw(spark, path, v)
-    if m.get("format", 1) < 2:
-        return None
-    entries = m.get("segments") or []
+    entries = _manifest_raw(spark, path, v).get("segments") or []
     if any(e.get("raw_bytes") is None for e in entries):
         return None
     return sum(int(e["raw_bytes"]) for e in entries)
@@ -2522,8 +2458,8 @@ def register_snapshot_view(
     the estimate degrades to worst-case and a 5 MB dimension falls back
     to a sort-merge join with a full shuffle of the fact side.  The
     manifest KNOWS the size — this is Delta/Iceberg's stats-based join
-    planning.  A layer without recorded sizes (format 1) never hints —
-    stats-driven means never guessing.
+    planning.  A layer without recorded sizes never hints — stats-driven
+    means never guessing.
 
     The size compared is the UNCOMPRESSED total
     (``snapshot_table_raw_bytes``, recorded from the parquet footers at
@@ -2593,17 +2529,11 @@ def snapshot_history(spark: SparkSession, path: str) -> DataFrame:
             n_rows = snapshot_row_count(spark, path, v)
         except FileNotFoundError:
             n_rows = None
-        if m.get("format", 1) >= 2:
-            n_files = sum(
-                int(e["n_files"]) for e in m.get("segments") or []
-            )
-        else:
-            n_files = len(m["files"])
         rows.append(
             (
                 v,
                 m.get("mode"),
-                n_files,
+                sum(int(e["n_files"]) for e in m.get("segments") or []),
                 n_rows,
                 len(m.get("delete_files") or []),
                 float(m["committed_at"]) if m.get("committed_at") else None,
@@ -2654,25 +2584,17 @@ def snapshot_append_delta(
             "deletion vectors changed across the range — use "
             "snapshot_changes"
         )
-    if m_from.get("format", 1) >= 2 and m_to.get("format", 1) >= 2:
-        # SEGMENT set difference: appends carry the prior entries by
-        # reference, so the delta is exactly v_to's new segment entries
-        # — only THOSE segment files are read, O(delta) end to end even
-        # on a 10^7-file layer
-        from_paths = {e["path"] for e in m_from.get("segments") or []}
-        new_files = sorted(
-            f
-            for e in m_to.get("segments") or []
-            if e["path"] not in from_paths
-            for f in _read_segment(spark, e["path"])["files"]
-        )
-    else:
-        # a format migration inside the range: fall back to the
-        # materialized file-set difference (one-time cost)
-        new_files = sorted(
-            set(_manifest(spark, path, v_to)["files"])
-            - set(_manifest(spark, path, v_from)["files"])
-        )
+    # SEGMENT set difference: appends carry the prior entries by
+    # reference, so the delta is exactly v_to's new segment entries —
+    # only THOSE segment files are read, O(delta) end to end even on a
+    # 10^7-file layer
+    from_paths = {e["path"] for e in m_from.get("segments") or []}
+    new_files = sorted(
+        f
+        for e in m_to.get("segments") or []
+        if e["path"] not in from_paths
+        for f in _read_segment(spark, e["path"])["files"]
+    )
     if not new_files:
         rec = m_to.get("schema")
         schema = T.StructType(
@@ -2740,10 +2662,6 @@ def restore_snapshot(spark: SparkSession, path: str, version: int) -> int:
             f"file(s) vacuumed, e.g. {missing[0]}"
         )
     new_v = head + 1
-    if old_raw.get("format", 1) >= 2:
-        seg_entries = old_raw.get("segments") or []
-    else:
-        seg_entries = _entries_from_inline(spark, path, new_v, old)
     _write_text(
         spark,
         f"{path}/{_MANIFEST_DIR}/v{new_v}.json",
@@ -2752,9 +2670,9 @@ def restore_snapshot(spark: SparkSession, path: str, version: int) -> int:
                 "version": new_v,
                 "committed_at": time.time(),
                 "mode": "restore",
-                "format": 2,
+                "format": MANIFEST_FORMAT,
                 "restore_of": version,
-                "segments": seg_entries,
+                "segments": old_raw.get("segments") or [],
                 "bloom_col": old.get("bloom_col"),
                 "bloom_m": old.get("bloom_m"),
                 "bloom_k": old.get("bloom_k"),
@@ -2801,17 +2719,6 @@ def clone_snapshot(
     if v not in versions:
         raise FileNotFoundError(f"version {v} not in {versions} at {src_path}")
     m = _manifest_raw(spark, src_path, v)
-    if m.get("format", 1) >= 2:
-        # the clone references the SOURCE's segment files in place, like
-        # its data files — zero bytes copied; the clone's own vacuum
-        # lists only its own _manifests/segments dir, so it can never
-        # GC the source's segments (same caveat as data: vacuuming the
-        # SOURCE can break the clone)
-        seg_entries = m.get("segments") or []
-    else:
-        seg_entries = _entries_from_inline(
-            spark, dst_path, 1, _manifest(spark, src_path, v)
-        )
     _write_text(
         spark,
         f"{dst_path}/{_MANIFEST_DIR}/v1.json",
@@ -2821,8 +2728,13 @@ def clone_snapshot(
                 "committed_at": time.time(),
                 "mode": "clone",
                 "clone_of": {"path": src_path, "version": v},
-                "format": 2,
-                "segments": seg_entries,
+                "format": MANIFEST_FORMAT,
+                # the clone references the SOURCE's segment files in
+                # place, like its data files — zero bytes copied; the
+                # clone's own vacuum lists only its own _manifests/segments
+                # dir, so it can never GC the source's segments (same
+                # caveat as data: vacuuming the SOURCE can break the clone)
+                "segments": m.get("segments") or [],
                 "bloom_col": m.get("bloom_col"),
                 "bloom_m": m.get("bloom_m"),
                 "bloom_k": m.get("bloom_k"),
@@ -2897,38 +2809,6 @@ def snapshot_pins(spark: SparkSession, path: str) -> list[dict]:
     return sorted(out, key=lambda r: (r["version"], r["ref"]))
 
 
-def snapshot_external_refs(spark: SparkSession, path: str) -> list[str]:
-    """Data/delete/segment file paths referenced by ANY surviving
-    manifest of this layer that live OUTSIDE the layer's own directory
-    — non-empty exactly while the layer is (still) a shallow clone
-    depending on another layer's files.  The release gate for a
-    back-reference pin: a clone that rewrote its head but keeps
-    pre-rewrite history is NOT yet independent (time travel still
-    resolves the source's files)."""
-    import os
-
-    base = os.path.normpath(
-        str(path).removeprefix("file://").removeprefix("file:")
-    )
-    out: set[str] = set()
-    for v in snapshot_versions(spark, path):
-        raw = _manifest_raw(spark, path, v)
-        m = _manifest(spark, path, v)
-        refs = list(m.get("files") or [])
-        refs += [e["path"] for e in m.get("delete_files") or []]
-        refs += [e["path"] for e in raw.get("segments") or []]
-        ch = m.get("changes")
-        if ch:
-            refs.append(ch["path"])
-        for f in refs:
-            fp = os.path.normpath(
-                str(f).removeprefix("file://").removeprefix("file:")
-            )
-            if not fp.startswith(base + os.sep):
-                out.add(str(f))
-    return sorted(out)
-
-
 def unpin_snapshot_version(spark: SparkSession, path: str, *, ref: str) -> bool:
     """Release ``ref``'s pin (the clone was retired/rewritten to own its
     files).  Returns True if a pin existed."""
@@ -2964,18 +2844,10 @@ def snapshot_minmax(
     m = _manifest_raw(spark, path, v)
     if m.get("delete_files"):
         return None
-    if m.get("format", 1) >= 2:
-        # fold the SEGMENT-entry aggregates — zero segment reads.  An
-        # entry lacking the column means some member file has no stats
-        # for it (the entry-level contract)
-        found = [
-            (e.get("stats") or {}).get(col) for e in m.get("segments") or []
-        ]
-    else:
-        stats = m.get("stats", {})
-        found = [
-            stats.get(f.rsplit("/", 1)[-1], {}).get(col) for f in m["files"]
-        ]
+    # fold the SEGMENT-entry aggregates — zero segment reads.  An entry
+    # lacking the column means some member file has no stats for it (the
+    # entry-level contract)
+    found = [(e.get("stats") or {}).get(col) for e in m.get("segments") or []]
     if any(s is None for s in found):
         return None  # unstated stats: cannot answer exactly, scan instead
     return tuple(fold_minmax(found))
@@ -3070,9 +2942,8 @@ def _changes_from_commits(
     deletes their lazily-materialized (then cached) pre-images,
     compactions contribute nothing (row-content-neutral).  Returns None
     when ANY step lacks a source (overwrite, restore, pre-CDF merges
-    and equality deletes, a vacuumed intermediate version, or a
-    format-1 boundary) — the caller then falls back to the generic
-    diff."""
+    and equality deletes, or a vacuumed intermediate version) — the
+    caller then falls back to the generic diff."""
     steps = [v for v in versions if v_from < v <= v_to]
     if steps != list(range(v_from + 1, v_to + 1)):
         return None  # an intermediate version was vacuumed
@@ -3083,8 +2954,6 @@ def _changes_from_commits(
         mode = m.get("mode")
         step: DataFrame | None
         if mode == "append":
-            if prev_m.get("format", 1) < 2 or m.get("format", 1) < 2:
-                return None  # format boundary: segment diff unavailable
             if [e["path"] for e in prev_m.get("delete_files") or []] != [
                 e["path"] for e in m.get("delete_files") or []
             ]:
@@ -3365,11 +3234,7 @@ def merge_snapshot(
         raise FileNotFoundError(f"no committed snapshot under {path}")
     head = versions[-1]
     m = _manifest_raw(spark, path, head)
-    fmt2 = m.get("format", 1) >= 2
-    if fmt2:
-        total_files = sum(int(e["n_files"]) for e in m.get("segments") or [])
-    else:
-        total_files = len(m["files"])
+    total_files = sum(int(e["n_files"]) for e in m.get("segments") or [])
     txn_map: dict = m.get("txn", {})
     if txn is not None:
         app, tv = txn
@@ -3415,7 +3280,7 @@ def merge_snapshot(
                     "additive schema evolution is supported"
                 )
 
-    # SEGMENT-level candidate selection first (format 2): the delta's
+    # SEGMENT-level candidate selection first: the delta's
     # key envelope [min, max] — one delta-sized agg job — is tested
     # against each segment entry's aggregate range, so untouched
     # segments are never even LOADED, let alone their files inspected:
@@ -3425,37 +3290,29 @@ def merge_snapshot(
     # reference); only segments that lose a file to the rewrite repack.
     carried_entries: list[dict] = []
     loaded: list[tuple[dict, dict]] = []
-    if fmt2:
-        env = delta.agg(
-            F.min(key_col).alias("__lo"), F.max(key_col).alias("__hi")
-        ).first()
-        key_range = range_preds(key_col, env["__lo"], env["__hi"])
-        for e in m.get("segments") or []:
-            if key_range and stats_keep(e.get("stats") or {}, key_range):
-                loaded.append((e, _read_segment(spark, e["path"])))
-            else:
-                carried_entries.append(e)
-        files = [f for _, seg in loaded for f in seg["files"]]
-        stats = {}
-        counts_map: dict = {}
-        blooms_map: dict = {}
-        sizes_map: dict = {}
-        raw_map: dict = {}
-        colmeta_map: dict = {}
-        for _, seg in loaded:
-            stats.update(seg.get("stats") or {})
-            counts_map.update(seg.get("counts") or {})
-            blooms_map.update(seg.get("blooms") or {})
-            sizes_map.update(seg.get("sizes") or {})
-            raw_map.update(seg.get("raw_sizes") or {})
-            colmeta_map.update(seg.get("colmeta") or {})
-    else:
-        files, stats = m["files"], m.get("stats", {})
-        counts_map = m.get("counts") or {}
-        blooms_map = m.get("blooms", {})
-        sizes_map = m.get("sizes") or {}
-        raw_map = m.get("raw_sizes") or {}
-        colmeta_map = m.get("colmeta") or {}
+    env = delta.agg(
+        F.min(key_col).alias("__lo"), F.max(key_col).alias("__hi")
+    ).first()
+    key_range = range_preds(key_col, env["__lo"], env["__hi"])
+    for e in m.get("segments") or []:
+        if key_range and stats_keep(e.get("stats") or {}, key_range):
+            loaded.append((e, _read_segment(spark, e["path"])))
+        else:
+            carried_entries.append(e)
+    files = [f for _, seg in loaded for f in seg["files"]]
+    stats: dict = {}
+    counts_map: dict = {}
+    blooms_map: dict = {}
+    sizes_map: dict = {}
+    raw_map: dict = {}
+    colmeta_map: dict = {}
+    for _, seg in loaded:
+        stats.update(seg.get("stats") or {})
+        counts_map.update(seg.get("counts") or {})
+        blooms_map.update(seg.get("blooms") or {})
+        sizes_map.update(seg.get("sizes") or {})
+        raw_map.update(seg.get("raw_sizes") or {})
+        colmeta_map.update(seg.get("colmeta") or {})
 
     # exact per-file touch test: join the delta's DISTINCT keys against
     # the (tiny) file-range relation — a file is touched iff some delta
@@ -3487,18 +3344,13 @@ def merge_snapshot(
         )
         touched.update(r["__f"] for r in hit)
     # candidate files that survive: repacked into fresh segments with
-    # their metadata carried (fmt2), or the legacy carried list
-    if fmt2:
-        repack_files: list[str] = []
-        for e, seg in loaded:
-            if not any(f in touched for f in seg["files"]):
-                carried_entries.append(e)  # untouched after exact test
-            else:
-                repack_files.extend(
-                    f for f in seg["files"] if f not in touched
-                )
-    else:
-        repack_files = [f for f in files if f not in touched]
+    # their metadata carried
+    repack_files: list[str] = []
+    for e, seg in loaded:
+        if not any(f in touched for f in seg["files"]):
+            carried_entries.append(e)  # untouched after exact test
+        else:
+            repack_files.extend(f for f in seg["files"] if f not in touched)
 
     version = head + 1
     data_dir = f"{path}/data/v{version}-{uuid.uuid4().hex[:8]}"
@@ -3650,7 +3502,7 @@ def merge_snapshot(
                 "version": version,
                 "committed_at": time.time(),
                 "mode": "merge",
-                "format": 2,
+                "format": MANIFEST_FORMAT,
                 "segments": carried_entries + repack_entries + new_entries,
                 "bloom_col": m.get("bloom_col"),
                 "bloom_m": m.get("bloom_m"),
@@ -3720,7 +3572,6 @@ def compact_small_files(
         raise FileNotFoundError(f"no committed snapshot under {path}")
     head = versions[-1]
     m = _manifest_raw(spark, path, head)
-    fmt2 = m.get("format", 1) >= 2
     jvm, fs = _fs(spark, path)
 
     def _size(f: str, sizes: dict) -> int:
@@ -3757,46 +3608,28 @@ def compact_small_files(
     raw_map: dict = {}
     colmeta_map: dict = {}
     total_files = 0
-    if fmt2:
-        # per-segment: a segment with NO small file carries into the new
-        # manifest verbatim (entry reference, metadata untouched); a
-        # mixed segment splits — small files rewrite, healthy files
-        # repack with their metadata carried
-        for e in m.get("segments") or []:
-            total_files += int(e["n_files"])
-            seg = _read_segment(spark, e["path"])
-            sizes = seg.get("sizes") or {}
-            seg_small = [f for f in seg["files"] if _packs(f, sizes)]
-            if not seg_small:
-                carried_entries.append(e)
-                continue
-            small.extend(seg_small)
-            small_bytes += sum(_size(f, sizes) for f in seg_small)
-            small_set = set(seg_small)
-            repack_files.extend(
-                f for f in seg["files"] if f not in small_set
-            )
-            stats_map.update(seg.get("stats") or {})
-            counts_map.update(seg.get("counts") or {})
-            blooms_map.update(seg.get("blooms") or {})
-            sizes_map.update(sizes)
-            raw_map.update(seg.get("raw_sizes") or {})
-            colmeta_map.update(seg.get("colmeta") or {})
-    else:
-        mm = _manifest(spark, path, head)
-        total_files = len(mm["files"])
-        sizes_map = mm.get("sizes") or {}
-        for f in mm["files"]:
-            if _packs(f, sizes_map):
-                small.append(f)
-                small_bytes += _size(f, sizes_map)
-            else:
-                repack_files.append(f)
-        stats_map = mm.get("stats", {})
-        counts_map = mm.get("counts") or {}
-        blooms_map = mm.get("blooms", {})
-        raw_map = mm.get("raw_sizes") or {}
-        colmeta_map = mm.get("colmeta") or {}
+    # per-segment: a segment with NO small file carries into the new
+    # manifest verbatim (entry reference, metadata untouched); a mixed
+    # segment splits — small files rewrite, healthy files repack with
+    # their metadata carried
+    for e in m.get("segments") or []:
+        total_files += int(e["n_files"])
+        seg = _read_segment(spark, e["path"])
+        sizes = seg.get("sizes") or {}
+        seg_small = [f for f in seg["files"] if _packs(f, sizes)]
+        if not seg_small:
+            carried_entries.append(e)
+            continue
+        small.extend(seg_small)
+        small_bytes += sum(_size(f, sizes) for f in seg_small)
+        small_set = set(seg_small)
+        repack_files.extend(f for f in seg["files"] if f not in small_set)
+        stats_map.update(seg.get("stats") or {})
+        counts_map.update(seg.get("counts") or {})
+        blooms_map.update(seg.get("blooms") or {})
+        sizes_map.update(sizes)
+        raw_map.update(seg.get("raw_sizes") or {})
+        colmeta_map.update(seg.get("colmeta") or {})
     if len(small) < 2 and not (forced and small):
         # < 2 small files is nothing to pack — UNLESS a forced
         # delete-touched file is among them, whose rewrite is the point
@@ -3891,7 +3724,7 @@ def compact_small_files(
                 "version": version,
                 "committed_at": time.time(),
                 "mode": "compact",
-                "format": 2,
+                "format": MANIFEST_FORMAT,
                 "segments": carried_entries + repack_entries + new_entries,
                 "bloom_col": m.get("bloom_col"),
                 "bloom_m": m.get("bloom_m"),

@@ -340,39 +340,6 @@ def catalog_maintenance_plan(
     )
 
 
-def register_catalog_views(
-    spark: SparkSession,
-    cat_path: str,
-    *,
-    catalog_version: int | None = None,
-    prefix: str = "",
-    auto_broadcast_bytes: int | None = None,
-) -> list[str]:
-    """SQL façade over the WHOLE catalog: register every table of one
-    catalog version as a temp view (``{prefix}{table}``), all pinned to
-    the layer versions that catalog version names — so a multi-table
-    ``spark.sql`` join/CTE reads a CROSS-TABLE CONSISTENT snapshot
-    ("the star as of catalog version N"), which per-table view
-    registration cannot guarantee while writers are live.
-    ``auto_broadcast_bytes`` passes through to each view's stats-driven
-    broadcast hint.  Returns the registered view names."""
-    from .snapshots import register_snapshot_view
-
-    tables = catalog_tables(spark, cat_path, catalog_version)
-    names = []
-    for table, t in sorted(tables.items()):
-        name = f"{prefix}{table}"
-        register_snapshot_view(
-            spark,
-            t["path"],
-            name,
-            int(t["version"]),
-            auto_broadcast_bytes=auto_broadcast_bytes,
-        )
-        names.append(name)
-    return names
-
-
 # ---------------------------------------------------------------------------
 # WRITE-AUDIT-PUBLISH: catalog-level branching
 # ---------------------------------------------------------------------------
@@ -461,104 +428,6 @@ def wap_provenance(spark: SparkSession, branch_path: str) -> dict:
             "bypass the stale-source guard)"
         )
     return json.loads(_read_text(spark, f"{branch_path}/{_WAP_FILE}"))
-
-
-def wap_materialize_branch(
-    spark: SparkSession,
-    cat_path: str,
-    branch_path: str,
-    *,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    cluster_by: str | None = None,
-    vacuum_keep_last: int | None = None,
-    orphan_grace_seconds: float = 24 * 3600,
-) -> dict:
-    """Convert a PUBLISHED shallow WAP branch into a table that OWNS
-    its files (ADVICE r13: post-publish, the branch's manifest
-    references the retired source layer's data files forever — the
-    other resolution besides keeping the back-reference pin):
-
-    1. ``rewrite_snapshot`` rewrites the branch head into the branch's
-       OWN directories (optionally re-clustered via ``cluster_by``);
-    2. one CAS catalog repoint moves the table to the rewritten
-       version (readers flip atomically; the swap refuses if someone
-       republished the table mid-materialize);
-    3. optional branch retention (``vacuum_keep_last`` — size it from
-       ``vacuum_catalog``'s ``min_pinned`` coherence rule: dropping a
-       branch version an older surviving catalog version still pins
-       breaks that catalog version's reads);
-    4. the source back-reference pin releases ONLY when no surviving
-       branch version still references files outside the branch
-       (``snapshot_external_refs`` — with pre-rewrite history retained,
-       time travel still resolves the source's files, so the pin must
-       stay).
-
-    Returns {"rewritten_version", "catalog_version", "pin_released",
-    "external_refs"}."""
-    from .snapshots import (
-        rewrite_snapshot,
-        snapshot_external_refs,
-        unpin_snapshot_version,
-        vacuum_snapshots,
-    )
-
-    rec = wap_provenance(spark, branch_path)
-    table = str(rec["table"])
-    t = catalog_tables(spark, cat_path).get(table)
-    if t is None or str(t["path"]) != str(branch_path):
-        raise RuntimeError(
-            f"materialize refused: catalog does not pin {branch_path} as "
-            f"table {table!r} — only a PUBLISHED branch materializes (an "
-            "unpublished branch just retires: wap_retire_branch)"
-        )
-    pinned_v = int(t["version"])
-    res = rewrite_snapshot(
-        spark,
-        branch_path,
-        target_file_bytes=target_file_bytes,
-        cluster_by=cluster_by,
-    )
-    nv = int(res["version"])
-
-    def swap() -> int:
-        head = catalog_versions(spark, cat_path)[-1]
-        base = _catalog_manifest(spark, cat_path, head)["tables"]
-        cur = base.get(table)
-        if cur == {"path": branch_path, "version": nv}:
-            return head  # replayed materialize: already repointed
-        if cur != {"path": branch_path, "version": pinned_v}:
-            raise RuntimeError(
-                f"materialize refused: {table!r} moved while rewriting "
-                f"(expected {branch_path} v{pinned_v}, catalog pins "
-                f"{cur}) — re-run against the current state"
-            )
-        return commit_catalog(
-            spark,
-            cat_path,
-            {**base, table: {"path": branch_path, "version": nv}},
-            expect_version=head + 1,
-        )
-
-    cv = retry_commit(swap)
-    if vacuum_keep_last is not None:
-        vacuum_snapshots(
-            spark,
-            branch_path,
-            keep_last=vacuum_keep_last,
-            orphan_grace_seconds=orphan_grace_seconds,
-        )
-    ext = snapshot_external_refs(spark, branch_path)
-    released = False
-    if not ext:
-        released = unpin_snapshot_version(
-            spark, str(rec["source_path"]), ref=str(branch_path)
-        )
-    return {
-        "rewritten_version": nv,
-        "catalog_version": cv,
-        "pin_released": released,
-        "external_refs": len(ext),
-    }
 
 
 def wap_retire_branch(

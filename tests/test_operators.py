@@ -4385,27 +4385,3 @@ class TestAnnIvfadc:
 
         r_raw, r_res = recall(raw_group), recall(res_group)
         assert r_res > r_raw, (r_res, r_raw)
-
-    def test_pq_rebuild_gate(self, spark, tmp_path):
-        """Codebook twin of the IVF rebuild gate: a passing gate
-        commits nothing; a forced degraded-recall branch refits and
-        commits the next codebook version."""
-        import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
-        from pyspark.sql import functions as F
-
-        from aie321_bigdata_movie_kpi_1m_spark.plans import vectors
-
-        layer = str(tmp_path / "pq")
-        emb = spark.read.parquet(
-            "/root/testdata/sf0.001/embeddings.parquet"
-        ).select("vec_id", "embedding")
-        rep = vectors.pq_rebuild_gate(spark, emb, layer, min_recall=0.0)
-        assert rep["rebuilt"] is False
-        assert rep["model_version"] == 1
-        assert 0.0 <= rep["recall"] <= 1.0
-        fits = vectors._ANN_FIT_RUNS["pq"]
-        rep2 = vectors.pq_rebuild_gate(spark, emb, layer, min_recall=1.01)
-        assert rep2["rebuilt"] is True
-        assert rep2["model_version"] == 2
-        assert vectors._ANN_FIT_RUNS["pq"] == fits + 1
-        assert snap.snapshot_versions(spark, layer) == [1, 2]

@@ -929,6 +929,28 @@ def test_no_hand_rolled_fixture_registries():
     assert not hits, "\n".join(hits)
 
 
+def test_scale_tags_come_from_catalog_tag():
+    """Plans name a scale's scratch directory with catalog._tag, the key
+    fixture_layer caches under, never with a raw basename of sf_dir
+    (``sf0.001`` vs ``sf0_001``)."""
+    import inspect
+    import pathlib
+    import re
+
+    from aie321_bigdata_movie_kpi_1m_spark.plans import catalog
+
+    hand_rolled = re.compile(r"basename\(.*sf_dir")
+    tag_def = inspect.getsource(catalog._tag).splitlines()
+    hits = [
+        f"{path.name}:{n}: {line}"
+        for path in sorted(pathlib.Path(catalog.__file__).parent.glob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if hand_rolled.search(line)
+        and not (path.name == "catalog.py" and line in tag_def)
+    ]
+    assert not hits, "\n".join(hits)
+
+
 def test_compact_roundtrip_rebuilds_a_wiped_input(spark):
     """The 48-file compaction input is a cached fixture layer, but a wipe
     of its directory mid-process triggers a rebuild, not a

@@ -763,12 +763,10 @@ def pruning_case(draw):
         ),
         st.tuples(st.just("in"), st.lists(_PRUNE_VALUE, max_size=3)),
     )
-    return segments, draw(st.lists(pred, min_size=1, max_size=3)), draw(
-        st.booleans()
-    )
+    return segments, draw(st.lists(pred, min_size=1, max_size=3))
 
 
-def _pruning_layer(segments, segmented):
+def _pruning_layer(segments):
     """(manifest, segment files by path, rows by file) for a layer."""
     from aie321_bigdata_movie_kpi_1m_spark.sources import snapshots
     from aie321_bigdata_movie_kpi_1m_spark.sources.pruning import bits_to_hex
@@ -776,7 +774,7 @@ def _pruning_layer(segments, segmented):
         bloom_probe_positions,
     )
 
-    m = {"format": 2 if segmented else 1, "segments": [], **_PRUNE_BLOOM}
+    m = {"format": 2, "segments": [], **_PRUNE_BLOOM}
     seg_files, rows_by_file = {}, {}
     m_bits, k = _PRUNE_BLOOM["bloom_m"], _PRUNE_BLOOM["bloom_k"]
     for si, files in enumerate(segments):
@@ -816,13 +814,6 @@ def _pruning_layer(segments, segmented):
                 ),
             }
         )
-    if not segmented:
-        m["files"] = [f for seg in seg_files.values() for f in seg["files"]]
-        for key in ("stats", "blooms"):
-            m[key] = {
-                b: v for seg in seg_files.values() for b, v in seg[key].items()
-            }
-        del m["segments"]
     return m, seg_files, rows_by_file
 
 
@@ -859,8 +850,8 @@ def test_manifest_pruning_is_lossless(case):
         _bloom_pos_lists,
     )
 
-    segments, raw_preds, segmented = case
-    m, seg_files, rows_by_file = _pruning_layer(segments, segmented)
+    segments, raw_preds = case
+    m, seg_files, rows_by_file = _pruning_layer(segments)
     preds = [_Pred(op, "c", bound) for op, bound in raw_preds]
     kept, _ = plan_files(
         m, preds, _bloom_pos_lists(m, preds), seg_files.__getitem__

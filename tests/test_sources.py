@@ -97,6 +97,53 @@ def test_footer_schema_equals_inferred_schema_without_a_job(spark, sf_dir, tmp_p
     assert tracker.getJobIdsForGroup("footer-schema-read") == []
 
 
+@pytest.mark.parametrize("rereader", ["file_stats", "file_blooms", "enforce_checks"])
+def test_commit_rereads_need_no_schema_job(spark, tmp_path, rereader):
+    """A commit's stats, Bloom and CHECK passes re-read the staged delta
+    with the schema in its parquet footer: every Spark job they run is
+    their own aggregate (called from snapshots.py), with no
+    schema-inference job (called from the py4j ``parquet`` entry) in
+    front of it."""
+    import time
+
+    from aie321_bigdata_movie_kpi_1m_spark.sources import snapshots as snap
+
+    data_dir = str(tmp_path / "delta")
+    spark.range(0, 100, 1, 2).selectExpr("id AS k", "id % 7 AS v").write.parquet(
+        data_dir
+    )
+    files = sorted(snap.parquet_file_sizes(spark, data_dir))
+    run = {
+        "file_stats": lambda: snap._file_stats(spark, data_dir, files, ["k"]),
+        "file_blooms": lambda: snap._file_blooms(spark, data_dir, files, "k"),
+        "enforce_checks": lambda: snap._enforce_checks(
+            spark, data_dir, {"nonneg": "k >= 0"}
+        ),
+    }[rereader]
+    group = f"commit-reread-{rereader}"
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    try:
+        sc.setJobGroup(group, rereader)
+        run()
+        sc.setJobGroup(f"{group}-after", "marker")
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the marker job was posted after every re-read job: once it is
+    # visible, so is each of theirs
+    deadline = time.monotonic() + 10
+    while not tracker.getJobIdsForGroup(f"{group}-after"):
+        assert time.monotonic() < deadline, "marker job never observed"
+        time.sleep(0.05)
+    call_sites = [
+        tracker.getStageInfo(st).name
+        for job in tracker.getJobIdsForGroup(group)
+        for st in tracker.getJobInfo(job).stageIds
+    ]
+    assert call_sites
+    assert all("snapshots.py" in c for c in call_sites), call_sites
+
+
 def test_footer_schema_falls_back_to_inference(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -2921,18 +2968,25 @@ class TestManifestSegmentation:
         }
         assert got == {4: 4 % 7, 5: 999, 7: 999}
 
-    def test_legacy_inline_manifest_reads_and_migrates(
-        self, spark, tmp_path, monkeypatch
-    ):
+    def test_inline_manifest_is_refused(self, spark, tmp_path, monkeypatch):
+        """Segmented manifests are the only layout: a hand-made inline
+        (format-1) manifest has no ``segments``, so every reader and
+        writer must refuse it by path instead of reading an empty
+        table."""
         import json
         import os
 
+        from pyspark.errors import AnalysisException
+
         import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
+        from aie321_bigdata_movie_kpi_1m_spark.sources.snapshot_batch import (
+            plan_snapshot_scan,
+            read_snapshot_pushdown,
+        )
 
         path = str(tmp_path / "layer")
         self._clustered(spark, path, monkeypatch, snap, n=4)
-        # rewrite v1.json as a FORMAT-1 inline manifest (the pre-segment
-        # layout) from the materialized view
+        # rewrite v1.json as an inline manifest from the materialized view
         m = snap._manifest(spark, path, 1)
         legacy = {
             k: m[k]
@@ -2956,26 +3010,28 @@ class TestManifestSegmentation:
             os.remove(crc)
         with open(mpath, "w") as fh:
             json.dump(legacy, fh, default=str)
-        # reads, pruning, counts all work on the legacy layout
-        assert snap.read_snapshot(spark, path).count() == 1600
-        assert snap.snapshot_row_count(spark, path) == 1600
-        band = snap.snapshot_files(spark, path, prune_range=("k", 0, 10))
-        assert len(band) == 1
-        # the first APPEND migrates: inline maps pack into segments once
-        snap.commit_snapshot(
-            spark,
-            spark.range(1600, 1650).selectExpr("id AS k", "id % 7 AS v"),
-            path,
-            mode="append",
-            stats_cols=["k"],
-        )
-        raw2 = snap._manifest_raw(spark, path, 2)
-        assert raw2["format"] == 2 and "files" not in raw2
-        assert snap.read_snapshot(spark, path).count() == 1650
-        # migrated entries keep per-file stats: pruning stays sharp
-        snap._SEGMENT_READS["n"] = 0
-        band = snap.snapshot_files(spark, path, prune_range=("k", 0, 10))
-        assert len(band) == 1 and snap._SEGMENT_READS["n"] <= 2
+        refused = "v1.json: manifest format None is not supported"
+        with pytest.raises(ValueError, match=refused):
+            snap.read_snapshot(spark, path)
+        with pytest.raises(ValueError, match=refused):
+            snap.snapshot_row_count(spark, path)
+        with pytest.raises(ValueError, match=refused):
+            snap.snapshot_files(spark, path, prune_range=("k", 0, 10))
+        with pytest.raises(ValueError, match=refused):
+            snap.commit_snapshot(
+                spark,
+                spark.range(1600, 1650).selectExpr("id AS k", "id % 7 AS v"),
+                path,
+                mode="append",
+                stats_cols=["k"],
+            )
+        assert snap.snapshot_versions(spark, path) == [1]
+        with pytest.raises(ValueError, match=refused):
+            plan_snapshot_scan(path, None, [])
+        # the DataSource raises in its Python worker; Spark re-raises the
+        # worker's ValueError inside an AnalysisException
+        with pytest.raises(AnalysisException, match=f"ValueError: .*{refused}"):
+            read_snapshot_pushdown(spark, path).where("k < 10").collect()
 
 
 class TestEqualityDeletes:
@@ -5663,56 +5719,6 @@ class TestTableCatalog:
         assert tc.catalog_versions(spark, cat) == [1, 2, 3]
         assert tc.read_catalog_table(spark, cat, "docs").count() == 5
 
-    def test_register_catalog_views_consistent_sql(self, spark, tmp_path):
-        """The catalog-level SQL façade: all views pin ONE catalog
-        version, so a SQL join reads a cross-table consistent snapshot
-        even after later transactions move the head."""
-        import aie321_bigdata_movie_kpi_1m_spark.sources.table_catalog as tc
-
-        cat = str(tmp_path / "cat")
-        pa, pb = str(tmp_path / "orders"), str(tmp_path / "dim")
-        self._base(spark, cat, pa, pb, tc)
-        tc.multi_table_commit(
-            spark,
-            cat,
-            [
-                (
-                    "orders",
-                    spark.range(100, 105).selectExpr(
-                        "id AS k", "id * 10 AS amt"
-                    ),
-                    pa,
-                    {"mode": "append"},
-                ),
-                (
-                    "dim",
-                    spark.createDataFrame(
-                        [(0, "gold"), (1, "gold")], "grp long, tier string"
-                    ),
-                    pb,
-                    {},
-                ),
-            ],
-        )
-        names = tc.register_catalog_views(
-            spark, cat, catalog_version=1, prefix="v1_"
-        )
-        assert names == ["v1_dim", "v1_orders"]
-        row = spark.sql(
-            """SELECT COUNT(*) AS n,
-                      (SELECT COUNT(DISTINCT tier) FROM v1_dim) AS tiers
-               FROM v1_orders"""
-        ).first()
-        assert row["n"] == 10 and row["tiers"] == 2  # v1 star throughout
-        tc.register_catalog_views(spark, cat, prefix="head_")
-        row = spark.sql(
-            """SELECT COUNT(*) AS n,
-                      (SELECT COUNT(DISTINCT tier) FROM head_dim) AS tiers
-               FROM head_orders"""
-        ).first()
-        assert row["n"] == 15 and row["tiers"] == 1
-
-
 class TestWriteAuditPublish:
     """Catalog-level WAP branching: fork isolation, audit gating,
     atomic repoint, stale-source refusal, provenance guard."""
@@ -6052,66 +6058,6 @@ class TestSnapshotPins:
         tc.wap_publish(spark, cat, br2)
         with pytest.raises(RuntimeError, match="retire refused"):
             tc.wap_retire_branch(spark, cat, br2)
-
-    def test_materialize_branch_owns_files_and_releases_pin(
-        self, spark, tmp_path
-    ):
-        """ADVICE r13 resolution #2: a published shallow branch
-        rewrites into its own directories, the catalog repoints at the
-        rewritten version, and the source pin releases ONLY once no
-        surviving branch version references the source's files — after
-        which the retired source can be dropped outright and the
-        published table still reads in full."""
-        import pytest
-
-        import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
-        import aie321_bigdata_movie_kpi_1m_spark.sources.table_catalog as tc
-
-        cat, src, br = (
-            str(tmp_path / "cat"),
-            str(tmp_path / "docs"),
-            str(tmp_path / "br"),
-        )
-        v = snap.commit_snapshot(
-            spark,
-            spark.range(20).selectExpr("id AS doc_id", "id * 2 AS x"),
-            src,
-            stats_cols=["doc_id"],
-        )
-        tc.commit_catalog(spark, cat, {"docs": {"path": src, "version": v}})
-        tc.wap_branch(spark, cat, "docs", br)
-        # an UNPUBLISHED branch refuses to materialize
-        with pytest.raises(RuntimeError, match="materialize refused"):
-            tc.wap_materialize_branch(spark, cat, br)
-        snap.commit_snapshot(
-            spark,
-            spark.range(20, 25).selectExpr("id AS doc_id", "id * 2 AS x"),
-            br,
-            mode="append",
-        )
-        tc.wap_publish(spark, cat, br)
-        # without branch retention the pre-rewrite history still
-        # references the source -> the pin must STAY
-        r1 = tc.wap_materialize_branch(spark, cat, br)
-        assert not r1["pin_released"] and r1["external_refs"] > 0
-        assert snap.snapshot_pins(spark, src)
-        # catalog already repointed at the rewritten version
-        assert tc.catalog_tables(spark, cat)["docs"]["version"] == r1[
-            "rewritten_version"
-        ]
-        # retire the pre-rewrite history -> the next materialize
-        # completes the release
-        r2 = tc.wap_materialize_branch(
-            spark, cat, br, vacuum_keep_last=1, orphan_grace_seconds=0
-        )
-        assert r2["pin_released"] and r2["external_refs"] == 0
-        assert snap.snapshot_pins(spark, src) == []
-        # the source can now be dropped outright; the published table
-        # reads in full from its OWN files
-        snap.drop_snapshot_layer(spark, src)
-        got = tc.read_catalog_table(spark, cat, "docs")
-        assert got.count() == 25
-        assert got.agg(F.sum("x")).first()[0] == sum(i * 2 for i in range(25))
 
     def test_audit_pins_branch_version_against_races(self, spark, tmp_path):
         """The TOCTOU closure: wap_publish audits and publishes the SAME
