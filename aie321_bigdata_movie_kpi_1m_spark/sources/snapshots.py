@@ -549,30 +549,24 @@ def _manifest(spark: SparkSession, path: str, version: int) -> dict:
     delta) must NOT use this; they stay O(relevant segments) via
     ``_manifest_raw``."""
     m = _manifest_raw(spark, path, version)
-    files: list[str] = []
-    stats: dict = {}
-    counts: dict = {}
-    blooms: dict = {}
-    sizes: dict = {}
-    raw_sizes: dict = {}
-    colmeta: dict = {}
-    for entry in m.get("segments") or []:
-        seg = _read_segment(spark, entry["path"])
-        files.extend(seg["files"])
-        stats.update(seg.get("stats") or {})
-        counts.update(seg.get("counts") or {})
-        blooms.update(seg.get("blooms") or {})
-        sizes.update(seg.get("sizes") or {})
-        raw_sizes.update(seg.get("raw_sizes") or {})
-        colmeta.update(seg.get("colmeta") or {})
-    m["files"] = sorted(files)
-    m["stats"] = stats
-    m["counts"] = counts
-    m["blooms"] = blooms
-    m["sizes"] = sizes
-    m["raw_sizes"] = raw_sizes
-    m["colmeta"] = colmeta
+    segs = [_read_segment(spark, e["path"]) for e in m.get("segments") or []]
+    m.update(_segment_maps(segs))
+    m["files"] = sorted(f for seg in segs for f in seg["files"])
     return m
+
+
+#: the per-file maps a segment file holds, keyed by file basename
+_SEGMENT_MAPS = ("stats", "counts", "blooms", "sizes", "raw_sizes", "colmeta")
+
+
+def _segment_maps(segs) -> dict:
+    """The union of ``segs``' per-file maps, under the segment keys that
+    ``_write_segment_entries`` takes as keyword arguments."""
+    out: dict = {k: {} for k in _SEGMENT_MAPS}
+    for seg in segs:
+        for k in _SEGMENT_MAPS:
+            out[k].update(seg.get(k) or {})
+    return out
 
 
 def _aggregate_seg_stats(bases: list[str], seg_stats: dict) -> dict:
@@ -789,7 +783,8 @@ def _transform_exprs(schema: T.StructType, partition_spec: list[dict]) -> dict:
 def _spec_derived_exprs(schema: T.StructType, spec: list | None) -> dict:
     """Transform expressions for the subset of a carried partition spec
     that still applies to ``schema`` — the BEST-EFFORT derivation
-    mutators (merge/compact) use for their rewritten files: a spec
+    ``_file_stats`` applies to every written delta (commit validates its
+    spec strictly before writing): a spec
     whose source column is absent or re-typed contributes nothing
     (those files are conservatively kept at prune time), so carrying
     the property can never be wrong, only less sharp."""
@@ -810,16 +805,43 @@ def _file_stats(
     files: list[str],
     stats_cols: list[str],
     dom_override: dict | None = None,
-    derived: dict | None = None,
-) -> tuple[dict, dict, dict, dict, dict]:
-    """Per-file min/max for ``stats_cols`` PLUS per-file row counts PLUS
-    per-file COLUMN STATISTICS (an HLL NDV sketch and a null count per
-    stats column — the ANALYZE-lite Delta/Iceberg both record) over the
-    files just written under ``data_dir`` — all in ONE distributed scan
-    of the delta (grouped by input_file_name), keyed by file basename
-    (part file names carry a write UUID, so basenames are unique for the
-    layer's lifetime).  The counts are what make ``snapshot_row_count``
-    a metadata-only operation — the Delta/Iceberg numRecords idea.
+    *,
+    spec: list | None = None,
+    bloom: tuple[str, int, int] | None = None,
+    checks: dict[str, str] | None = None,
+) -> tuple[dict, dict, DataFrame]:
+    """Everything a snapshot manifest records about the files just
+    written under ``data_dir``, from ONE distributed scan of the delta
+    (grouped by input_file_name) — the only read of a staged delta.
+    Per file, keyed by basename (part file names carry a write UUID, so
+    basenames are unique for the layer's lifetime), it records:
+
+    - ``counts``: the row count, which makes ``snapshot_row_count`` a
+      metadata-only operation — the Delta/Iceberg numRecords idea;
+    - ``raw_sizes``: logical in-memory bytes (``_logical_size_expr``),
+      the broadcast-decision input ``snapshot_table_raw_bytes`` folds;
+    - ``stats``: [min, max] per ``stats_cols`` column and per
+      hidden-partitioning transform of ``spec`` that applies to the
+      delta's schema (``_spec_derived_exprs``, derived under its stat
+      name; min/max only — a transform's NDV is bounded by its
+      definition).  With neither, ``stats`` is ``{}``;
+    - ``colmeta``: per stats column an HLL NDV sketch and a null count
+      (the ANALYZE-lite column statistics Delta/Iceberg both record);
+    - ``blooms``: for ``bloom=(col, m, k)`` the sorted Bloom bit
+      positions of ``col`` (``{}`` when the delta lacks ``col``) — the
+      point-lookup complement to min/max, which cannot prune
+      hash-scrambled keys.  Bit i of a value is
+      ``pmod(xxhash64(CAST(v AS STRING), i), m)``, the hash the probe
+      side reproduces in pure Python; NULLs set no bits (a point probe
+      is NULL-rejecting), and ``collect_set`` keeps at most k·m values
+      of state per file.
+
+    ``checks`` (name -> SQL predicate) are totalled over all files in
+    the same scan.  SQL CHECK semantics: a predicate evaluating to NULL
+    is NOT a violation (use an explicit ``col IS NOT NULL`` check for
+    NOT NULL).  Any violation deletes the staged directory and raises
+    ``ValueError`` before anything else is written — the manifest is
+    the commit point, so the layer is untouched.
 
     The HLL sketches (Datasketches via ``hll_sketch_agg``; ~1.5 KB
     each, base64 in the segment file) are MERGEABLE:
@@ -836,28 +858,28 @@ def _file_stats(
     coverage, same contract as missing sketches).
 
     Written files that yield no group are ZERO-ROW part files (e.g. an
-    empty range partition); they get explicit [None, None] stats and a 0
-    count so the pruner can always skip them — distinct from a file with
-    NO stats entry, which a reader must conservatively keep."""
+    empty range partition); they get explicit [None, None] stats, a 0
+    count and an empty bloom so the pruner can always skip them —
+    distinct from a file with NO stats entry, which a reader must
+    conservatively keep.
+
+    Returns ``(maps, doms, src)``: the per-file maps under their segment
+    keys (``_write_segment_entries`` keyword arguments), the sketch
+    domain per stats column, and the scan's unmodified source frame."""
     import base64
 
-    src_df = read_parquet(spark, data_dir)
+    src = read_parquet(spark, data_dir)
+    derived = _spec_derived_exprs(src.schema, spec)
+    df = src
     aggs = [
         F.count(F.lit(1)).alias("__n"),
-        # logical in-memory bytes (see _logical_size_expr): the
-        # broadcast-decision input snapshot_table_raw_bytes folds —
-        # computed in this same single scan of the just-written delta
-        F.sum(_logical_size_expr(src_df.schema)).alias("__raw"),
+        F.sum(_logical_size_expr(src.schema)).alias("__raw"),
     ]
-    # hidden-partitioning transform values (``derived``: stat name ->
-    # Column over the source schema) ride THE SAME single scan — min/max
-    # only, no sketches (a transform's NDV is bounded by its definition)
-    derived = derived or {}
-    for j, (dname, dexpr) in enumerate(derived.items()):
-        src_df = src_df.withColumn(f"__pt_{j}", dexpr)
+    for j, dexpr in enumerate(derived.values()):
+        df = df.withColumn(f"__pt_{j}", dexpr)
         aggs.append(F.min(f"__pt_{j}").alias(f"__ptlo_{j}"))
         aggs.append(F.max(f"__pt_{j}").alias(f"__pthi_{j}"))
-    dtypes = {f.name: f.dataType for f in src_df.schema.fields}
+    dtypes = {f.name: f.dataType for f in src.schema.fields}
     doms = {
         c: (
             "long"
@@ -891,34 +913,61 @@ def _file_stats(
                 f"__nulls_{c}"
             )
         )
-    rows = (
-        src_df.groupBy(F.input_file_name().alias("__f"))
-        .agg(*aggs)
-        .collect()
+    if bloom is not None and bloom[0] not in dtypes:
+        bloom = None
+    if bloom is not None:
+        bcol, bm, bk = bloom
+        key = F.col(bcol)
+        aggs.extend(
+            F.collect_set(
+                F.when(
+                    key.isNotNull(),
+                    F.pmod(F.xxhash64(key.cast("string"), F.lit(i)), F.lit(bm)),
+                )
+            ).alias(f"__bl_{i}")
+            for i in range(bk)
+        )
+    checks = checks or {}
+    aggs.extend(
+        F.sum(F.when(~F.expr(pred), 1).otherwise(0)).alias(f"__ck_{j}")
+        for j, pred in enumerate(checks.values())
     )
-    dnames = list(derived)
-    stats = {
-        f.rsplit("/", 1)[-1]: {
-            c: [None, None] for c in (*stats_cols, *dnames)
-        }
-        for f in files
+    rows = df.groupBy(F.input_file_name().alias("__f")).agg(*aggs).collect()
+    totals = {
+        name: sum(int(r[f"__ck_{j}"] or 0) for r in rows)
+        for j, name in enumerate(checks)
     }
-    counts = {f.rsplit("/", 1)[-1]: 0 for f in files}
-    raw_sizes = {f.rsplit("/", 1)[-1]: 0 for f in files}
+    bad = {name: n for name, n in totals.items() if n > 0}
+    if bad:
+        jvm, fs = _fs(spark, data_dir)
+        fs.delete(_hpath(jvm, data_dir), True)
+        raise ValueError(
+            f"CHECK constraint violation(s), commit rejected: "
+            + ", ".join(
+                f"{n!r} ({c} rows fail: {checks[n]})" for n, c in bad.items()
+            )
+        )
+    bases = [f.rsplit("/", 1)[-1] for f in files]
+    stat_names = (*stats_cols, *derived)
+    stats = {b: {c: [None, None] for c in stat_names} for b in bases}
+    counts = {b: 0 for b in bases}
+    raw_sizes = {b: 0 for b in bases}
+    blooms = {b: [] for b in bases} if bloom is not None else {}
     colmeta = {
-        f.rsplit("/", 1)[-1]: {
-            c: {"hll": None, "nulls": 0, "dom": doms[c]}
-            for c in stats_cols
-        }
-        for f in files
+        b: {c: {"hll": None, "nulls": 0, "dom": doms[c]} for c in stats_cols}
+        for b in bases
     }
     for r in rows:
         base = r["__f"].rsplit("/", 1)[-1]
         stats[base] = {c: [r[f"__lo_{c}"], r[f"__hi_{c}"]] for c in stats_cols}
-        for j, dname in enumerate(dnames):
+        for j, dname in enumerate(derived):
             stats[base][dname] = [r[f"__ptlo_{j}"], r[f"__pthi_{j}"]]
         counts[base] = int(r["__n"])
         raw_sizes[base] = int(r["__raw"] or 0)
+        if bloom is not None:
+            blooms[base] = sorted(
+                {int(b) for i in range(bloom[2]) for b in r[f"__bl_{i}"]}
+            )
         colmeta[base] = {
             c: {
                 "hll": (
@@ -931,7 +980,63 @@ def _file_stats(
             }
             for c in stats_cols
         }
-    return stats, counts, colmeta, raw_sizes, doms
+    maps = {
+        "stats": stats if stat_names else {},
+        "counts": counts,
+        "blooms": blooms,
+        "raw_sizes": raw_sizes,
+        "colmeta": colmeta,
+    }
+    return maps, doms, src
+
+
+def _stage_delta(
+    spark: SparkSession,
+    path: str,
+    version: int,
+    data_dir: str,
+    stats_cols: list[str],
+    *,
+    carried: dict | None,
+    spec: list | None,
+    bloom: tuple[str, int, int] | None,
+    checks: dict[str, str] | None = None,
+) -> tuple[list[dict], dict, DataFrame]:
+    """The post-write step commit, merge and compact share: list the
+    delta staged at ``data_dir``, describe it in the one
+    ``_file_stats`` scan and write its segment files.  ``carried`` is
+    the manifest whose recorded sketch domains the delta inherits
+    (``None`` for content that starts a layer afresh); layers from
+    before domain recording default to the string-cast domain their
+    sketches were built in.  Returns the new segment entries, the
+    layer's sketch domains after this commit and the scan's source
+    frame."""
+    sizes = parquet_file_sizes(spark, data_dir)
+    doms = None
+    if carried is not None:
+        doms = carried.get("stat_doms")
+        if doms is None:
+            doms = {c: "string" for c in stats_cols}
+    maps, new_doms, src = _file_stats(
+        spark, data_dir, list(sizes), stats_cols, doms,
+        spec=spec, bloom=bloom, checks=checks,
+    )
+    entries = _write_segment_entries(
+        spark, path, version, list(sizes), sizes=_basename_sizes(sizes), **maps
+    )
+    stat_doms = {**((carried or {}).get("stat_doms") or {}), **new_doms}
+    return entries, stat_doms, src
+
+
+def _layer_bloom(m: dict) -> tuple[str, int, int] | None:
+    """A manifest's Bloom column with its pinned (m, k), or None."""
+    if not m.get("bloom_col"):
+        return None
+    return (
+        m["bloom_col"],
+        int(m.get("bloom_m") or _BLOOM_BITS),
+        int(m.get("bloom_k") or _BLOOM_HASHES),
+    )
 
 
 _BLOOM_BITS = 8192
@@ -951,52 +1056,6 @@ def bloom_bits_for_rows(target_rows_per_file: int) -> int:
     while m < 12 * max(1, int(target_rows_per_file)):
         m <<= 1
     return m
-
-
-def _file_blooms(
-    spark: SparkSession,
-    data_dir: str,
-    files: list[str],
-    bloom_col: str,
-    *,
-    m: int = _BLOOM_BITS,
-    k: int = _BLOOM_HASHES,
-) -> dict:
-    """Per-file Bloom bit sets for ``bloom_col`` over the files just
-    written — the point-lookup complement to ``_file_stats`` min/max
-    (which cannot prune hash-scrambled high-cardinality keys, because
-    every file's [min, max] then spans the whole domain).  ONE
-    distributed scan of the delta; bits stored as a sorted int list in
-    the manifest (sparse-friendly; at most ``m`` per file).  Hash family
-    is xxhash64 over (value, seed) — executor-side only, which is fine:
-    the bloom picks WHICH FILES are scanned and can never change a
-    result, only cost.  NULLs set no bits (a point probe is
-    NULL-rejecting by SQL semantics)."""
-    probe = F.col(bloom_col).cast("string")
-    rows = (
-        read_parquet(spark, data_dir)
-        .filter(F.col(bloom_col).isNotNull())
-        .select(
-            F.input_file_name().alias("__f"),
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(F.xxhash64(probe, F.lit(i)), F.lit(m))
-                        for i in range(k)
-                    ]
-                )
-            ).alias("__bit"),
-        )
-        .groupBy("__f")
-        .agg(F.collect_set("__bit").alias("__bits"))
-        .collect()
-    )
-    blooms = {f.rsplit("/", 1)[-1]: [] for f in files}
-    for r in rows:
-        blooms[r["__f"].rsplit("/", 1)[-1]] = sorted(
-            int(b) for b in r["__bits"]
-        )
-    return blooms
 
 
 def _bloom_positions_multi(
@@ -1091,6 +1150,13 @@ def commit_snapshot(
     (``df.repartitionByRange(n, col)``) so file ranges are disjoint and
     skipping is sharp.  Append commits merge the prior stats map.
 
+    ``bloom_col`` builds per-file Bloom bits for point lookups
+    (``read_snapshot(prune_point=...)``) in that same scan, sized by
+    ``bloom_bits``.  Both are layer properties fixed by the commit that
+    creates the layer: an append inherits the layer's Bloom column and
+    size whether or not it passes them, and naming a different column
+    or size on an append raises ``ValueError``.
+
     Data files stage under ``data/v{N}-{token}/`` first — the token is
     a per-commit random suffix, so an ABORTED commit's staging dir can
     never collide with a retry's (a crash between staging and manifest
@@ -1183,7 +1249,12 @@ def commit_snapshot(
     # saturated bloom admits everything, silently voiding point-lookup
     # pruning at production file sizes); appends inherit the pinned
     # size, and passing a conflicting value on an append raises rather
-    # than corrupting the layer's recorded parameters
+    # than corrupting the layer's recorded parameters.  The Bloom COLUMN
+    # is a layer property the same way: an append builds bits for the
+    # layer's column whether or not it names it, because bits built for
+    # another column (or none) would skip files holding the probed key
+    if bloom_col is not None and bloom_col not in df.columns:
+        raise ValueError(f"bloom_col {bloom_col!r} is not a delta column")
     bloom_m, bloom_k = int(bloom_bits or _BLOOM_BITS), _BLOOM_HASHES
     if mode == "append" and head and prev.get("bloom_m"):
         if bloom_bits is not None and int(bloom_bits) != int(prev["bloom_m"]):
@@ -1193,6 +1264,14 @@ def commit_snapshot(
                 "layer property fixed at creation"
             )
         bloom_m, bloom_k = int(prev["bloom_m"]), int(prev["bloom_k"])
+    if mode == "append" and head and prev.get("bloom_col"):
+        if bloom_col is not None and bloom_col != prev["bloom_col"]:
+            raise ValueError(
+                f"bloom_col={bloom_col!r} conflicts with the layer's "
+                f"bloom_col={prev['bloom_col']!r} — the Bloom column is a "
+                "layer property fixed at creation"
+            )
+        bloom_col = prev["bloom_col"]
     # the change-feed flag is a TABLE PROPERTY: explicit argument wins,
     # otherwise it survives every commit (Delta's table-property model)
     effective_cdf = (
@@ -1256,48 +1335,20 @@ def commit_snapshot(
         df = df.repartition(nparts, *derived_exprs.values())
     data_dir = f"{path}/data/v{version}-{uuid.uuid4().hex[:8]}"
     df.write.mode("error").parquet(data_dir)
-    if effective_checks:
-        _enforce_checks(spark, data_dir, effective_checks)
-    listed = parquet_file_sizes(spark, data_dir)
-    files = list(listed)
-    # appends inherit the layer's recorded sketch domains; layers from
-    # before domain recording default to the string-cast domain their
-    # sketches were built in
-    if mode == "append" and head:
-        inherited_doms = prev.get("stat_doms")
-        if inherited_doms is None:
-            inherited_doms = {c: "string" for c in stats_cols or []}
-    else:
-        inherited_doms = None
-    stats, counts, colmeta, raw_sizes, stat_doms = _file_stats(
-        spark, data_dir, files, stats_cols or [], inherited_doms,
-        derived_exprs,
-    )
-    if mode == "append" and head:
-        stat_doms = {**(prev.get("stat_doms") or {}), **stat_doms}
-    if not stats_cols and not derived_exprs:
-        stats = {}
-    blooms = (
-        _file_blooms(spark, data_dir, files, bloom_col, m=bloom_m, k=bloom_k)
-        if bloom_col
-        else {}
-    )
-    sizes = _basename_sizes(listed)
     # default=str inside the segment/manifest writers: non-JSON stat
     # types (dates/timestamps) serialize as ISO strings, whose
     # lexicographic order matches their natural order — pass string
     # bounds to prune_range for those columns
-    new_entries = _write_segment_entries(
+    new_entries, stat_doms, _ = _stage_delta(
         spark,
         path,
         version,
-        files,
-        stats,
-        counts,
-        blooms,
-        sizes,
-        colmeta,
-        raw_sizes,
+        data_dir,
+        stats_cols or [],
+        carried=prev if mode == "append" and head else None,
+        spec=effective_spec,
+        bloom=(bloom_col, bloom_m, bloom_k) if bloom_col else None,
+        checks=effective_checks,
     )
     delete_files: list = []
     carried_entries: list = []
@@ -1317,8 +1368,7 @@ def commit_snapshot(
                 "mode": mode,
                 "format": MANIFEST_FORMAT,
                 "segments": carried_entries + new_entries,
-                "bloom_col": bloom_col
-                or (prev.get("bloom_col") if mode == "append" and head else None),
+                "bloom_col": bloom_col,
                 "bloom_m": bloom_m,
                 "bloom_k": bloom_k,
                 "delete_files": delete_files,
@@ -1334,34 +1384,6 @@ def commit_snapshot(
         ),
     )
     return version
-
-
-def _enforce_checks(
-    spark: SparkSession, data_dir: str, checks: dict[str, str]
-) -> None:
-    """Reject the staged delta if any CHECK predicate has violations —
-    ONE aggregate scan of the NEW files only, all predicates at once.
-    SQL CHECK semantics: a predicate evaluating to NULL is NOT a
-    violation (use an explicit ``col IS NOT NULL`` check for NOT NULL).
-    On failure the staged directory is deleted — nothing was committed
-    (the manifest is the commit point), so the layer is untouched."""
-    aggs = [
-        F.sum(F.when(~F.expr(pred), 1).otherwise(0)).alias(name)
-        for name, pred in checks.items()
-    ]
-    row = read_parquet(spark, data_dir).agg(*aggs).first()
-    bad = {
-        name: int(row[name]) for name in checks if row[name] and row[name] > 0
-    }
-    if bad:
-        jvm, fs = _fs(spark, data_dir)
-        fs.delete(_hpath(jvm, data_dir), True)
-        raise ValueError(
-            f"CHECK constraint violation(s), commit rejected: "
-            + ", ".join(
-                f"{n!r} ({c} rows fail: {checks[n]})" for n, c in bad.items()
-            )
-        )
 
 
 def retry_commit(fn, *, attempts: int = 3, backoff_seconds: float = 0.05):
@@ -1668,7 +1690,7 @@ def _apply_deletes_meta(
         df = df.join(dv, ["__dv_file", "__dv_pos"], "left_anti")
     for i, (kpath, key_col, touch) in enumerate(eq):
         keys = (
-            spark.read.parquet(kpath)
+            read_parquet(spark, kpath)
             .select(F.col(key_col).alias(f"__eq_k_{i}"))
             .distinct()
             .withColumn(f"__eq_hit_{i}", F.lit(True))
@@ -1996,7 +2018,7 @@ def delete_snapshot(
     dv_dir = f"{path}/deletes/v{version}-{uuid.uuid4().hex[:8]}"
     matches.write.mode("error").parquet(dv_dir)
     per_file = (
-        spark.read.parquet(dv_dir).groupBy("file").count().collect()
+        read_parquet(spark, dv_dir).groupBy("file").count().collect()
     )  # bounded by the candidate file count, never the data
     touches = {r["file"]: int(r["count"]) for r in per_file}
     n_deleted = sum(touches.values())
@@ -2887,7 +2909,7 @@ def _materialize_eq_preimage(
     jvm, fs = _fs(spark, path)
     final = ch["path"]
     if fs.exists(_hpath(jvm, final)):
-        return spark.read.parquet(final)
+        return read_parquet(spark, final)
     _EQ_PREIMAGE_BUILDS["n"] += 1
     touched = set(ch["touches"])
     files = [
@@ -2910,7 +2932,7 @@ def _materialize_eq_preimage(
         pos_dirs, eq, _ = _split_delete_entries(prev_entries, touched)
         df = _apply_deletes_meta(spark, df, pos_dirs, eq)
     keys = (
-        spark.read.parquet(ch["keys_path"]).select(ch["key_col"]).distinct()
+        read_parquet(spark, ch["keys_path"]).select(ch["key_col"]).distinct()
     )
     pre = (
         df.join(F.broadcast(keys), ch["key_col"], "left_semi")
@@ -2925,7 +2947,7 @@ def _materialize_eq_preimage(
     ):
         # lost the materialization race: the winner's cache serves
         fs.delete(_hpath(jvm, tmp), True)
-    return spark.read.parquet(final)
+    return read_parquet(spark, final)
 
 
 def _changes_from_commits(
@@ -2981,7 +3003,7 @@ def _changes_from_commits(
                 # from the touched files (cached after the first read)
                 step = _materialize_eq_preimage(spark, path, v, ch, prev_m)
             else:
-                step = spark.read.parquet(ch["path"])
+                step = read_parquet(spark, ch["path"])
         else:
             return None
         if step is not None:
@@ -3300,19 +3322,8 @@ def merge_snapshot(
         else:
             carried_entries.append(e)
     files = [f for _, seg in loaded for f in seg["files"]]
-    stats: dict = {}
-    counts_map: dict = {}
-    blooms_map: dict = {}
-    sizes_map: dict = {}
-    raw_map: dict = {}
-    colmeta_map: dict = {}
-    for _, seg in loaded:
-        stats.update(seg.get("stats") or {})
-        counts_map.update(seg.get("counts") or {})
-        blooms_map.update(seg.get("blooms") or {})
-        sizes_map.update(seg.get("sizes") or {})
-        raw_map.update(seg.get("raw_sizes") or {})
-        colmeta_map.update(seg.get("colmeta") or {})
+    loaded_maps = _segment_maps(seg for _, seg in loaded)
+    stats = loaded_maps["stats"]
 
     # exact per-file touch test: join the delta's DISTINCT keys against
     # the (tiny) file-range relation — a file is touched iff some delta
@@ -3395,10 +3406,23 @@ def merge_snapshot(
     else:
         out = delta.select(*cols)  # pure out-of-range insert: zero reads
     out.write.mode("error").parquet(data_dir)
-    if m.get("checks"):
-        # existing rows pass by induction; this rejects a delta that
-        # violates the layer's recorded CHECK constraints
-        _enforce_checks(spark, data_dir, m["checks"])
+    # rewritten files get FRESH stats and blooms under the manifest's
+    # pinned (m, k) and re-derive their hidden-partitioning transform
+    # stats, so a CDC-maintained layer keeps point lookups and pruning
+    # sharp on exactly the hot tail.  The layer's CHECK constraints ride
+    # the same scan (existing rows pass by induction; this rejects a
+    # delta that violates them) ahead of any change-file write
+    new_entries, merge_stat_doms, post = _stage_delta(
+        spark,
+        path,
+        version,
+        data_dir,
+        stats_cols or [],
+        carried=m,
+        spec=m.get("partition_spec"),
+        bloom=_layer_bloom(m),
+        checks=m.get("checks"),
+    )
     # CHANGE DATA FEED: when the table property is on, record this
     # commit's exact row-level delta as a change file — the rewritten
     # region's post-image (read back from the just-written files, no
@@ -3409,7 +3433,7 @@ def merge_snapshot(
     # the generic feed pays two O(table) exceptAll shuffles.
     cdf_entry = None
     if m.get("cdf"):
-        post = spark.read.parquet(data_dir).select(*cols)
+        post = post.select(*cols)
         if touched:
             # lazy checkpoint: the pre-image feeds BOTH exceptAll
             # branches — without it each branch re-scans the touched
@@ -3429,66 +3453,10 @@ def merge_snapshot(
         ch_dir = f"{path}/_changes/v{version}-{uuid.uuid4().hex[:8]}"
         ch.write.mode("error").parquet(ch_dir)
         cdf_entry = {"path": ch_dir}
-    new_sizes = parquet_file_sizes(spark, data_dir)
-    new_files = list(new_sizes)
-    merge_dom_inherit = m.get("stat_doms")
-    if merge_dom_inherit is None:
-        merge_dom_inherit = {c: "string" for c in stats_cols or []}
-    # hidden partitioning: the rewritten files re-derive their transform
-    # stats (best-effort), so a CDC-maintained spec'd layer keeps
-    # pruning sharp instead of degrading to conservative keeps
-    merge_derived = _spec_derived_exprs(
-        spark.read.parquet(data_dir).schema, m.get("partition_spec")
-    )
-    new_stats, new_counts, new_colmeta, new_raw, new_doms = _file_stats(
-        spark, data_dir, new_files, stats_cols or [], merge_dom_inherit,
-        merge_derived,
-    )
-    merge_stat_doms = {**(m.get("stat_doms") or {}), **new_doms}
-    if not stats_cols and not merge_derived:
-        new_stats = {}
-    repack_bases = {f.rsplit("/", 1)[-1] for f in repack_files}
-    # repacked files keep their stats / counts / bloom / column-stat
-    # entries verbatim (their bytes never moved); rewritten files get
-    # FRESH blooms under the manifest's pinned (m, k) — a CDC-maintained
-    # layer merges every cycle, and writing the rewritten region
-    # bloom-less would dull point-lookup skipping on exactly the hot
-    # tail.  O(rewritten bytes), the same order as the merge itself.
-    merge_blooms = (
-        _file_blooms(
-            spark,
-            data_dir,
-            new_files,
-            m["bloom_col"],
-            m=int(m.get("bloom_m") or _BLOOM_BITS),
-            k=int(m.get("bloom_k") or _BLOOM_HASHES),
-        )
-        if m.get("bloom_col") and m["bloom_col"] in cols
-        else {}
-    )
+    # repacked files keep their metadata verbatim (their bytes never
+    # moved); the segment writer picks each chunk's entries by basename
     repack_entries = _write_segment_entries(
-        spark,
-        path,
-        version,
-        repack_files,
-        {b: s for b, s in stats.items() if b in repack_bases},
-        {b: n for b, n in counts_map.items() if b in repack_bases},
-        {b: e for b, e in blooms_map.items() if b in repack_bases},
-        {b: n for b, n in sizes_map.items() if b in repack_bases},
-        {b: cm for b, cm in colmeta_map.items() if b in repack_bases},
-        {b: n for b, n in raw_map.items() if b in repack_bases},
-    )
-    new_entries = _write_segment_entries(
-        spark,
-        path,
-        version,
-        new_files,
-        new_stats,
-        new_counts,
-        merge_blooms,
-        _basename_sizes(new_sizes),
-        new_colmeta,
-        new_raw,
+        spark, path, version, repack_files, **loaded_maps
     )
     rewritten_bases = {f.rsplit("/", 1)[-1] for f in touched}
     carried_deletes = _trim_delete_entries(
@@ -3553,8 +3521,8 @@ def compact_small_files(
     "fold_deletes"-only maintenance plan names — without it, a delete
     touching only healthy-sized files would survive the size sweep and
     the layer would keep paying the merge-on-read tax while reporting
-    itself compacted.  Packed outputs get fresh Bloom bit sets under
-    the manifest's pinned (m, k) when the layer carries a bloom_col
+    itself compacted.  Packed outputs get fresh Bloom bit sets for the
+    layer's inherited Bloom column under the manifest's pinned (m, k)
     (same contract as ``rewrite_snapshot``) — the maintenance job must
     never un-tune the index it maintains.
 
@@ -3601,12 +3569,7 @@ def compact_small_files(
     small: list[str] = []
     small_bytes = 0
     repack_files: list[str] = []
-    stats_map: dict = {}
-    counts_map: dict = {}
-    blooms_map: dict = {}
-    sizes_map: dict = {}
-    raw_map: dict = {}
-    colmeta_map: dict = {}
+    split_segs: list[dict] = []
     total_files = 0
     # per-segment: a segment with NO small file carries into the new
     # manifest verbatim (entry reference, metadata untouched); a mixed
@@ -3624,12 +3587,7 @@ def compact_small_files(
         small_bytes += sum(_size(f, sizes) for f in seg_small)
         small_set = set(seg_small)
         repack_files.extend(f for f in seg["files"] if f not in small_set)
-        stats_map.update(seg.get("stats") or {})
-        counts_map.update(seg.get("counts") or {})
-        blooms_map.update(seg.get("blooms") or {})
-        sizes_map.update(sizes)
-        raw_map.update(seg.get("raw_sizes") or {})
-        colmeta_map.update(seg.get("colmeta") or {})
+        split_segs.append(seg)
     if len(small) < 2 and not (forced and small):
         # < 2 small files is nothing to pack — UNLESS a forced
         # delete-touched file is among them, whose rewrite is the point
@@ -3648,69 +3606,24 @@ def compact_small_files(
     version = head + 1
     data_dir = f"{path}/data/v{version}-{uuid.uuid4().hex[:8]}"
     raw.coalesce(n_out).write.mode("error").parquet(data_dir)
-    new_sizes = parquet_file_sizes(spark, data_dir)
-    new_files = list(new_sizes)
-    compact_dom_inherit = m.get("stat_doms")
-    if compact_dom_inherit is None:
-        compact_dom_inherit = {c: "string" for c in stats_cols or []}
-    # re-derive hidden-partitioning transform stats for the packed
-    # files (best-effort — see _spec_derived_exprs)
-    packed_schema = spark.read.parquet(data_dir).schema
-    compact_derived = _spec_derived_exprs(
-        packed_schema, m.get("partition_spec")
-    )
-    new_stats, new_counts, new_colmeta, new_raw, new_doms = _file_stats(
-        spark, data_dir, new_files, stats_cols or [], compact_dom_inherit,
-        compact_derived,
-    )
-    compact_stat_doms = {**(m.get("stat_doms") or {}), **new_doms}
-    if not stats_cols and not compact_derived:
-        new_stats = {}
     # the packed outputs hold MOST of the layer's rows after a few
-    # maintenance cycles — writing them bloom-less (as pre-r10 code
-    # did with a literal ``{}``) strips the point-lookup index off
-    # exactly the files compaction produces AND voids their segments'
-    # bloom unions; recompute with the manifest's pinned (m, k) so old
-    # and new files probe bit-identically (same contract as
-    # ``rewrite_snapshot``'s recompute).  O(packed bytes) — the scan
-    # cost the rewrite already paid.
-    bloom_col = m.get("bloom_col")
-    new_blooms = (
-        _file_blooms(
-            spark,
-            data_dir,
-            new_files,
-            bloom_col,
-            m=int(m.get("bloom_m") or _BLOOM_BITS),
-            k=int(m.get("bloom_k") or _BLOOM_HASHES),
-        )
-        if bloom_col and bloom_col in packed_schema.names
-        else {}
+    # maintenance cycles: they get fresh stats, re-derived transform
+    # stats (best-effort — see _spec_derived_exprs) and blooms under the
+    # manifest's pinned (m, k), so old and new files probe
+    # bit-identically and the maintenance job never un-tunes the index
+    # it maintains.  O(packed bytes) — the scan cost the rewrite paid
+    new_entries, compact_stat_doms, _ = _stage_delta(
+        spark,
+        path,
+        version,
+        data_dir,
+        stats_cols or [],
+        carried=m,
+        spec=m.get("partition_spec"),
+        bloom=_layer_bloom(m),
     )
-    repack_bases = {f.rsplit("/", 1)[-1] for f in repack_files}
     repack_entries = _write_segment_entries(
-        spark,
-        path,
-        version,
-        repack_files,
-        {b: s for b, s in stats_map.items() if b in repack_bases},
-        {b: n for b, n in counts_map.items() if b in repack_bases},
-        {b: e for b, e in blooms_map.items() if b in repack_bases},
-        {b: n for b, n in sizes_map.items() if b in repack_bases},
-        {b: cm for b, cm in colmeta_map.items() if b in repack_bases},
-        {b: n for b, n in raw_map.items() if b in repack_bases},
-    )
-    new_entries = _write_segment_entries(
-        spark,
-        path,
-        version,
-        new_files,
-        new_stats,
-        new_counts,
-        new_blooms,
-        _basename_sizes(new_sizes),
-        new_colmeta,
-        new_raw,
+        spark, path, version, repack_files, **_segment_maps(split_segs)
     )
     rewritten_bases = {f.rsplit("/", 1)[-1] for f in small}
     carried_deletes = _trim_delete_entries(
@@ -3843,9 +3756,9 @@ def rewrite_snapshot(
         bloom_col=head_m.get("bloom_col"),
         checks=head_m.get("checks") or None,
         # a re-layout keeps the layer's hidden-partitioning property and
-        # RECOMPUTES the transform stats over the rewritten files (the
-        # one mutator that re-derives them; merge/compact leave their new
-        # files conservatively unpruned until the next rewrite)
+        # RECOMPUTES the transform stats over the rewritten files, as
+        # merge and compact do for theirs (best-effort there: a spec
+        # whose source column no longer applies derives nothing)
         partition_spec=head_m.get("partition_spec"),
     )
     return {

@@ -97,14 +97,49 @@ def test_footer_schema_equals_inferred_schema_without_a_job(spark, sf_dir, tmp_p
     assert tracker.getJobIdsForGroup("footer-schema-read") == []
 
 
-@pytest.mark.parametrize("rereader", ["file_stats", "file_blooms", "enforce_checks"])
-def test_commit_rereads_need_no_schema_job(spark, tmp_path, rereader):
-    """A commit's stats, Bloom and CHECK passes re-read the staged delta
-    with the schema in its parquet footer: every Spark job they run is
-    their own aggregate (called from snapshots.py), with no
-    schema-inference job (called from the py4j ``parquet`` entry) in
-    front of it."""
+def _group_jobs(spark, group, fn):
+    """Run ``fn`` under Spark job group ``group``; return its result and
+    the call site of every stage of every job it ran."""
     import time
+
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    try:
+        sc.setJobGroup(group, group)
+        out = fn()
+        sc.setJobGroup(f"{group}-after", "marker")
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the marker job was posted after every job of the group: once it is
+    # visible, so is each of theirs
+    deadline = time.monotonic() + 10
+    while not tracker.getJobIdsForGroup(f"{group}-after"):
+        assert time.monotonic() < deadline, "marker job never observed"
+        time.sleep(0.05)
+    jobs = tracker.getJobIdsForGroup(group)
+    sites = [
+        [tracker.getStageInfo(st).name for st in tracker.getJobInfo(j).stageIds]
+        for j in jobs
+    ]
+    return out, sites
+
+
+def _py4j_parquet_jobs(sites) -> int:
+    """Jobs started from the py4j ``parquet`` entry: a parquet write, or
+    the schema-inference job of a read given no schema."""
+    return sum(
+        any(s.startswith("parquet at ") for s in job)
+        for job in sites
+    )
+
+
+@pytest.mark.parametrize("rereader", ["file_stats"])
+def test_commit_rereads_need_no_schema_job(spark, tmp_path, rereader):
+    """A commit's one scan of the staged delta reads it with the schema
+    in its parquet footer: every Spark job it runs is its own aggregate
+    (called from snapshots.py), with no schema-inference job (called
+    from the py4j ``parquet`` entry) in front of it."""
+    import uuid
 
     from aie321_bigdata_movie_kpi_1m_spark.sources import snapshots as snap
 
@@ -113,33 +148,15 @@ def test_commit_rereads_need_no_schema_job(spark, tmp_path, rereader):
         data_dir
     )
     files = sorted(snap.parquet_file_sizes(spark, data_dir))
-    run = {
-        "file_stats": lambda: snap._file_stats(spark, data_dir, files, ["k"]),
-        "file_blooms": lambda: snap._file_blooms(spark, data_dir, files, "k"),
-        "enforce_checks": lambda: snap._enforce_checks(
-            spark, data_dir, {"nonneg": "k >= 0"}
+    _, sites = _group_jobs(
+        spark,
+        f"commit-reread-{rereader}-{uuid.uuid4().hex[:8]}",
+        lambda: snap._file_stats(
+            spark, data_dir, files, ["k"], bloom=("k", 64, 2),
+            checks={"nonneg": "k >= 0"},
         ),
-    }[rereader]
-    group = f"commit-reread-{rereader}"
-    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
-    try:
-        sc.setJobGroup(group, rereader)
-        run()
-        sc.setJobGroup(f"{group}-after", "marker")
-        spark.range(1).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the marker job was posted after every re-read job: once it is
-    # visible, so is each of theirs
-    deadline = time.monotonic() + 10
-    while not tracker.getJobIdsForGroup(f"{group}-after"):
-        assert time.monotonic() < deadline, "marker job never observed"
-        time.sleep(0.05)
-    call_sites = [
-        tracker.getStageInfo(st).name
-        for job in tracker.getJobIdsForGroup(group)
-        for st in tracker.getJobInfo(job).stageIds
-    ]
+    )
+    call_sites = [s for job in sites for s in job]
     assert call_sites
     assert all("snapshots.py" in c for c in call_sites), call_sites
 
@@ -7086,3 +7103,215 @@ class TestR16Hardening:
         assert all(
             isinstance(k, tuple) and len(k) == 2 for k in cache
         ), cache.keys()
+
+
+def _reference_blooms(spark, files, col, m, k):
+    """Per-file Bloom bits built with the explode + ``collect_set`` shape
+    the commit path used before the bits rode the stats scan."""
+    probe = F.col(col).cast("string")
+    rows = (
+        spark.read.parquet(*files)
+        .filter(F.col(col).isNotNull())
+        .select(
+            F.input_file_name().alias("__f"),
+            F.explode(
+                F.array(
+                    *[F.pmod(F.xxhash64(probe, F.lit(i)), F.lit(m)) for i in range(k)]
+                )
+            ).alias("__bit"),
+        )
+        .groupBy("__f")
+        .agg(F.collect_set("__bit").alias("__bits"))
+        .collect()
+    )
+    out = {f.rsplit("/", 1)[-1]: [] for f in files}
+    for r in rows:
+        out[r["__f"].rsplit("/", 1)[-1]] = sorted(int(b) for b in r["__bits"])
+    return out
+
+
+class TestOneScanDelta:
+    """Commit, merge and compaction describe a staged delta in one scan:
+    stats, counts, sketches, Bloom bits and CHECK totals together."""
+
+    @pytest.mark.parametrize("key_type", ["bigint", "string"])
+    def test_bloom_bits_match_reference(self, spark, tmp_path, key_type):
+        import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
+
+        path = str(tmp_path / "layer")
+        schema = f"k {key_type}, v string"
+        cast = str if key_type == "string" else int
+        rows = [(cast(i) if i % 5 else None, f"v{i}") for i in range(60)]
+        snap.commit_snapshot(
+            spark, spark.createDataFrame(rows, schema).repartition(3), path,
+            stats_cols=["k"], bloom_col="k", bloom_bits=256,
+        )
+        # an all-NULL-key file, then a zero-row file
+        snap.commit_snapshot(
+            spark, spark.createDataFrame([(None, "n")] * 4, schema).coalesce(1),
+            path, mode="append",
+        )
+        snap.commit_snapshot(
+            spark, spark.createDataFrame([], schema), path, mode="append"
+        )
+        snap.merge_snapshot(
+            spark,
+            spark.createDataFrame([(cast(7), "upd"), (cast(900), "ins")], schema),
+            path, "k", stats_cols=["k"],
+        )
+        res = snap.compact_small_files(spark, path, stats_cols=["k"])
+        assert res["version"] == 5
+        empty = []
+        for v in range(1, 6):
+            m = snap._manifest(spark, path, v)
+            before = set(snap._manifest(spark, path, v - 1)["files"]) if v > 1 else set()
+            new = [f.rsplit("/", 1)[-1] for f in m["files"] if f not in before]
+            ref = _reference_blooms(
+                spark, [f for f in m["files"] if f not in before], "k",
+                m["bloom_m"], m["bloom_k"],
+            )
+            assert new and {b: m["blooms"][b] for b in new} == ref, v
+            empty += [(v, m["counts"][b]) for b in new if m["blooms"][b] == []]
+        # the all-NULL file (4 rows) and the zero-row file set no bits
+        assert empty == [(2, 4), (3, 0)]
+
+    def test_append_inherits_the_layers_bloom_column(self, spark, tmp_path):
+        import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
+
+        path = str(tmp_path / "layer")
+        schema = "k long, v string"
+        snap.commit_snapshot(
+            spark,
+            spark.createDataFrame([(i, f"v{i}") for i in range(70)], schema)
+            .repartitionByRange(7, "k"),
+            path, bloom_col="k",
+        )
+        # relabelling the layer's Bloom column would leave old files with
+        # bits for another column, so a pruned probe skips real rows
+        with pytest.raises(ValueError, match="bloom_col"):
+            snap.commit_snapshot(
+                spark, spark.createDataFrame([(100, "v7")], schema), path,
+                mode="append", bloom_col="v",
+            )
+        with pytest.raises(ValueError, match="not a delta column"):
+            snap.commit_snapshot(
+                spark, spark.createDataFrame([(100, "v7")], schema), path,
+                mode="append", bloom_col="nope",
+            )
+        assert snap.snapshot_versions(spark, path) == [1]
+        # an append that omits bloom_col still builds the layer's bits
+        snap.commit_snapshot(
+            spark, spark.createDataFrame([(500, "x")], schema), path,
+            mode="append",
+        )
+        m = snap._manifest(spark, path, 2)
+        assert m["bloom_col"] == "k"
+        assert set(m["blooms"]) == {f.rsplit("/", 1)[-1] for f in m["files"]}
+        kept = snap.snapshot_files(spark, path, prune_point=("k", 500))
+        assert len(kept) < len(m["files"])
+        got = snap.read_snapshot(spark, path, prune_point=("k", 500)).collect()
+        assert [(r["k"], r["v"]) for r in got] == [(500, "x")]
+
+    def test_append_commit_runs_at_most_four_jobs(self, spark, tmp_path):
+        import uuid
+
+        import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
+
+        path = str(tmp_path / "layer")
+        schema = "k long, v string"
+        kwargs = dict(stats_cols=["k"], bloom_col="k",
+                      checks={"k_nonneg": "k >= 0"})
+        snap.commit_snapshot(
+            spark, spark.createDataFrame([(i, "a") for i in range(50)], schema),
+            path, **kwargs,
+        )
+        delta = spark.createDataFrame([(i, "b") for i in range(50, 90)], schema)
+        v, sites = _group_jobs(
+            spark, f"one-scan-append-{uuid.uuid4().hex[:8]}",
+            lambda: snap.commit_snapshot(spark, delta, path, mode="append",
+                                         **kwargs),
+        )
+        assert v == 2
+        # the write, then one grouped scan (map + result stage jobs)
+        assert len(sites) <= 4, sites
+        assert _py4j_parquet_jobs(sites) == 1, sites  # the write
+
+    def test_merge_insert_and_compact_run_no_post_write_inference(
+        self, spark, tmp_path
+    ):
+        import uuid
+
+        import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
+
+        path = str(tmp_path / "layer")
+        schema = "k long, v string"
+        snap.commit_snapshot(
+            spark,
+            spark.createDataFrame([(i, "a") for i in range(40)], schema)
+            .repartitionByRange(4, "k"),
+            path, stats_cols=["k"], bloom_col="k",
+            partition_spec=[{"transform": "bucket", "n": 4, "source": "k"}],
+        )
+        delta = spark.createDataFrame([(1000, "new")], schema)
+        res, sites = _group_jobs(
+            spark, f"merge-insert-{uuid.uuid4().hex[:8]}",
+            lambda: snap.merge_snapshot(spark, delta, path, "k",
+                                        stats_cols=["k"]),
+        )
+        assert res["files_rewritten"] == 0
+        assert _py4j_parquet_jobs(sites) == 1, sites  # the write
+        n_files = len(snap.snapshot_files(spark, path))
+        res, sites = _group_jobs(
+            spark, f"compact-{uuid.uuid4().hex[:8]}",
+            lambda: snap.compact_small_files(spark, path, stats_cols=["k"]),
+        )
+        assert res["files_rewritten"] == n_files
+        # the write and the mergeSchema read of the small files; the
+        # packed output is described from its footer
+        assert _py4j_parquet_jobs(sites) == 2, sites
+        m = snap._manifest(spark, path, res["version"])
+        assert all(m["blooms"][b] for b in m["blooms"])
+        assert all("_pt_bucket_4_k" in s for s in m["stats"].values())
+
+    def test_rejected_merge_leaves_no_change_files(self, spark, tmp_path):
+        import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
+
+        path = str(tmp_path / "layer")
+        schema = "k long, n long"
+        snap.commit_snapshot(
+            spark, spark.createDataFrame([(1, 1), (2, 2)], schema), path,
+            stats_cols=["k"], checks={"n_nonneg": "n >= 0"}, change_feed=True,
+        )
+        with pytest.raises(ValueError, match="n_nonneg"):
+            snap.merge_snapshot(
+                spark, spark.createDataFrame([(2, -1), (3, 3)], schema), path,
+                "k",
+            )
+        assert snap.snapshot_versions(spark, path) == [1]
+        assert not os.path.exists(os.path.join(path, "_changes"))
+        assert len(os.listdir(os.path.join(path, "data"))) == 1
+
+    def test_change_file_read_runs_no_inference_job(self, spark, tmp_path):
+        import uuid
+
+        import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
+
+        path = str(tmp_path / "layer")
+        schema = "k long, v string"
+        snap.commit_snapshot(
+            spark, spark.createDataFrame([(1, "a"), (2, "b")], schema), path,
+            stats_cols=["k"], change_feed=True,
+        )
+        snap.merge_snapshot(
+            spark, spark.createDataFrame([(2, "B")], schema), path, "k",
+            stats_cols=["k"],
+        )
+        feed, sites = _group_jobs(
+            spark, f"change-read-{uuid.uuid4().hex[:8]}",
+            lambda: snap.snapshot_changes(spark, path, 1, 2),
+        )
+        assert _py4j_parquet_jobs(sites) == 0, sites
+        assert sorted((r["change_type"], r["k"], r["v"]) for r in feed.collect()) == [
+            ("delete", 2, "b"),
+            ("insert", 2, "B"),
+        ]
