@@ -929,6 +929,27 @@ def test_no_hand_rolled_fixture_registries():
     assert not hits, "\n".join(hits)
 
 
+def test_one_snapshot_manifest_writer():
+    """Version manifests (``_manifests/v{N}.json``) are written by
+    ``snapshots._write_manifest`` only: exactly one ``_write_text`` call
+    in ``sources/snapshots.py`` targets that path."""
+    import ast
+    import pathlib
+
+    from aie321_bigdata_movie_kpi_1m_spark.sources import snapshots
+
+    tree = ast.parse(pathlib.Path(snapshots.__file__).read_text())
+    sites = [
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Name)
+        and node.func.id == "_write_text"
+        and "_MANIFEST_DIR}/v" in ast.unparse(node.args[1])
+    ]
+    assert len(sites) == 1, f"manifest _write_text calls at lines {sites}"
+
+
 def test_scale_tags_come_from_catalog_tag():
     """Plans name a scale's scratch directory with catalog._tag, the key
     fixture_layer caches under, never with a raw basename of sf_dir

@@ -1627,6 +1627,47 @@ class TestSnapshotTxn:
             == head
         )
 
+    @pytest.mark.parametrize(
+        "mutator", ["commit", "delete", "delete_keys", "merge"]
+    )
+    def test_txn_replay_is_noop(self, spark, tmp_path, mutator):
+        """Every txn-aware mutator: a replayed (app, version) — here with
+        a payload that WOULD change the layer — commits nothing, leaves
+        the rows as they were and answers with the head (``noop`` for
+        the dict-returning mutators)."""
+        import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
+
+        path = str(tmp_path / "layer")
+        rows = lambda *ks: spark.createDataFrame(  # noqa: E731
+            [(k, "x") for k in ks], "k long, v string"
+        )
+        snap.commit_snapshot(spark, rows(1, 2, 3), path, stats_cols=["k"])
+        op = {
+            "commit": lambda k: snap.commit_snapshot(
+                spark, rows(k), path, mode="append", txn=("app", 1)
+            ),
+            "delete": lambda k: snap.delete_snapshot(
+                spark, path, f"k = {k}", txn=("app", 1)
+            ),
+            "delete_keys": lambda k: snap.delete_snapshot_keys(
+                spark, path, "k", [k], txn=("app", 1)
+            ),
+            "merge": lambda k: snap.merge_snapshot(
+                spark, rows(k).withColumn("v", F.lit("new")), path, "k",
+                txn=("app", 1),
+            ),
+        }[mutator]
+        first = op(1)
+        assert first == 2 or (first["version"] == 2 and "noop" not in first)
+        state = sorted(snap.read_snapshot(spark, path).collect())
+        replay = op(2)
+        if mutator == "commit":
+            assert replay == 2
+        else:
+            assert replay["version"] == 2 and replay["noop"] is True
+        assert snap.snapshot_versions(spark, path) == [1, 2]
+        assert sorted(snap.read_snapshot(spark, path).collect()) == state
+
 
 class TestSnapshotBloom:
     def test_bloom_point_prune_is_safe_and_sharp(self, spark, tmp_path):
@@ -2013,32 +2054,6 @@ class TestMergeResolveTxn:
             3: (10, "c"),      # untouched
             9: (1, "new"),     # insert
         }
-
-    def test_merge_txn_replay_is_noop(self, spark, tmp_path):
-        from aie321_bigdata_movie_kpi_1m_spark.sources.snapshots import (
-            commit_snapshot,
-            merge_snapshot,
-            read_snapshot,
-            snapshot_versions,
-        )
-
-        path = str(tmp_path / "layer")
-        commit_snapshot(
-            spark,
-            spark.createDataFrame([(1, "a")], "k long, v string"),
-            path,
-            stats_cols=["k"],
-            txn=("app", 0),
-        )
-        d = spark.createDataFrame([(1, "b")], "k long, v string")
-        r1 = merge_snapshot(spark, d, path, "k", txn=("app", 1))
-        assert "noop" not in r1
-        # replay of the same batch id: no new version, state unchanged
-        d2 = spark.createDataFrame([(1, "SHOULD_NOT_APPLY")], "k long, v string")
-        r2 = merge_snapshot(spark, d2, path, "k", txn=("app", 1))
-        assert r2["noop"] and r2["version"] == r1["version"]
-        assert snapshot_versions(spark, path) == [1, 2]
-        assert read_snapshot(spark, path).first()["v"] == "b"
 
     def test_streaming_upsert_writer_replay(self, spark, tmp_path):
         """The foreachBatch upsert writer: batch replayed with the same
@@ -7315,3 +7330,131 @@ class TestOneScanDelta:
             ("delete", 2, "b"),
             ("insert", 2, "B"),
         ]
+
+
+#: every table property a manifest records (the commit that owns one
+#: sets it; every other commit carries it) — spelled out here rather
+#: than imported, so a key dropped from the writer's list fails the test
+_TABLE_PROPERTIES = (
+    "bloom_col", "bloom_m", "bloom_k", "schema", "checks", "stat_doms",
+    "cdf", "partition_spec", "partition_specs_all", "txn",
+)
+
+
+class TestManifestWriter:
+    @pytest.fixture(scope="class")
+    def prop_layer(self, spark, tmp_path_factory):
+        """v1 sets every table property; v2 appends under a newer txn, so
+        the head's txn map differs from v1's."""
+        import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
+
+        path = str(tmp_path_factory.mktemp("props") / "layer")
+        rows = lambda lo, hi: spark.range(lo, hi).selectExpr(  # noqa: E731
+            "id AS k", "CAST(id AS STRING) AS v"
+        )
+        snap.commit_snapshot(
+            spark, rows(0, 20).repartition(2), path, stats_cols=["k"],
+            bloom_col="k", bloom_bits=16384, checks={"k_nonneg": "k >= 0"},
+            change_feed=True,
+            partition_spec=[{"transform": "bucket", "n": 2, "source": "k"}],
+            txn=("app", 1),
+        )
+        snap.commit_snapshot(
+            spark, rows(20, 25).coalesce(1), path, mode="append",
+            stats_cols=["k"], txn=("app", 2),
+        )
+        return path, rows
+
+    #: the properties each mutator sets itself; it carries the rest
+    OWNS = {
+        "commit": {"schema", "stat_doms"},
+        "delete": set(),
+        "delete_keys": set(),
+        "merge": {"schema", "stat_doms"},
+        "compact": {"stat_doms"},
+        "restore": set(),
+        "clone": set(),
+    }
+
+    @pytest.mark.parametrize("mutator", list(OWNS))
+    def test_mutators_carry_every_table_property(
+        self, spark, tmp_path, prop_layer, mutator
+    ):
+        """Each of the seven manifest writers keeps every head property
+        it does not own; restore takes the restored version's properties
+        but the current head's txn map, and a clone starts with none."""
+        import shutil
+
+        import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
+
+        src, rows = prop_layer
+        # a private copy per mutator: manifests name the source layer's
+        # files by absolute path, so the copy shares them read-only
+        path = str(tmp_path / "layer")
+        shutil.copytree(src, path)
+        head = snap._manifest_raw(spark, path, 2)
+        assert all(
+            head[k] not in (None, {}, []) for k in _TABLE_PROPERTIES
+        ), head
+        target = path
+        if mutator == "commit":
+            snap.commit_snapshot(
+                spark, rows(30, 32), path, mode="append", stats_cols=["k"]
+            )
+        elif mutator == "delete":
+            snap.delete_snapshot(spark, path, "k = 3")
+        elif mutator == "delete_keys":
+            snap.delete_snapshot_keys(spark, path, "k", [4])
+        elif mutator == "merge":
+            snap.merge_snapshot(
+                spark, rows(5, 7), path, "k", stats_cols=["k"]
+            )
+        elif mutator == "compact":
+            snap.compact_small_files(spark, path, stats_cols=["k"])
+        elif mutator == "restore":
+            snap.restore_snapshot(spark, path, 1)
+        else:
+            target = str(tmp_path / "clone")
+            snap.clone_snapshot(spark, path, target)
+        new = snap._manifest_raw(
+            spark, target, snap.snapshot_versions(spark, target)[-1]
+        )
+        assert new["version"] == (1 if mutator == "clone" else 3)
+        expect = (
+            snap._manifest_raw(spark, path, 1) if mutator == "restore" else head
+        )
+        for k in _TABLE_PROPERTIES:
+            if k in self.OWNS[mutator]:
+                assert new[k], (mutator, k)
+            elif k == "txn" and mutator == "clone":
+                assert new[k] == {}
+            elif k == "txn":
+                assert new[k] == head[k], (mutator, k)
+            else:
+                assert new[k] == expect[k], (mutator, k)
+        if mutator == "restore":
+            assert head["txn"] != expect["txn"]
+
+    @pytest.mark.parametrize(
+        "reader",
+        [
+            "snapshot_files",
+            "read_snapshot",
+            "snapshot_row_count",
+            "snapshot_table_bytes",
+            "snapshot_col_stats",
+            "snapshot_minmax",
+        ],
+    )
+    def test_readers_reject_an_uncommitted_version(
+        self, spark, prop_layer, reader
+    ):
+        """Every public reader taking ``version=`` resolves it the same
+        way: a version the layer never committed raises
+        ``FileNotFoundError`` naming the committed versions."""
+        import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
+
+        path, _ = prop_layer
+        extra = {"col": "k"} if reader == "snapshot_minmax" else {}
+        with pytest.raises(FileNotFoundError, match=r"version 9 not in \[1, 2\]"):
+            getattr(snap, reader)(spark, path, version=9, **extra)
