@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..operators.multimodal import decode_assets, extract_features, synthesize_assets
 from ..session import scratch_dir
-from ..sources.readers import load_star_table
+from ..sources.readers import load_star_table, read_parquet
 from .catalog import _tag, fixture_layer, register
 
 _SCRATCH = scratch_dir()
@@ -1566,7 +1566,7 @@ def _stream_wap_store(spark: SparkSession, sf_dir: str) -> str:
     shutil.rmtree(ckpt, ignore_errors=True)
     src = f"{sf_dir}/documents.parquet"
     seed = (
-        spark.read.parquet(src).select("doc_id", "source", "n_chars").limit(0)
+        read_parquet(spark, src).select("doc_id", "source", "n_chars").limit(0)
     )
     v = commit_snapshot(spark, seed, docs_layer, stats_cols=["doc_id"])
     commit_catalog(spark, cat, {"docs": {"path": docs_layer, "version": v}})

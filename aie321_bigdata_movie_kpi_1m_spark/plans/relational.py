@@ -19,7 +19,7 @@ from ..functions.money import cents as _cents
 from ..operators.asof import asof_join
 from ..session import scratch_dir
 from ..operators.sessions import session_summary
-from ..sources.readers import load_star_table
+from ..sources.readers import load_star_table, read_parquet
 from .catalog import _tag, register
 from ..operators.materialize import materialize
 
@@ -954,7 +954,7 @@ def q_partitioned_layer_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_star_table(spark, sf_dir, "orders")
     path = scratch_dir("partitioned_orders", _tag(sf_dir))
     write_parquet(orders, path, partition_by=["o_orderstatus"])
-    back = spark.read.parquet(path).filter(F.col("o_orderstatus") == "F")
+    back = read_parquet(spark, path).filter(F.col("o_orderstatus") == "F")
     return back.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.sum(_cents(F.col("o_totalprice"))).cast("long").alias("total_cents"),
@@ -1828,7 +1828,7 @@ def q_observed_write_qc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the observation must describe the layer that actually landed; an
     # explicit raise, not assert — the invariant must survive python -O
-    landed = spark.read.parquet(path).count()
+    landed = read_parquet(spark, path).count()
     if got["n_rows"] != landed:
         raise RuntimeError(
             f"observe metrics ({got['n_rows']} rows) disagree with the "

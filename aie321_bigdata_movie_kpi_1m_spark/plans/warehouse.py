@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from ..functions.money import cents as _cents
 from ..operators.ids import assign_contiguous_ids
 from ..session import scratch_dir
-from ..sources.readers import load_star_table
+from ..sources.readers import load_star_table, read_parquet
 from .catalog import _tag, fixture_layer, register
 
 _SCRATCH = scratch_dir()
@@ -252,7 +252,7 @@ def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(f"{small}/_SUCCESS"):
         _compact_input.__wrapped__(spark, sf_dir)
     compact_parquet_layer(spark, small, packed, target_file_bytes=64 << 20)
-    back = spark.read.parquet(packed)
+    back = read_parquet(spark, packed)
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.col("l_quantity").cast("long")).alias("qty_sum"),
@@ -607,7 +607,7 @@ def q_dpp_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     path = _orders_partitioned_layer(spark, sf_dir)
-    fact = spark.read.parquet(path)
+    fact = read_parquet(spark, path)
     # rank-and-FILTER, deliberately not orderBy+limit: Catalyst's
     # partition-pruning rule keys on a selective Filter on the dim side
     # (a LIMIT is not recognized — verified: the limit variant plans no
@@ -2783,8 +2783,8 @@ FROM ev GROUP BY lang
     "ADDITIVE SCHEMA EVOLUTION ON MERGE (VERDICT r6 #3): a CDC upsert "
     "whose delta carries a brand-new quality column merges without a "
     "manual migration — the rewritten region holds the column "
-    "physically, every carried file reads NULL for it under "
-    "merge_schema (same contract as evolving appends), the manifest "
+    "physically, every carried file reads NULL for it under the "
+    "recorded schema (same contract as evolving appends), the manifest "
     "records the widened schema, and re-typing is still rejected at "
     "the write; the oracle recomputes the post-merge state (scored "
     "updates + scored offset inserts + NULL-quality untouched rows) "
@@ -2795,7 +2795,7 @@ def q_snapshot_merge_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.snapshots import read_snapshot
 
     path = _docs_merge_evolve_layer(spark, sf_dir)
-    df = read_snapshot(spark, path, merge_schema=True)
+    df = read_snapshot(spark, path)
     return df.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.count("quality").alias("n_scored"),

@@ -32,6 +32,7 @@ import os
 from dataclasses import dataclass
 from typing import Callable, Iterable
 
+from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     EqualTo,
     Filter,
@@ -92,6 +93,21 @@ def manifest_raw(root: str, v: int) -> dict:
     loaded)."""
     p = os.path.join(local_path(root), MANIFEST_DIR, f"v{v}.json")
     return checked_manifest(read_json(p), p)
+
+
+def _record_schema(
+    rec: dict | None, cols: Iterable[str] | None = None
+) -> T.StructType:
+    """The StructType a manifest's ``schema`` record (column name ->
+    ``DataType.json()``) describes, in record order, or the ``cols``
+    projection of it in that order."""
+    rec = rec or {}
+    return T.StructType(
+        [
+            T.StructField(c, T._parse_datatype_json_string(rec[c]))
+            for c in (rec if cols is None else cols)
+        ]
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -58,6 +58,7 @@ from pyspark.sql.types import StructType
 from .pruning import (
     _normalize_filters,
     _Pred,
+    _record_schema,
     manifest_raw,
     range_keeps,
     read_json,
@@ -930,18 +931,10 @@ def snapshot_stream_schema(path: str, cols: str):
     """Driver-side schema for a snapshot_stream (manifest-only; pass to
     ``readStream.schema(...)`` to skip the engine's DataSource.schema
     Python-worker round-trip, same latency story as replay_schema_ddl)."""
-    from pyspark.sql import types as T
-
     vs = versions(path)
     if not vs:
         raise FileNotFoundError(f"no committed snapshot under {path}")
-    rec = manifest_raw(path, vs[-1])["schema"]
-    return T.StructType(
-        [
-            T.StructField(c, T._parse_datatype_json_string(rec[c]))
-            for c in cols.split(",")
-        ]
-    )
+    return _record_schema(manifest_raw(path, vs[-1])["schema"], cols.split(","))
 
 
 def snapshot_cdf_stream_schema(path: str, cols: str):

@@ -86,6 +86,7 @@ from pyspark.sql import types as T
 from .pruning import (
     _normalize_filters,
     _Pred,
+    _record_schema,
     local_path,
     manifest_raw,
     plan_files,
@@ -410,9 +411,8 @@ def _arrow_schema(schema_rec: dict, cols: list[str]):
     import pyarrow as pa
 
     fields = []
-    for c in cols:
-        t = T._parse_datatype_json_string(schema_rec[c])
-        s = t.simpleString()
+    for f in _record_schema(schema_rec, cols):
+        c, s = f.name, f.dataType.simpleString()
         if s in _SPARK_TO_ARROW_DDL:
             fields.append(pa.field(c, getattr(pa, _SPARK_TO_ARROW_DDL[s])()))
         elif s.startswith("timestamp"):
@@ -548,7 +548,8 @@ class _SnapshotBatchReader(DataSourceReader):
             json.loads(partition.schema_rec_json), list(partition.cols)
         )
         # evolved layers: a carried file may lack newer columns — read
-        # NULL for them, same contract as read_snapshot(merge_schema)
+        # NULL for them, as read_snapshot's projection onto the recorded
+        # schema does
         arrays = []
         for i, c in enumerate(partition.cols):
             if c in table.column_names:
@@ -607,13 +608,8 @@ class SnapshotBatchDataSource(DataSource):
                     f"snapshot_batch cols {missing} not in layer schema "
                     f"{sorted(rec)}"
                 )
-            rec = {c: rec[c] for c in want}
-        return T.StructType(
-            [
-                T.StructField(c, T._parse_datatype_json_string(j))
-                for c, j in rec.items()
-            ]
-        )
+            return _record_schema(rec, want)
+        return _record_schema(rec)
 
     def reader(self, schema: T.StructType) -> DataSourceReader:
         return _SnapshotBatchReader(dict(self.options), schema)

@@ -56,6 +56,7 @@ from ..operators.materialize import materialize
 from .pruning import (
     MANIFEST_DIR as _MANIFEST_DIR,
     MANIFEST_FORMAT,
+    _record_schema,
     bits_to_hex,
     checked_manifest,
     fold_minmax,
@@ -763,15 +764,36 @@ def _write_manifest(
     )
 
 
-def _type_from_json(dtype_json: str):
-    """Inverse of ``DataType.json()`` for the manifest's schema record."""
-    return T._parse_datatype_json_string(dtype_json)
+#: schema record of a position-delete file: (data file base name, row
+#: index in that file)
+_POS_DELETE_REC = {"file": T.StringType().json(), "pos": T.LongType().json()}
 
 
-def _record_schema(rec: dict | None) -> T.StructType:
-    """The StructType a manifest's ``schema`` record describes."""
-    return T.StructType(
-        [T.StructField(n, _type_from_json(t)) for n, t in (rec or {}).items()]
+def _read_files(
+    spark: SparkSession, rec: dict | None, files: list[str]
+) -> DataFrame:
+    """The one parquet read of a snapshot layer: ``files`` under the
+    declared schema record ``rec`` (the manifest's ``schema``).  Spark
+    runs no schema-inference job, and every file projects onto the
+    recorded columns in record order — a column a file lacks (an older
+    file after additive evolution) reads NULL.  No files: an empty frame
+    of that schema."""
+    schema = _record_schema(rec)
+    if not files:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*files)
+
+
+def _with_row_ids(df: DataFrame) -> DataFrame:
+    """``df`` (a file scan) plus each row's identity: its data file's
+    base name (``__dv_file``) and ``_metadata.row_index`` (``__dv_pos``),
+    the physical position in an immutable file."""
+    return df.select(
+        "*",
+        F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
+            "__dv_file"
+        ),
+        F.col("_metadata.row_index").alias("__dv_pos"),
     )
 
 
@@ -1277,10 +1299,11 @@ def commit_snapshot(
     (optimistic concurrency — the loser retries against the new head).
 
     Appends are schema-checked against the previous manifest's recorded
-    schema: NEW columns are allowed (additive evolution — read them with
-    ``merge_schema=True``), but a column re-typed between commits raises
-    ``ValueError`` at the WRITE, instead of leaving a layer whose
-    merge-schema reads explode in Spark's footer merge.
+    schema: NEW columns are allowed (additive evolution — the recorded
+    schema gains them, and every later read returns them, NULL for older
+    files' rows), but a column re-typed between commits raises
+    ``ValueError`` at the WRITE, instead of leaving a layer whose files
+    disagree with the type every read declares.
 
     ``change_feed=True`` enables the layer's CHANGE DATA FEED table
     property (Delta's ``enableChangeDataFeed``): subsequent MERGE and
@@ -1762,7 +1785,7 @@ def _apply_deletes_meta(
     (no-resurrect, the Iceberg sequence-number semantics).  A NULL key
     never matches (SQL equality).  No step is ever O(data x keys)."""
     if pos_dirs:
-        dv = spark.read.parquet(*pos_dirs).select(
+        dv = _read_files(spark, _POS_DELETE_REC, pos_dirs).select(
             F.col("file").alias("__dv_file"), F.col("pos").alias("__dv_pos")
         )
         df = df.join(dv, ["__dv_file", "__dv_pos"], "left_anti")
@@ -1818,9 +1841,10 @@ def _trim_delete_entries(entries: list, rewritten_bases: set[str]) -> list:
 
 
 def _apply_delete_entries(
-    spark: SparkSession, manifest: dict, files: list[str], reader
-) -> DataFrame | None:
-    """Merge-on-read application of the manifest's delete files —
+    spark: SparkSession, manifest: dict, files: list[str], rec: dict | None
+) -> DataFrame:
+    """The live rows of ``files`` read under schema record ``rec``:
+    merge-on-read application of the manifest's delete files —
     POSITION deletes (``(file, pos)`` pairs, the Iceberg v2 / Delta
     deletion-vector shape) and EQUALITY deletes (a key set scoped to the
     files live at delete time, Iceberg's second v2 flavor): matching
@@ -1832,34 +1856,20 @@ def _apply_delete_entries(
     reads at full scan speed everywhere else.  Row identity is
     ``_metadata.row_index`` — the physical position in an immutable
     data file, stable because every other mutation path here is
-    copy-on-write.  Returns None when no kept file is dirty (caller does
-    the plain read)."""
-    entries = manifest.get("delete_files") or []
-    if not entries or not files:
-        return None
+    copy-on-write."""
     bases = {f.rsplit("/", 1)[-1]: f for f in files}
-    pos_dirs, eq, dirty_bases = _split_delete_entries(entries, set(bases))
+    pos_dirs, eq, dirty_bases = _split_delete_entries(
+        manifest.get("delete_files") or [], set(bases)
+    )
     if not dirty_bases:
-        return None
+        return _read_files(spark, rec, files)
     dirty = [bases[b] for b in sorted(dirty_bases)]
     clean = [f for f in files if f.rsplit("/", 1)[-1] not in dirty_bases]
-    base_expr = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
     dirty_df = _apply_deletes_meta(
-        spark,
-        reader.parquet(*dirty).select(
-            "*",
-            base_expr.alias("__dv_file"),
-            F.col("_metadata.row_index").alias("__dv_pos"),
-        ),
-        pos_dirs,
-        eq,
+        spark, _with_row_ids(_read_files(spark, rec, dirty)), pos_dirs, eq
     ).drop("__dv_file", "__dv_pos")
     if clean:
-        # allowMissingColumns: under merge_schema the clean and dirty
-        # subsets may see different column sets; missing ones read NULL
-        return reader.parquet(*clean).unionByName(
-            dirty_df, allowMissingColumns=True
-        )
+        return _read_files(spark, rec, clean).unionByName(dirty_df)
     return dirty_df
 
 
@@ -1870,7 +1880,6 @@ def read_snapshot(
     *,
     prune_range: tuple[str, object, object] | list[tuple] | None = None,
     prune_point: tuple[str, object] | None = None,
-    merge_schema: bool = False,
     as_of: float | None = None,
 ) -> DataFrame:
     """Read one version of the layer (default: the head).  The scan plans
@@ -1887,15 +1896,12 @@ def read_snapshot(
     out-of-range rows, so apply the actual predicate on the result (it
     also pushes down to the parquet footers as usual).
 
-    ``merge_schema=True`` unifies schemas across commits (an append may
-    add columns; old files read NULL for them) at the cost of a footer
-    pass per distinct file schema — additive evolution, same contract as
-    parquet ``mergeSchema``.  The default reads with the schema of the
-    FIRST file in the planned list (path order, after pruning) — the
-    cheap path when the layer's schema is stable.  After an additive
-    append the result's columns therefore depend on which files pruning
-    kept: a full read can return the old columns while a pruned read
-    that keeps only the new files returns the evolved ones."""
+    Every read projects onto the version's recorded ``schema`` (the
+    manifest's union of every column the layer has committed, first
+    commit's order with evolved columns appended), declared to Spark, so
+    resolving it runs no inference job.  After an additive append a full
+    read and a pruned read return the same columns, the new ones
+    included; rows of older files read NULL for them."""
     if as_of is not None:
         if version is not None:
             raise ValueError("version and as_of are mutually exclusive")
@@ -1907,23 +1913,8 @@ def read_snapshot(
     files = snapshot_files(
         spark, path, v, prune_range=prune_range, prune_point=prune_point
     )
-    reader = spark.read.option("mergeSchema", str(merge_schema).lower())
-    if files:
-        dv_read = _apply_delete_entries(
-            spark, _manifest_raw(spark, path, v), files, reader
-        )
-        if dv_read is not None:
-            return dv_read
-    if not files:
-        # every file skipped: an empty typed frame needs the schema.
-        # Newer manifests record it (no footer read at all); older layers
-        # fall back to the (unpruned) manifest's files
-        rec = _manifest_raw(spark, path, v).get("schema")
-        if rec:
-            return spark.createDataFrame([], _record_schema(rec))
-        all_files = snapshot_files(spark, path, v)
-        return reader.parquet(*all_files).limit(0)
-    return reader.parquet(*files)
+    m = _manifest_raw(spark, path, v)
+    return _apply_delete_entries(spark, m, files, m.get("schema"))
 
 
 #: driver-side key volume moved by POSITION deletes (the list-probe
@@ -2028,15 +2019,9 @@ def delete_snapshot(
     candidates = snapshot_files(spark, path, head, prune_range=prune_range)
     if not candidates:
         return nothing
-    base_expr = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-    # mergeSchema: candidates may span schema evolutions — the predicate
-    # can name an evolved column, and the CDF change file must carry the
-    # full evolved row, not the oldest footer's subset
-    df = spark.read.option("mergeSchema", "true").parquet(*candidates).select(
-        "*",
-        base_expr.alias("__dv_file"),
-        F.col("_metadata.row_index").alias("__dv_pos"),
-    )
+    # the recorded schema: the predicate can name an evolved column, and
+    # the CDF change file carries the full evolved row
+    df = _with_row_ids(_read_files(spark, m.get("schema"), candidates))
     entries = m.get("delete_files") or []
     if entries:
         # apply existing deletes (both kinds) first: re-deleting an
@@ -2062,7 +2047,10 @@ def delete_snapshot(
     dv_dir = f"{path}/deletes/v{version}-{uuid.uuid4().hex[:8]}"
     matches.write.mode("error").parquet(dv_dir)
     per_file = (
-        read_parquet(spark, dv_dir).groupBy("file").count().collect()
+        _read_files(spark, _POS_DELETE_REC, [dv_dir])
+        .groupBy("file")
+        .count()
+        .collect()
     )  # bounded by the candidate file count, never the data
     touches = {r["file"]: int(r["count"]) for r in per_file}
     n_deleted = sum(touches.values())
@@ -2172,7 +2160,7 @@ def delete_snapshot_keys(
             f"key column {key_col!r} not in layer schema "
             f"{sorted(schema_rec)}"
         )
-    ktype = _type_from_json(schema_rec[key_col])
+    ktype = _record_schema(schema_rec)[key_col].dataType
     if isinstance(keys, DataFrame):
         if key_col not in keys.columns:
             raise ValueError(
@@ -2496,7 +2484,7 @@ def snapshot_version_as_of(
     eligible = [
         v
         for v in snapshot_versions(spark, path)
-        if float(_manifest(spark, path, v).get("committed_at") or 0)
+        if float(_manifest_raw(spark, path, v).get("committed_at") or 0)
         <= ts_epoch
     ]
     if not eligible:
@@ -2589,9 +2577,7 @@ def snapshot_append_delta(
         if e["path"] not in from_paths
         for f in _read_segment(spark, e["path"])["files"]
     )
-    if not new_files:
-        return spark.createDataFrame([], _record_schema(m_to.get("schema")))
-    return spark.read.parquet(*new_files)
+    return _read_files(spark, m_to.get("schema"), new_files)
 
 
 def restore_snapshot(spark: SparkSession, path: str, version: int) -> int:
@@ -2823,14 +2809,9 @@ def _materialize_eq_preimage(
         for f in snapshot_files(spark, path, v)
         if f.rsplit("/", 1)[-1] in touched
     ]
-    base_expr = F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1)
-    # mergeSchema: touched files may span schema evolutions, and the
-    # change feed must carry the full evolved pre-image rows
-    df = spark.read.option("mergeSchema", "true").parquet(*files).select(
-        "*",
-        base_expr.alias("__dv_file"),
-        F.col("_metadata.row_index").alias("__dv_pos"),
-    )
+    # the recorded schema: the change feed carries the full evolved
+    # pre-image rows
+    df = _with_row_ids(_read_files(spark, prev_m.get("schema"), files))
     prev_entries = prev_m.get("delete_files") or []
     if prev_entries:
         # v-1 state of the touched files: rows already deleted before
@@ -2894,9 +2875,9 @@ def _changes_from_commits(
                 for f in _read_segment(spark, e["path"])["files"]
             )
             step = (
-                spark.read.option("mergeSchema", "true")
-                .parquet(*new_files)
-                .withColumn("change_type", F.lit("insert"))
+                _read_files(spark, m.get("schema"), new_files).withColumn(
+                    "change_type", F.lit("insert")
+                )
                 if new_files
                 else None
             )
@@ -3050,14 +3031,14 @@ def snapshot_changes_keyed(
     non-key columns (NULL on the missing side) — the payload a keyed
     incremental view maintenance fold consumes.
 
-    Versions with EVOLVED schemas diff correctly: both sides read with
-    ``merge_schema=True`` and align to the union of their columns (a
-    column one version lacks reads NULL there), so a column added by an
-    append surfaces as an 'update' on rows whose new column is non-NULL
-    instead of raising an AnalysisException.
+    Versions with EVOLVED schemas diff correctly: each side reads its
+    version's recorded schema and the two align to the union of their
+    columns (a column one version lacks reads NULL there), so a column
+    added by an append surfaces as an 'update' on rows whose new column
+    is non-NULL instead of raising an AnalysisException.
     """
-    before = read_snapshot(spark, path, v_from, merge_schema=True)
-    after = read_snapshot(spark, path, v_to, merge_schema=True)
+    before = read_snapshot(spark, path, v_from)
+    after = read_snapshot(spark, path, v_to)
     non_key = [c for c in after.columns if c not in key_cols]
     non_key += [
         c for c in before.columns if c not in key_cols and c not in non_key
@@ -3132,8 +3113,8 @@ def merge_snapshot(
     row per key (the MERGE contract).  EXTRA delta columns are ADDITIVE
     SCHEMA EVOLUTION (the CDC-feed reality: an upsert stream gains a
     column): they join the layer schema, the rewritten region carries
-    them physically, carried files read NULL for them under
-    ``read_snapshot(merge_schema=True)`` — same contract as evolving
+    them physically, carried files read NULL for them (every read
+    projects onto the recorded schema) — same contract as evolving
     appends, re-type still rejected.  Returns {"version",
     "files_rewritten", "files_carried"}.
 
@@ -3170,7 +3151,7 @@ def merge_snapshot(
         # column must not need a manual migration): the delta may be a
         # SUPERSET of the head schema; new columns join the layer
         # schema, carried/repacked files simply lack them on disk and
-        # read NULL under merge_schema=True (exactly like an evolving
+        # read NULL under the recorded schema (exactly like an evolving
         # append).  DROPPING a layer column is still an error — a merge
         # that silently narrowed rewritten files would corrupt carried
         # rows' reads.
@@ -3184,8 +3165,8 @@ def merge_snapshot(
         new_cols = [c for c in delta.columns if c not in head_schema]
         # re-type check: a delta that re-types a column would widen the
         # rewritten files while carried files keep the old type —
-        # exactly the mixed-footer layer merge-schema reads explode on,
-        # with a manifest still recording the head type
+        # a layer whose files disagree with the type its manifest
+        # records
         for name, dtype in head_schema.items():
             if name in delta_types and delta_types[name] != dtype:
                 raise ValueError(
@@ -3265,21 +3246,13 @@ def merge_snapshot(
     col_types = {**(head_schema or {}), **delta_types}
     if touched:
         # DV-aware: rows of a touched file already position-deleted must
-        # not resurrect through the rewrite.  mergeSchema: touched files
-        # may themselves span prior additive evolutions
-        touched_sorted = sorted(touched)
-        reader = spark.read.option("mergeSchema", "true")
+        # not resurrect through the rewrite.  The touched files read
+        # under the union schema of head and delta: a column a file
+        # never had on disk (the delta's new columns, or a prior
+        # append-evolution column) reads NULL
         raw = _apply_delete_entries(
-            spark, m, touched_sorted, reader
-        ) or reader.parquet(*touched_sorted)
-        # NULL-backfill columns the touched files never had on disk
-        # (the delta's new columns, or a prior append-evolution column
-        # no touched file carries)
-        for c in cols:
-            if c not in raw.columns:
-                raw = raw.withColumn(
-                    c, F.lit(None).cast(_type_from_json(col_types[c]))
-                )
+            spark, m, sorted(touched), {c: col_types[c] for c in cols}
+        )
         if resolve:
             from pyspark.sql import Window
 
@@ -3474,10 +3447,7 @@ def compact_small_files(
     import math
 
     n_out = max(1, math.ceil(small_bytes / target_file_bytes))
-    reader = spark.read.option("mergeSchema", "true")
-    raw = _apply_delete_entries(spark, m, small, reader) or reader.parquet(
-        *small
-    )
+    raw = _apply_delete_entries(spark, m, small, m.get("schema"))
     version = head + 1
     data_dir = f"{path}/data/v{version}-{uuid.uuid4().hex[:8]}"
     raw.coalesce(n_out).write.mode("error").parquet(data_dir)
@@ -3578,10 +3548,9 @@ def rewrite_snapshot(
         n_files = max(1, math.ceil(total / target_file_bytes))
     if cluster_by is not None and zorder_by is not None:
         raise ValueError("cluster_by and zorder_by are mutually exclusive")
-    # merge_schema: a layer evolved by appends or MERGE has files with
-    # differing physical schemas — an overwrite rewritten from the
-    # newest-footer schema would silently DROP the evolved columns
-    df = read_snapshot(spark, path, head, merge_schema=True)
+    # the read projects onto the recorded schema, so the rewrite keeps
+    # every evolved column even where the files' physical schemas differ
+    df = read_snapshot(spark, path, head)
     if cluster_by is not None:
         df = df.repartitionByRange(n_files, cluster_by)
         stats_cols = sorted(set(stats_cols or []) | {cluster_by})

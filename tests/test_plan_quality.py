@@ -950,6 +950,37 @@ def test_one_snapshot_manifest_writer():
     assert len(sites) == 1, f"manifest _write_text calls at lines {sites}"
 
 
+def test_snapshot_reads_declare_the_recorded_schema():
+    """Snapshot reads declare the manifest's schema record: no
+    ``mergeSchema`` read or ``merge_schema`` knob is left in the snapshot
+    layer or the plans, no parquet read bypasses ``sources/readers.py``,
+    and ``sources/snapshots.py`` has exactly one declared-schema read
+    (``_read_files``)."""
+    import pathlib
+    import re
+
+    import aie321_bigdata_movie_kpi_1m_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    files = {p.relative_to(root).as_posix(): p.read_text()
+             for p in sorted(root.rglob("*.py"))}
+    merge_scoped = [
+        f for f in files
+        if f in ("sources/snapshots.py", "sources/snapshot_batch.py")
+        or f.startswith("plans/")
+    ]
+    bare_read = re.compile(r"\.read\s*\.\s*(parquet|option)\(")
+    hits = [
+        f"{f}:{n}: {line.strip()}"
+        for f in files
+        for n, line in enumerate(files[f].splitlines(), 1)
+        if (f in merge_scoped and re.search(r"mergeSchema|merge_schema", line))
+        or (f != "sources/readers.py" and bare_read.search(line))
+    ]
+    assert not hits, "\n".join(hits)
+    assert files["sources/snapshots.py"].count("spark.read.schema(") == 1
+
+
 def test_scale_tags_come_from_catalog_tag():
     """Plans name a scale's scratch directory with catalog._tag, the key
     fixture_layer caches under, never with a raw basename of sf_dir

@@ -1317,7 +1317,7 @@ class TestSnapshotLayer:
     def test_append_retype_rejected_at_write(self, spark, tmp_path):
         """Additive evolution only: an appended column may be NEW, but a
         re-typed existing column must fail at the write with a clear
-        error, not at some later merge-schema read."""
+        error, not at some later read that declares the recorded type."""
         import pytest
 
         from aie321_bigdata_movie_kpi_1m_spark.sources.snapshots import (
@@ -1334,14 +1334,14 @@ class TestSnapshotLayer:
                 path,
                 mode="append",
             )
-        # additive append is fine and merge-schema readable
+        # additive append is fine, and every read returns the new column
         commit_snapshot(
             spark,
             spark.createDataFrame([(5, "e", 9)], "k long, seg string, extra long"),
             path,
             mode="append",
         )
-        merged = read_snapshot(spark, path, merge_schema=True)
+        merged = read_snapshot(spark, path)
         assert set(merged.columns) == {"k", "seg", "extra"}
         assert merged.filter("extra IS NOT NULL").count() == 1
 
@@ -1562,9 +1562,10 @@ class TestSnapshotLayer:
         ]
 
     def test_schema_evolution_across_commits(self, spark, tmp_path):
-        """An append commit may add columns (additive evolution):
-        merge_schema=True unifies — old files read NULL for the new
-        column; the default read keeps the cheap stable-schema path."""
+        """An append commit may add columns (additive evolution): the
+        head read projects onto the recorded union schema — old files
+        read NULL for the new column; an older version keeps its own
+        recorded schema."""
         from aie321_bigdata_movie_kpi_1m_spark.sources.snapshots import (
             commit_snapshot,
             read_snapshot,
@@ -1580,12 +1581,82 @@ class TestSnapshotLayer:
             path,
             mode="append",
         )
-        merged = read_snapshot(spark, path, merge_schema=True)
+        merged = read_snapshot(spark, path)
         assert set(merged.columns) == {"k", "seg", "score"}
         rows = {r["k"]: r["score"] for r in merged.collect()}
         assert rows == {1: None, 2: None, 3: None, 4: 9.5}
         # v1 pinned read is untouched by the later wider commit
         assert set(read_snapshot(spark, path, 1).columns) == {"k", "seg"}
+
+    def test_full_and_pruned_reads_agree_after_additive_append(
+        self, spark, tmp_path
+    ):
+        """After an additive append, a full read and a pruned read return
+        the same columns in record order, older rows read NULL for the
+        new column, and a delete naming it still resolves each row's
+        ``_metadata`` identity under the declared schema."""
+        from aie321_bigdata_movie_kpi_1m_spark.sources.snapshots import (
+            commit_snapshot,
+            delete_snapshot,
+            read_snapshot,
+        )
+
+        path = str(tmp_path / "layer")
+        kw = dict(stats_cols=["a"], bloom_col="a")
+        commit_snapshot(
+            spark, spark.createDataFrame([(1, "x")], "a long, b string"), path,
+            **kw,
+        )
+        commit_snapshot(
+            spark,
+            spark.createDataFrame([(11, "y", 2.5)], "a long, b string, c double"),
+            path, mode="append", **kw,
+        )
+        full = read_snapshot(spark, path)
+        pruned = read_snapshot(spark, path, prune_range=("a", 11, 11))
+        point = read_snapshot(spark, path, prune_point=("a", 1))
+        assert full.columns == pruned.columns == point.columns == ["a", "b", "c"]
+        assert sorted(tuple(r) for r in full.collect()) == [
+            (1, "x", None), (11, "y", 2.5),
+        ]
+        assert [tuple(r) for r in pruned.collect()] == [(11, "y", 2.5)]
+        assert [tuple(r) for r in point.collect()] == [(1, "x", None)]
+        assert delete_snapshot(spark, path, "c > 2")["rows_deleted"] == 1
+        assert [tuple(r) for r in read_snapshot(spark, path).collect()] == [
+            (1, "x", None)
+        ]
+
+    def test_point_lookup_runs_one_job(self, spark, tmp_path):
+        """A pruned point lookup + collect runs exactly one Spark job: the
+        read declares the manifest's schema, so no schema-inference job
+        runs in front of the scan."""
+        import uuid
+
+        from aie321_bigdata_movie_kpi_1m_spark.sources.snapshots import (
+            commit_snapshot,
+            read_snapshot,
+        )
+
+        path = str(tmp_path / "layer")
+        kw = dict(stats_cols=["k"], bloom_col="k")
+        commit_snapshot(
+            spark,
+            spark.range(0, 40, 1, 4).selectExpr("id AS k", "id % 5 AS v")
+            .repartitionByRange(4, "k"),
+            path, **kw,
+        )
+        commit_snapshot(
+            spark, spark.range(40, 60, 1, 1).selectExpr("id AS k", "id % 5 AS v"),
+            path, mode="append", **kw,
+        )
+        rows, sites = _group_jobs(
+            spark, f"point-lookup-{uuid.uuid4().hex[:8]}",
+            lambda: read_snapshot(spark, path, prune_point=("k", 47))
+            .filter("k = 47")
+            .collect(),
+        )
+        assert [tuple(r) for r in rows] == [(47, 2)]
+        assert len(sites) == 1, sites
 
 
 class TestSnapshotTxn:
@@ -2902,6 +2973,23 @@ class TestManifestSegmentation:
             path,
             stats_cols=["k"],
         )
+
+    def test_as_of_resolution_reads_no_segment(self, spark, tmp_path):
+        """TIMESTAMP AS OF resolves from each manifest's ``committed_at``
+        alone: no segment file is consulted, however many versions."""
+        import time as _time
+
+        import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
+
+        path = str(tmp_path / "layer")
+        for i in range(6):
+            snap.commit_snapshot(
+                spark, spark.createDataFrame([(i,)], "k long"), path,
+                mode="append" if i else "overwrite",
+            )
+        snap._SEGMENT_READS["n"] = 0
+        assert snap.snapshot_version_as_of(spark, path, _time.time()) == 6
+        assert snap._SEGMENT_READS["n"] == 0
 
     def test_pruned_planning_reads_one_segment(
         self, spark, tmp_path, monkeypatch
@@ -4653,7 +4741,7 @@ class TestChangeDataFeed:
 class TestMergeSchemaEvolution:
     """Additive schema evolution on MERGE (VERDICT r6 #3): a delta that
     is a SUPERSET of the head schema upserts AND adds the new columns —
-    carried files read NULL for them under merge_schema, re-typing is
+    carried files read NULL for them under the recorded schema, re-typing is
     still rejected, and the evolution composes with a prior
     append-evolution."""
 
@@ -4680,14 +4768,14 @@ class TestMergeSchemaEvolution:
         assert "score" in rec
         got = {
             r["k"]: (r["seg"], r["score"])
-            for r in snap.read_snapshot(spark, path, merge_schema=True)
+            for r in snap.read_snapshot(spark, path)
             .where("k IN (10, 11, 500)")
             .collect()
         }
         assert got[10] == ("X", 1.5)
         assert got[500] == ("NEW", 2.5)
         assert got[11] == (str(11 % 3), None)  # carried file: NULL fill
-        assert snap.read_snapshot(spark, path, merge_schema=True).count() == 101
+        assert snap.read_snapshot(spark, path).count() == 101
 
     def test_retype_and_drop_still_rejected(self, spark, tmp_path):
         import pytest
@@ -4715,7 +4803,7 @@ class TestMergeSchemaEvolution:
 
     def test_composes_with_append_evolution(self, spark, tmp_path):
         """A merge touching files from BEFORE an append-evolution
-        reads them merge-schema'd, backfills the appended column, and
+        reads them under the union schema, backfills the appended column, and
         the final layer holds all three schema generations."""
         import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
 
@@ -4737,7 +4825,7 @@ class TestMergeSchemaEvolution:
         snap.merge_snapshot(spark, delta, path, "k", stats_cols=["k"])
         got = {
             r["k"]: (r["seg"], r["rank"], r["score"])
-            for r in snap.read_snapshot(spark, path, merge_schema=True)
+            for r in snap.read_snapshot(spark, path)
             .where("k IN (10, 11, 200)")
             .collect()
         }
@@ -4767,7 +4855,7 @@ class TestMergeSchemaEvolution:
         )
         got = {
             r["k"]: (r["v"], r["n"])
-            for r in snap.read_snapshot(spark, path, merge_schema=True)
+            for r in snap.read_snapshot(spark, path)
             .collect()
         }
         assert got == {1: ("a", None), 2: ("b2", 99), 3: ("c", 42)}
@@ -5169,8 +5257,8 @@ class TestReviewRound7Fixes:
 
     def test_rewrite_preserves_merge_evolved_column(self, spark, tmp_path):
         """rewrite_snapshot (compaction/recluster) must not DROP a
-        column added by merge evolution — the overwrite reads
-        merge-schema'd (review finding #1: data loss)."""
+        column added by merge evolution — the overwrite reads the
+        recorded union schema (review finding #1: data loss)."""
         import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
 
         path = self._evolved(spark, str(tmp_path / "layer"))
@@ -5181,7 +5269,7 @@ class TestReviewRound7Fixes:
         assert got == {5: 9.5, 6: None}
 
     def test_delete_scan_and_cdf_see_evolved_column(self, spark, tmp_path):
-        """delete_snapshot's candidate scan reads merge-schema'd: a
+        """delete_snapshot's candidate scan reads the recorded schema: a
         predicate naming the evolved column works, and the recorded
         change file carries its values (review finding #2)."""
         import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
@@ -7281,12 +7369,30 @@ class TestOneScanDelta:
             lambda: snap.compact_small_files(spark, path, stats_cols=["k"]),
         )
         assert res["files_rewritten"] == n_files
-        # the write and the mergeSchema read of the small files; the
-        # packed output is described from its footer
-        assert _py4j_parquet_jobs(sites) == 2, sites
+        # the write only: the small files read under the recorded schema
+        # and the packed output is described from its footer
+        assert _py4j_parquet_jobs(sites) == 1, sites
         m = snap._manifest(spark, path, res["version"])
         assert all(m["blooms"][b] for b in m["blooms"])
         assert all("_pt_bucket_4_k" in s for s in m["stats"].values())
+        # a merge that rewrites a file and a predicate delete read their
+        # files under the recorded schema: no inference job.  The merge's
+        # write runs as adaptive query stages (the anti-join), so none of
+        # its jobs starts from the py4j entry; the delete's write does
+        delta = spark.createDataFrame([(3, "upd")], schema)
+        res, sites = _group_jobs(
+            spark, f"merge-touch-{uuid.uuid4().hex[:8]}",
+            lambda: snap.merge_snapshot(spark, delta, path, "k",
+                                        stats_cols=["k"]),
+        )
+        assert res["files_rewritten"] == 1
+        assert _py4j_parquet_jobs(sites) == 0, sites
+        res, sites = _group_jobs(
+            spark, f"delete-{uuid.uuid4().hex[:8]}",
+            lambda: snap.delete_snapshot(spark, path, "k = 5"),
+        )
+        assert res["rows_deleted"] == 1
+        assert _py4j_parquet_jobs(sites) == 1, sites  # the write
 
     def test_rejected_merge_leaves_no_change_files(self, spark, tmp_path):
         import aie321_bigdata_movie_kpi_1m_spark.sources.snapshots as snap
